@@ -67,10 +67,6 @@ object TextOps {
     * keys of copy_into_*.sql, generalized to document identity). */
   def fingerprint(text: Column): Column = md5(normalized(text))
 
-  /** 64-bit rolling-hash-style fingerprint (xxhash64 over the
-    * normalized text) for cheap joins; not oracle-expressible. */
-  def fingerprint64(text: Column): Column = xxhash64(normalized(text))
-
   /** Word n-gram shingles as a DISTINCT set (for Jaccard / MinHash),
     * first-occurrence order. Native one-pass expression
     * (graft.functions.ShingleSet); `shinglesHof` is the built-in

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,17 +37,26 @@ import org.apache.spark.sql.functions._
   *    `checkpointInterval` commits the winner writes a consolidated
   *    live-set checkpoint (stats included), so a read opens
   *    O(commits since checkpoint) log entries, not O(commits).
-  *  - MERGE (upsert) comes in two forms. [[merge]] rewrites the full
+  *  - every verb loads the table state ONCE: one `_log/` listing,
+  *    folded into an immutable snapshot (version, live groups with
+  *    their stats, column mapping and checks). The verb gates, plans
+  *    and commits against that one version, so a commit landing in
+  *    between makes its publish conflict instead of mixing states.
+  *  - MERGE (upsert) comes in three arms. [[merge]] rewrites the full
   *    snapshot (anti-join + replace) — always correct, cost grows
-  *    with the TABLE (the measured vtable_merge slope in SCALE.md).
-  *    [[mergePruned]] is the production form: only groups whose key
-  *    stats OVERLAP the update batch's key range are rewritten; the
-  *    rest are carried BY REFERENCE into the new version. On a
-  *    key-clustered table (each ingest commit covering a key range —
-  *    the layout `writeZOrdered`/partitioned ingest produces) the
-  *    rewrite touches O(batch-affected) groups, not O(table). Groups
-  *    without stats are conservatively rewritten; results are
-  *    spec-pinned equal to [[merge]].
+  *    with the TABLE (the measured vtable_merge slope in SCALE.md);
+  *    it is the reference the other two are spec-pinned equal to.
+  *    The copy-on-write arm rewrites only groups whose key stats
+  *    OVERLAP the batch's key range and carries the rest BY
+  *    REFERENCE: [[mergePrunedRebase]] folds stats-disjoint appends
+  *    that won the race into its own entry, and [[mergePruned]] is
+  *    the same body with no rebases. On a key-clustered table (each
+  *    ingest commit covering a key range — the layout
+  *    `writeZOrdered`/partitioned ingest produces) the rewrite
+  *    touches O(batch-affected) groups, not O(table); groups without
+  *    stats are conservatively rewritten. [[mergeDv]] is the
+  *    merge-on-read arm: touched groups gain a deletion vector and
+  *    the batch lands as one new group.
   *  - [[vacuum]] deletes data groups referenced by NO log entry (the
   *    orphans left by writers that crashed between staging and
   *    publish). Groups referenced by ANY version — including replaced
@@ -111,9 +120,6 @@ object VersionedTable {
     * columns (Delta defaults to 32; the tiny-JSON log keeps this
     * smaller). */
   val MaxStatsColumns = 8
-
-  private case class Entry(version: Long, groups: Seq[Group],
-      replace: Boolean)
 
   /** Column-mapping state — the metadata that makes RENAME/DROP
     * COLUMN zero-rewrite operations (the Delta columnMapping idea,
@@ -247,6 +253,73 @@ object VersionedTable {
     finally in.close()
   }
 
+  /** One listing of `_log/`: the commit entries and the checkpoints,
+    * each as (version, file status) in ascending version order. A
+    * missing log reads as an empty table. Every log reader starts
+    * here, so a verb costs one LIST of the log (one S3 LIST on an
+    * object store). */
+  private final case class LogListing(entries: Seq[(Long, FileStatus)],
+      chks: Seq[(Long, FileStatus)]) {
+    def head: Long = entries.lastOption.fold(0L)(_._1)
+  }
+
+  private def listLog(f: FileSystem, path: String): LogListing = {
+    val all = try f.listStatus(new Path(logDir(path))).toSeq
+      catch { case _: java.io.FileNotFoundException => Seq.empty }
+    def versions(prefix: String) = all.flatMap { st =>
+      val n = st.getPath.getName
+      if (n.startsWith(prefix) && n.endsWith(".json"))
+        Some(n.stripPrefix(prefix).stripSuffix(".json").toLong -> st)
+      else None
+    }.sortBy(_._1)
+    LogListing(versions("v"), versions("chk-v"))
+  }
+
+  /** The table state one verb reads and commits against: the version,
+    * the ordered live groups (with stats), the column-mapping state in
+    * effect there, and `schemaAt`, the version of the newest entry that
+    * carried schema state (a checkpoint counts as its own version, since
+    * it may consolidate such entries; 0 when none). */
+  private final case class Snapshot(version: Long, groups: Seq[Group],
+      schema: SchemaState, schemaAt: Long)
+
+  /** The state at `asOf` (None = the listing's head), in one pass:
+    * start from the newest checkpoint ≤ the version, then fold every
+    * entry after it — a replace entry resets the live set, an append
+    * extends it, and the latest schema-carrying entry wins (each holds
+    * the FULL state). The files OPENED are bounded by
+    * [[CheckpointInterval]], not table age. */
+  private def foldLog(f: FileSystem, log: LogListing,
+      asOf: Option[Long]): Snapshot = {
+    val v = asOf.getOrElse(log.head)
+    val chk = log.chks.filter(_._1 <= v).lastOption
+    val base = chk.fold(Snapshot(v, Seq.empty, EmptySchemaState, 0L)) {
+      case (c, st) =>
+        val raw = readJson(f, st.getPath)
+        Snapshot(v, parseGroups(raw),
+          parseSchema(raw).getOrElse(EmptySchemaState), c)
+    }
+    val from = chk.fold(0L)(_._1)
+    log.entries.filter { case (e, _) => e > from && e <= v }
+      .foldLeft(base) { case (acc, (e, st)) =>
+        val raw = readJson(f, st.getPath)
+        val gs = parseGroups(raw)
+        val sch = parseSchema(raw)
+        acc.copy(
+          groups =
+            if (jsonField(raw, "replace").toBoolean) gs else acc.groups ++ gs,
+          schema = sch.getOrElse(acc.schema),
+          schemaAt = if (sch.isDefined) e else acc.schemaAt)
+      }
+  }
+
+  /** Load the table state once per verb: one listing, one fold. */
+  private def snapshot(spark: SparkSession, path: String,
+      asOf: Option[Long] = None): Snapshot = {
+    val f = fs(spark, logDir(path))
+    foldLog(f, listLog(f, path), asOf)
+  }
+
   /** The EARLIEST version a read/diff can still faithfully resolve
     * after retention ([[expireVersions]]): 0 while the full log is
     * present (entry v1 exists), otherwise the newest checkpoint at or
@@ -256,34 +329,19 @@ object VersionedTable {
     * since" and, worse, MISS interim deletes. [[graft.streaming
     * .CdfTail]] refuses offsets behind this horizon. */
   def earliestResolvable(spark: SparkSession, path: String): Long = {
-    val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    if (!f.exists(d)) return 0L
-    val names = f.listStatus(d).map(_.getPath.getName).toSeq
-    val entries = names
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-    if (entries.isEmpty || entries.min == 1L) return 0L
-    val chks = names
-      .filter(n => n.startsWith("chk-v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("chk-v").stripSuffix(".json").toLong)
-      .filter(_ < entries.min)
+    val log = listLog(fs(spark, logDir(path)), path)
+    val oldest = log.entries.headOption.fold(1L)(_._1)
+    if (oldest == 1L) return 0L
+    val chks = log.chks.map(_._1).filter(_ < oldest)
     require(chks.nonEmpty,
-      s"log at $path is truncated below v${entries.min} with no " +
+      s"log at $path is truncated below v$oldest with no " +
         "covering checkpoint — unreadable history")
     chks.max
   }
 
   /** Latest committed version, or 0 when the table is empty. */
-  def currentVersion(spark: SparkSession, path: String): Long = {
-    val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    if (!f.exists(d)) 0L
-    else f.listStatus(d).map(_.getPath.getName)
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .foldLeft(0L)(math.max)
-  }
+  def currentVersion(spark: SparkSession, path: String): Long =
+    listLog(fs(spark, logDir(path)), path).head
 
   /** Atomic create-if-absent publish of `payload` at `entry` through
     * the given [[CommitArbiter]] binding. False on a lost race. */
@@ -293,20 +351,20 @@ object VersionedTable {
       : Boolean =
     arbiterFor(f).publish(f, entry, payload)
 
-  /** Publish a log entry for `groups` as version `expected + 1`;
+  /** Publish a log entry for `groups` as version `base.version + 1`;
     * cleans up `staged` (the groups THIS writer wrote, not the
-    * carried ones) and throws on a lost race. `batchId` (optional)
-    * tags the entry with a streaming micro-batch id — the idempotence
-    * token [[graft.streaming.VersionedSink]] deduplicates retried
-    * batches on. */
-  private[graft] def commitEntry(spark: SparkSession, path: String,
-      groups: Seq[Group], expected: Long, replace: Boolean,
+    * carried ones) and throws on a lost race. `base` is the state the
+    * entry applies to. `batchId` (optional) tags the entry with a
+    * streaming micro-batch id — the idempotence token
+    * [[graft.streaming.VersionedSink]] deduplicates retried batches
+    * on. */
+  private def commitEntry(spark: SparkSession, path: String,
+      base: Snapshot, groups: Seq[Group], replace: Boolean,
       staged: Seq[String], batchId: Option[Long] = None,
-      arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
-        CommitArbiter.forFs,
+      arbiterFor: FileSystem => CommitArbiter = CommitArbiter.forFs,
       schema: Option[SchemaState] = None,
       op: Option[String] = None): Long = {
-    val next = expected + 1
+    val next = base.version + 1
     val f = fs(spark, path)
     f.mkdirs(new Path(logDir(path)))
     val entry = new Path(logDir(path), f"v$next%08d.json")
@@ -332,13 +390,14 @@ object VersionedTable {
     // bytes. A crash before rename leaves only a dot-prefixed temp
     // (invisible to the chk-v listing).
     if (next % CheckpointInterval == 0) {
-      val live = liveGroups(spark, path, Some(next))
+      // the state at `next` is `base` plus this entry: no log re-walk
+      val live = if (replace) groups else base.groups ++ groups
       val chk = new Path(logDir(path), f"chk-v$next%08d.json")
       val tmp = new Path(logDir(path),
         s".tmp-chk-${java.util.UUID.randomUUID()}")
       // checkpoints carry the schema state too: after expiry they can
       // be the ONLY record of a rename/drop
-      val st = schema.getOrElse(schemaStateAt(spark, path, Some(next)))
+      val st = schema.getOrElse(base.schema)
       val stJs = if (st.isEmpty) "" else s"${schemaJson(st)},"
       val body = s"""{"version":$next,$stJs${groupsJson(live)}}"""
       try {
@@ -352,10 +411,6 @@ object VersionedTable {
     next
   }
 
-  /** Stage `df` as a fresh uuid group; returns the group with key
-    * stats when `statsCol` names a long-castable column (one cheap
-    * min/max agg over the just-written parquet — columnar stats
-    * reads, no full materialization). */
   /** Write-side schema gate: a batch introducing columns the table
     * does not know is refused unless the caller passed
     * `allowEvolution = true` — otherwise a typo'd or mis-wired
@@ -363,19 +418,18 @@ object VersionedTable {
     * reconciling read would return NULLs where data was expected
     * (Delta gates the same way with mergeSchema). Costs one
     * footer-level schema resolution of the live set per write; no-op
-    * on an empty table. */
+    * on an empty table. Gated at the verb's own snapshot, the version
+    * it commits against. */
   private def requireKnownColumns(spark: SparkSession, path: String,
-      df: DataFrame, allowEvolution: Boolean): Unit = {
-    if (allowEvolution) return
-    val live = liveGroups(spark, path, None)
-    if (live.isEmpty) return
+      snap: Snapshot, df: DataFrame, allowEvolution: Boolean): Unit = {
+    if (allowEvolution || snap.groups.isEmpty) return
     // best-effort guard: if the live set cannot be schema-resolved
     // right now (e.g. a concurrent writer's group not yet visible),
     // do not block the commit — the conflict/read paths surface real
     // problems; this gate only exists to catch mis-schema'd batches
     val known = scala.util.Try(
-      readGroups(spark, path, live,
-        schemaStateAt(spark, path, None)).get.schema.fieldNames.toSet)
+      readGroups(spark, path, snap.groups, snap.schema)
+        .get.schema.fieldNames.toSet)
       .getOrElse(return)
     val fresh = df.schema.fieldNames.filterNot(known)
     require(fresh.isEmpty,
@@ -394,10 +448,8 @@ object VersionedTable {
     * in the constrained column makes `pay >= 0` evaluate to NULL, and
     * letting that row through would contradict the resolve-failure
     * rule above — so the probe filters on NOT(expr) OR expr IS NULL. */
-  private def requireChecks(spark: SparkSession, path: String,
-      df: DataFrame): Unit = {
-    val st = schemaStateAt(spark, path, None)
-    st.checks.foreach { case (nm, ex) =>
+  private def requireChecks(snap: Snapshot, df: DataFrame): Unit =
+    snap.schema.checks.foreach { case (nm, ex) =>
       val bad = scala.util.Try(
         df.filter(s"NOT ($ex) OR ($ex) IS NULL").limit(1).collect())
       require(bad.isSuccess,
@@ -409,6 +461,12 @@ object VersionedTable {
         s"check constraint '$nm' ($ex) violated by this batch, " +
           s"e.g. ${bad.get.head}")
     }
+
+  /** Both write gates of an external batch, at `snap`. */
+  private def requireWritable(spark: SparkSession, path: String,
+      snap: Snapshot, df: DataFrame, allowEvolution: Boolean): Unit = {
+    requireKnownColumns(spark, path, snap, df, allowEvolution)
+    requireChecks(snap, df)
   }
 
   /** Add a named CHECK constraint (the Delta `ALTER TABLE ADD
@@ -426,12 +484,12 @@ object VersionedTable {
     require(!exprSql.exists(c => ",\"]".contains(c)),
       s"constraint expression must be free of , \" ] " +
         s"(log-format limit): $exprSql")
-    val v = currentVersion(spark, path)
-    require(v >= 1, "addCheck on an empty table")
-    val st = schemaStateAt(spark, path, Some(v))
+    val snap = snapshot(spark, path)
+    require(snap.version >= 1, "addCheck on an empty table")
+    val st = snap.schema
     require(!st.checks.exists(_._1 == name),
       s"constraint '$name' already exists")
-    read(spark, path, Some(v)).foreach { df =>
+    readGroups(spark, path, snap.groups, st).foreach { df =>
       // same non-true-is-a-violation semantics as the write gate
       require(df.filter(s"NOT ($exprSql) OR ($exprSql) IS NULL")
           .limit(1).isEmpty,
@@ -439,18 +497,18 @@ object VersionedTable {
           "table first (a constraint the table already breaks would " +
           "lie to every reader)")
     }
-    commitEntry(spark, path, liveGroups(spark, path, Some(v)), v,
+    commitEntry(spark, path, snap, snap.groups,
       replace = true, staged = Seq.empty, op = Some("add_check"),
       schema = Some(st.copy(checks = st.checks :+ (name -> exprSql))))
   }
 
   /** Drop a CHECK constraint by name — metadata-only. */
   def dropCheck(spark: SparkSession, path: String, name: String): Long = {
-    val v = currentVersion(spark, path)
-    val st = schemaStateAt(spark, path, Some(v))
+    val snap = snapshot(spark, path)
+    val st = snap.schema
     require(st.checks.exists(_._1 == name),
       s"no such constraint: $name")
-    commitEntry(spark, path, liveGroups(spark, path, Some(v)), v,
+    commitEntry(spark, path, snap, snap.groups,
       replace = true, staged = Seq.empty, op = Some("drop_check"),
       schema = Some(st.copy(checks = st.checks.filterNot(_._1 == name))))
   }
@@ -512,6 +570,9 @@ object VersionedTable {
       s"unexpected stats value type: ${other.getClass}")
   }
 
+  /** Stage `df` as a fresh uuid group; returns the group with key
+    * stats when `statsCol` names a long-castable column (observed
+    * on the write pass itself). */
   private def stageGroup(spark: SparkSession, path: String,
       df: DataFrame, statsCol: Option[String]): Group = {
     val name = java.util.UUID.randomUUID().toString
@@ -629,38 +690,45 @@ object VersionedTable {
     * same version first (the staged data group is cleaned up); any
     * OTHER IO failure propagates unchanged and leaves the staged
     * group as an orphan for [[vacuum]]. Returns the committed
-    * version. `validate = false` skips the CHECK-constraint gate —
-    * ONLY for internal rewrites of already-validated rows
-    * ([[merge]], [[optimize]]), where constraints hold by induction
-    * and re-probing would cost a full scan. */
+    * version. */
   def commit(spark: SparkSession, path: String, df: DataFrame,
       expectedVersion: Long, replace: Boolean = false,
       statsCol: Option[String] = None,
       batchId: Option[Long] = None,
       allowEvolution: Boolean = false,
       arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
-        CommitArbiter.forFs,
-      validate: Boolean = true,
-      op: Option[String] = None): Long = {
-    requireKnownColumns(spark, path, df, allowEvolution)
-    if (validate) requireChecks(spark, path, df)
+        CommitArbiter.forFs): Long = {
+    val snap = snapshot(spark, path, Some(expectedVersion))
+    requireKnownColumns(spark, path, snap, df, allowEvolution)
+    requireChecks(snap, df)
+    stageAndCommit(spark, path, snap, df, replace, statsCol, batchId,
+      arbiterFor, if (replace) "overwrite" else "append")
+  }
+
+  /** Stage `df` as one group and publish it on top of `snap` — the
+    * body of [[commit]] after its gates, shared with the internal
+    * rewrites that need none. Append entries carry only the new
+    * group; a replace entry with one group IS the whole new live set.
+    * `arbiterFor` is an injection seam (default
+    * [[CommitArbiter.forFs]]): tests pin protocol behavior under a
+    * deterministic lost race without process-global mutable state. */
+  private def stageAndCommit(spark: SparkSession, path: String,
+      snap: Snapshot, df: DataFrame, replace: Boolean,
+      statsCol: Option[String], batchId: Option[Long] = None,
+      arbiterFor: FileSystem => CommitArbiter = CommitArbiter.forFs,
+      op: String): Long = {
     val g = stageGroup(spark, path, df, statsCol)
-    // append entries carry only the new group; a replace entry with
-    // one group IS the whole new live set. `arbiterFor` is an
-    // injection seam (default [[CommitArbiter.forFs]]): tests pin
-    // protocol behavior under a deterministic lost race without
-    // process-global mutable state.
-    commitEntry(spark, path, Seq(g), expectedVersion, replace,
+    commitEntry(spark, path, snap, Seq(g), replace,
       staged = Seq(g.name), batchId = batchId, arbiterFor = arbiterFor,
-      op = op.orElse(Some(if (replace) "overwrite" else "append")))
+      op = Some(op))
   }
 
   /** APPEND commit with stage-once optimistic retry — the production
     * form of a contended ingest. An append entry carries no
     * read-dependency on the snapshot (it is valid at ANY version), so
     * on a lost race the already-staged data group can be re-published
-    * at the next version verbatim: the retry costs one version
-    * lookup + one log-entry CAS, not a data rewrite. (Replace/merge
+    * at the next version verbatim: the retry costs one log snapshot
+    * (one listing) + one log-entry CAS, not a data rewrite. (Replace/merge
     * commits MUST NOT retry this way — their content derives from the
     * snapshot they read, so a conflict invalidates the staged data;
     * that is why [[merge]] surfaces [[CommitConflictException]] to
@@ -678,34 +746,34 @@ object VersionedTable {
       arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
         CommitArbiter.forFs): (Long, Int) = {
     require(maxAttempts >= 1, "maxAttempts must be >= 1")
-    // gates are evaluated against the snapshot at `gatedAt`; a lost
-    // race re-validates below iff a schema-carrying commit (addCheck /
-    // rename / drop) landed in between — republishing verbatim would
-    // bypass a constraint the winning writer just added
-    var gatedAt = currentVersion(spark, path)
-    requireKnownColumns(spark, path, df, allowEvolution = false)
-    requireChecks(spark, path, df)
+    // gates are evaluated against the state at `gated`; a lost race
+    // re-validates below iff a schema-carrying commit (addCheck /
+    // rename / drop / restore) landed since — republishing verbatim
+    // would bypass a constraint the winning writer just added, or a
+    // column a restore just took away
+    var gated = snapshot(spark, path)
+    requireWritable(spark, path, gated, df, allowEvolution = false)
     val g = stageGroup(spark, path, df, statsCol)
     var conflicts = 0
     while (true) {
-      val v = currentVersion(spark, path)
+      // re-read after staging: commits that landed meanwhile are not
+      // lost races
+      val snap = snapshot(spark, path)
       try {
-        if (v > gatedAt && schemaEntryBetween(spark, path, gatedAt, v)) {
+        if (snap.schemaAt != gated.schemaAt) {
           // re-run both gates at the new head; a now-failing batch
           // must clean its staged group and refuse, same as exhaustion
-          try {
-            requireKnownColumns(spark, path, df, allowEvolution = false)
-            requireChecks(spark, path, df)
-          } catch {
+          try requireWritable(spark, path, snap, df, allowEvolution = false)
+          catch {
             case t: Throwable =>
               fs(spark, path).delete(new Path(s"$path/data/${g.name}"), true)
               throw t
           }
+          gated = snap
         }
-        if (v > gatedAt) gatedAt = v
         // staged = empty: a lost race must NOT clean the group — it
         // is re-published on the next attempt
-        return (commitEntry(spark, path, Seq(g), v, replace = false,
+        return (commitEntry(spark, path, snap, Seq(g), replace = false,
           staged = Seq.empty, batchId = batchId,
           arbiterFor = arbiterFor, op = Some("append")), conflicts)
       } catch {
@@ -725,77 +793,11 @@ object VersionedTable {
     * (Structured Streaming retries the LAST batch after a failure,
     * so head-entry inspection is the sufficient check). */
   def headBatchId(spark: SparkSession, path: String): Option[Long] = {
-    val v = currentVersion(spark, path)
-    if (v == 0) return None
     val f = fs(spark, logDir(path))
-    val raw = readJson(f, new Path(logDir(path), f"v$v%08d.json"))
+    val head = listLog(f, path).entries.lastOption.getOrElse(return None)
+    val raw = readJson(f, head._2.getPath)
     if (!raw.contains("\"batch\":")) None
     else Some(jsonField(raw, "batch").toLong)
-  }
-
-  /** The ordered live file groups (with stats) at `asOfVersion`
-    * (None = latest), starting from the newest checkpoint ≤ the
-    * requested version so the number of per-commit files OPENED is
-    * bounded by [[CheckpointInterval]], not table age. */
-  private def liveGroups(spark: SparkSession, path: String,
-      asOfVersion: Option[Long]): Seq[Group] = {
-    val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    if (!f.exists(d)) return Seq.empty
-    val names = f.listStatus(d).map(_.getPath.getName).toSeq
-    val chk = names
-      .filter(n => n.startsWith("chk-v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("chk-v").stripSuffix(".json").toLong)
-      .filter(v => asOfVersion.forall(v <= _))
-      .sorted.lastOption
-    val base: Seq[Group] = chk match {
-      case Some(v) => parseGroups(readJson(f, new Path(d, f"chk-v$v%08d.json")))
-      case None => Seq.empty
-    }
-    val from = chk.getOrElse(0L)
-    val entries = names
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .filter(v => v > from && asOfVersion.forall(v <= _))
-      .sorted
-      .map { v =>
-        val raw = readJson(f, new Path(d, f"v$v%08d.json"))
-        Entry(v, parseGroups(raw), jsonField(raw, "replace").toBoolean)
-      }
-    entries.foldLeft(base) {
-      case (_, Entry(_, gs, true)) => gs
-      case (acc, Entry(_, gs, false)) => acc ++ gs
-    }
-  }
-
-  /** The column-mapping state in effect at `asOfVersion` (None =
-    * latest): base from the newest checkpoint ≤ the version, then the
-    * LATEST schema-carrying entry after it wins (full-snapshot
-    * semantics — same resolution walk as [[liveGroups]]). */
-  private[sources] def schemaStateAt(spark: SparkSession, path: String,
-      asOfVersion: Option[Long]): SchemaState = {
-    val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    if (!f.exists(d)) return EmptySchemaState
-    val names = f.listStatus(d).map(_.getPath.getName).toSeq
-    val chk = names
-      .filter(n => n.startsWith("chk-v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("chk-v").stripSuffix(".json").toLong)
-      .filter(v => asOfVersion.forall(v <= _))
-      .sorted.lastOption
-    val base = chk
-      .flatMap(v => parseSchema(readJson(f, new Path(d, f"chk-v$v%08d.json"))))
-      .getOrElse(EmptySchemaState)
-    val from = chk.getOrElse(0L)
-    names
-      .filter(n => n.startsWith("v") && n.endsWith(".json"))
-      .map(n => n.stripPrefix("v").stripSuffix(".json").toLong)
-      .filter(v => v > from && asOfVersion.forall(v <= _))
-      .sorted
-      .foldLeft(base) { (acc, v) =>
-        parseSchema(readJson(f, new Path(d, f"v$v%08d.json")))
-          .getOrElse(acc)
-      }
   }
 
   /** Per-JVM (group dir → read-back schema) cache for the protocol's
@@ -886,9 +888,8 @@ object VersionedTable {
     * None when no version exists yet. */
   def read(spark: SparkSession, path: String,
       asOfVersion: Option[Long] = None): Option[DataFrame] = {
-    val live = liveGroups(spark, path, asOfVersion)
-    readGroups(spark, path, live,
-      schemaStateAt(spark, path, asOfVersion))
+    val snap = snapshot(spark, path, asOfVersion)
+    readGroups(spark, path, snap.groups, snap.schema)
   }
 
   /** Relation-integrated read (round-15): expose the snapshot as a
@@ -922,9 +923,8 @@ object VersionedTable {
     * [[read]] (the reconciling path). None on an empty table too. */
   def readIndexed(spark: SparkSession, path: String, keyCol: String,
       asOfVersion: Option[Long] = None): Option[DataFrame] = {
-    val live = liveGroups(spark, path, asOfVersion)
+    val Snapshot(_, live, st, _) = snapshot(spark, path, asOfVersion)
     if (live.isEmpty) return None
-    val st = schemaStateAt(spark, path, asOfVersion)
     val dirs = live.map(g => groupPath(path, g.name))
     // uniform-schema gate in TWO planning reads, not one per group
     // (index_tiers measured the per-group form at ~65 ms/group — a
@@ -991,25 +991,24 @@ object VersionedTable {
     * committed version. */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
       keyCol: String, allowEvolution: Boolean = false): Long = {
-    // version FIRST, gates second: a schema-carrying commit landing
-    // between the gate evaluation and the publish then moves the head
-    // past `v` and the publish CONFLICTS (caller re-derives, gates
-    // re-run) — gates-first left a window where an old-schema batch
-    // could land cleanly one version after a rename (race-spec pinned)
-    val v = currentVersion(spark, path)
-    requireKnownColumns(spark, path, updates, allowEvolution)
-    requireChecks(spark, path, updates)
-    val merged = read(spark, path, Some(v)) match {
+    // gates, plan and publish all at ONE snapshot: a schema-carrying
+    // commit landing after it moves the head past the snapshot and the
+    // publish CONFLICTS (caller re-derives, gates re-run) — gating at
+    // another version than the publish targets left a window where an
+    // old-schema batch could land cleanly one version after a rename
+    // (race-spec pinned)
+    val snap = snapshot(spark, path)
+    requireWritable(spark, path, snap, updates, allowEvolution)
+    val merged = readGroups(spark, path, snap.groups, snap.schema) match {
       case Some(cur) =>
         cur.join(updates.select(col(keyCol)).distinct(), Seq(keyCol),
           "left_anti").unionByName(updates, allowMissingColumns = true)
       case None => updates
     }
-    // validate = false: the updates were just gated above, carried
-    // rows hold by induction — re-probing would scan the snapshot
-    commit(spark, path, merged, v, replace = true,
-      statsCol = Some(keyCol), allowEvolution = allowEvolution,
-      validate = false, op = Some("merge"))
+    // no second gate: the updates were just gated above, carried rows
+    // hold by induction — re-probing would scan the snapshot
+    stageAndCommit(spark, path, snap, merged, replace = true,
+      statsCol = Some(keyCol), op = "merge")
   }
 
   /** MERGE (upsert by key), stats-pruned copy-on-write form: only
@@ -1023,44 +1022,9 @@ object VersionedTable {
     * (committedVersion, rewrittenGroupCount). */
   def mergePruned(spark: SparkSession, path: String, updates: DataFrame,
       keyCol: String, allowEvolution: Boolean = false): (Long, Int) = {
-    // version before gates — the merge() rule
-    val v = currentVersion(spark, path)
-    requireKnownColumns(spark, path, updates, allowEvolution)
-    requireChecks(spark, path, updates)
-    val live = liveGroups(spark, path, Some(v))
-    if (live.isEmpty)
-      return (commit(spark, path, updates, v, replace = true,
-        statsCol = Some(keyCol), op = Some("merge_pruned")), 0)
-    val r = updates.agg(min(col(keyCol).cast("long")),
-      max(col(keyCol).cast("long"))).head()
-    // all-null update keys match nothing: append the updates as-is
-    if (r.isNullAt(0)) {
-      val g = stageGroup(spark, path, updates, Some(keyCol))
-      return (commitEntry(spark, path, live :+ g, v, replace = true,
-        staged = Seq(g.name), op = Some("merge_pruned")), 0)
-    }
-    val (uLo, uHi) = (r.getLong(0), r.getLong(1))
-    val (touched, carried) = live.partition { g =>
-      (g.lo, g.hi) match {
-        case (Some(lo), Some(hi)) => lo <= uHi && uLo <= hi
-        case _ => true // no stats -> conservative rewrite
-      }
-    }
-    val touchedDf = readGroups(spark, path, touched,
-      schemaStateAt(spark, path, Some(v)))
-    val rewritten = touchedDf match {
-      case Some(t) =>
-        // reconciling union: on a mixed-schema table (or a widening
-        // batch under allowEvolution) the touched generation and the
-        // batch may differ in columns — absent ones read as NULL,
-        // the same posture readGroups applies
-        t.join(updates.select(col(keyCol)).distinct(), Seq(keyCol),
-          "left_anti").unionByName(updates, allowMissingColumns = true)
-      case None => updates
-    }
-    val g = stageGroup(spark, path, rewritten, Some(keyCol))
-    (commitEntry(spark, path, carried :+ g, v, replace = true,
-      staged = Seq(g.name), op = Some("merge_pruned")), touched.size)
+    val (v, rewritten, _) = mergeCopyOnWrite(spark, path, updates, keyCol,
+      allowEvolution, fromVersion = None, maxRebases = 0, "merge_pruned")
+    (v, rewritten)
   }
 
   /** MERGE (upsert by key) via DELETION VECTORS — the merge-on-read
@@ -1098,11 +1062,11 @@ object VersionedTable {
       batchId: Option[Long] = None): (Long, Int, Int) = {
     require(maxDvFraction >= 0.0 && maxDvFraction <= 1.0,
       s"maxDvFraction must be in [0,1]: $maxDvFraction")
-    // version before gates — the merge() rule
-    val v = currentVersion(spark, path)
-    requireKnownColumns(spark, path, updates, allowEvolution)
-    requireChecks(spark, path, updates)
-    val live = liveGroups(spark, path, Some(v))
+    // one snapshot: gates, plan and publish all at its version (the
+    // merge() rule)
+    val snap = snapshot(spark, path)
+    val Snapshot(v, live, st, _) = snap
+    requireWritable(spark, path, snap, updates, allowEvolution)
     if (live.isEmpty) {
       // dropIfEmpty discipline even on the bootstrap commit: an empty
       // first micro-batch must not found the table on a zero-row group
@@ -1110,12 +1074,11 @@ object VersionedTable {
           stageGroup(spark, path, updates, Some(keyCol))) match {
         case None => return (v, 0, 0)
         case Some(g) =>
-          return (commitEntry(spark, path, Seq(g), v, replace = true,
+          return (commitEntry(spark, path, snap, Seq(g), replace = true,
             staged = Seq(g.name), batchId = batchId,
             arbiterFor = arbiterFor, op = Some("merge_dv")), 0, 0)
       }
     }
-    val st = schemaStateAt(spark, path, Some(v))
     var staged = List.empty[String]
     var masked = 0
     var rewrote = 0
@@ -1225,36 +1188,14 @@ object VersionedTable {
       val gNew = dropIfEmpty(spark, path, gNew0)
       if (gNew.isEmpty) staged = staged.filterNot(_ == gNew0.name)
       if (gNew.isEmpty && masked == 0 && rewrote == 0) return (v, 0, 0)
-      (commitEntry(spark, path, updated ++ gNew.toSeq, v, replace = true,
-        staged = staged, batchId = batchId,
+      (commitEntry(spark, path, snap, updated ++ gNew.toSeq,
+        replace = true, staged = staged, batchId = batchId,
         arbiterFor = arbiterFor, op = Some("merge_dv")), masked, rewrote)
     } catch {
       // commitEntry already cleans `staged` on a lost race; the
       // re-delete here is a no-op then, and the real cleanup for any
       // failure BEFORE the publish (IO mid-staging)
       case e: Throwable => cleanup(); throw e
-    }
-  }
-
-  /** True when any log entry in (from, to] carries schema state — a
-    * rename/drop/CHECK landed in the window. One small-file read per
-    * version; callers probe only after a lost race. */
-  private def schemaEntryBetween(spark: SparkSession, path: String,
-      from: Long, to: Long): Boolean = {
-    val f = fs(spark, logDir(path))
-    (from + 1 to to).exists { v =>
-      readJson(f, new Path(logDir(path), f"v$v%08d.json"))
-        .contains("\"ren\":")
-    }
-  }
-
-  /** The raw log entries in (from, to], oldest first. */
-  private def entriesBetween(spark: SparkSession, path: String,
-      from: Long, to: Long): Seq[Entry] = {
-    val f = fs(spark, logDir(path))
-    (from + 1 to to).map { v =>
-      val raw = readJson(f, new Path(logDir(path), f"v$v%08d.json"))
-      Entry(v, parseGroups(raw), jsonField(raw, "replace").toBoolean)
     }
   }
 
@@ -1287,26 +1228,42 @@ object VersionedTable {
   def mergePrunedRebase(spark: SparkSession, path: String,
       updates: DataFrame, keyCol: String,
       maxRebases: Int = 16,
-      fromVersion: Option[Long] = None): (Long, Int, Int) = {
-    // version before gates — the merge() rule (an explicit
-    // fromVersion pins the snapshot even earlier, same safety)
-    val v0 = fromVersion.getOrElse(currentVersion(spark, path))
-    requireKnownColumns(spark, path, updates, allowEvolution = false)
-    requireChecks(spark, path, updates)
-    val live = liveGroups(spark, path, Some(v0))
+      fromVersion: Option[Long] = None): (Long, Int, Int) =
+    mergeCopyOnWrite(spark, path, updates, keyCol, allowEvolution = false,
+      fromVersion, maxRebases, "merge_rebase")
+
+  /** The one copy-on-write MERGE body behind [[mergePruned]] (no
+    * rebases) and [[mergePrunedRebase]]: gate, partition the live set
+    * by key stats, rewrite the touched groups as one staged group,
+    * publish, and on a lost race fold up to `maxRebases` times. An
+    * empty table or an all-null key batch commits one plain attempt
+    * tagged `merge_pruned`. Returns
+    * (committedVersion, rewrittenGroupCount, rebases). */
+  private def mergeCopyOnWrite(spark: SparkSession, path: String,
+      updates: DataFrame, keyCol: String, allowEvolution: Boolean,
+      fromVersion: Option[Long], maxRebases: Int,
+      op: String): (Long, Int, Int) = {
+    // one snapshot for gates and plan — the merge() rule (an explicit
+    // fromVersion pins it earlier, same safety)
+    val snap = snapshot(spark, path, fromVersion)
+    requireWritable(spark, path, snap, updates, allowEvolution)
+    if (snap.groups.isEmpty)
+      return (stageAndCommit(spark, path, snap, updates, replace = true,
+        statsCol = Some(keyCol), op = "merge_pruned"), 0, 0)
     val r = updates.agg(min(col(keyCol).cast("long")),
       max(col(keyCol).cast("long"))).head()
-    // degenerate inputs keep mergePruned's exact semantics; the
-    // version-race path there is what this method generalizes
-    if (live.isEmpty || r.isNullAt(0)) {
-      val (cv, rw) = mergePruned(spark, path, updates, keyCol)
-      return (cv, rw, 0)
+    // all-null update keys match nothing: append the updates as-is
+    if (r.isNullAt(0)) {
+      val g = stageGroup(spark, path, updates, Some(keyCol))
+      return (commitEntry(spark, path, snap, snap.groups :+ g,
+        replace = true, staged = Seq(g.name),
+        op = Some("merge_pruned")), 0, 0)
     }
     val (uLo, uHi) = (r.getLong(0), r.getLong(1))
-    val (touched, carried0) = live.partition { g =>
+    val (touched, carried0) = snap.groups.partition { g =>
       (g.lo, g.hi) match {
         case (Some(lo), Some(hi)) => lo <= uHi && uLo <= hi
-        case _ => true
+        case _ => true // no stats -> conservative rewrite
       }
     }
     // the key span this merge READ (touched groups) or WRITES (the
@@ -1316,46 +1273,53 @@ object VersionedTable {
     val unbounded = touched.exists(g => g.lo.isEmpty || g.hi.isEmpty)
     val protLo = (uLo +: touched.flatMap(_.lo)).min
     val protHi = (uHi +: touched.flatMap(_.hi)).max
-    val rewritten = readGroups(spark, path, touched,
-        schemaStateAt(spark, path, Some(v0))) match {
-      case Some(t) =>
-        t.join(updates.select(col(keyCol)).distinct(), Seq(keyCol),
-          "left_anti").unionByName(updates, allowMissingColumns = true)
-      case None => updates
-    }
+    val rewritten =
+      readGroups(spark, path, touched, snap.schema) match {
+        case Some(t) =>
+          // reconciling union: on a mixed-schema table (or a widening
+          // batch under allowEvolution) the touched generation and the
+          // batch may differ in columns — absent ones read as NULL,
+          // the same posture readGroups applies
+          t.join(updates.select(col(keyCol)).distinct(), Seq(keyCol),
+            "left_anti").unionByName(updates, allowMissingColumns = true)
+        case None => updates
+      }
     val g = stageGroup(spark, path, rewritten, Some(keyCol))
+    val f = fs(spark, logDir(path))
     var carried = carried0
-    var expected = v0
+    var expected = snap.version
     var rebases = 0
     while (true) {
       try {
         // staged = empty: a lost race must NOT clean the group — the
         // fold path re-publishes it (the commitAppendWithRetry rule);
         // real conflicts below delete it explicitly
-        return (commitEntry(spark, path, carried :+ g, expected,
-          replace = true, staged = Seq.empty,
-          op = Some("merge_rebase")), touched.size, rebases)
+        return (commitEntry(spark, path, snap.copy(version = expected),
+          carried :+ g, replace = true, staged = Seq.empty,
+          op = Some(op)), touched.size, rebases)
       } catch {
         case e: CommitConflictException =>
-          val now = currentVersion(spark, path)
-          val folded = entriesBetween(spark, path, expected, now)
-            .forall { entry =>
-              val foldable = !entry.replace && !unbounded &&
-                entry.groups.forall { ig =>
-                (ig.lo, ig.hi) match {
-                  case (Some(lo), Some(hi)) => hi < protLo || lo > protHi
-                  case _ => false // stats-less append: can't prove disjoint
+          val log = if (rebases < maxRebases) Some(listLog(f, path)) else None
+          val folded = log.exists(_.entries.filter(_._1 > expected).forall {
+            case (_, st) =>
+              val raw = readJson(f, st.getPath)
+              val gs = parseGroups(raw)
+              val foldable = !jsonField(raw, "replace").toBoolean &&
+                !unbounded && gs.forall { ig =>
+                  (ig.lo, ig.hi) match {
+                    case (Some(lo), Some(hi)) => hi < protLo || lo > protHi
+                    case _ => false // stats-less append: can't prove disjoint
+                  }
                 }
-              }
-              if (foldable) carried = carried ++ entry.groups
+              if (foldable) carried = carried ++ gs
               foldable
-            }
-          rebases += 1
-          if (!folded || rebases > maxRebases) {
+          })
+          if (!folded) {
             fs(spark, path).delete(new Path(s"$path/data/${g.name}"), true)
             throw e
           }
-          expected = now
+          rebases += 1
+          expected = log.get.head
       }
     }
     throw new IllegalStateException("unreachable")
@@ -1375,16 +1339,15 @@ object VersionedTable {
       lo: Long, hi: Long,
       asOfVersion: Option[Long] = None): (Option[DataFrame], Int) = {
     require(lo <= hi, s"empty read range [$lo,$hi]")
-    val live = liveGroups(spark, path, asOfVersion)
-    val overlapping = live.filter { g =>
+    val snap = snapshot(spark, path, asOfVersion)
+    val overlapping = snap.groups.filter { g =>
       (g.lo, g.hi) match {
         case (Some(glo), Some(ghi)) => glo <= hi && lo <= ghi
         case _ => true // no stats -> conservative open
       }
     }
     val k = col(keyCol).cast("long")
-    (readGroups(spark, path, overlapping,
-        schemaStateAt(spark, path, asOfVersion))
+    (readGroups(spark, path, overlapping, snap.schema)
       .map(_.filter(k >= lo && k <= hi)), overlapping.size)
   }
 
@@ -1404,22 +1367,20 @@ object VersionedTable {
   def deleteRange(spark: SparkSession, path: String, keyCol: String,
       lo: Long, hi: Long): (Long, Int) = {
     require(lo <= hi, s"empty delete range [$lo,$hi]")
-    val v = currentVersion(spark, path)
-    val live = liveGroups(spark, path, Some(v))
-    val (touched, carried) = live.partition { g =>
+    val snap = snapshot(spark, path)
+    val (touched, carried) = snap.groups.partition { g =>
       (g.lo, g.hi) match {
         case (Some(glo), Some(ghi)) => glo <= hi && lo <= ghi
         case _ => true // no stats -> conservative rewrite
       }
     }
-    if (touched.isEmpty) return (v, 0)
+    if (touched.isEmpty) return (snap.version, 0)
     val k = col(keyCol).cast("long")
-    val remaining = readGroups(spark, path, touched,
-        schemaStateAt(spark, path, Some(v))).get
+    val remaining = readGroups(spark, path, touched, snap.schema).get
       .filter(k.isNull || k < lo || k > hi)
     val g = stageGroup(spark, path, remaining, Some(keyCol))
     val keep = dropIfEmpty(spark, path, g).toSeq
-    (commitEntry(spark, path, carried ++ keep, v, replace = true,
+    (commitEntry(spark, path, snap, carried ++ keep, replace = true,
       staged = keep.map(_.name), op = Some("delete_range")), touched.size)
   }
 
@@ -1444,10 +1405,9 @@ object VersionedTable {
     * When the stats prove no group overlaps, metadata-only no-op. */
   def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
       keyCol: String): (Long, Int) = {
-    val v = currentVersion(spark, path)
-    val live = liveGroups(spark, path, Some(v))
+    val snap = snapshot(spark, path)
+    val Snapshot(v, live, st, _) = snap
     require(live.nonEmpty, "deleteKeys on an empty table")
-    val st = schemaStateAt(spark, path, Some(v))
     val k = keys.select(col(keyCol)).filter(col(keyCol).isNotNull)
       .distinct()
     val r = k.agg(min(col(keyCol).cast("long")),
@@ -1500,7 +1460,7 @@ object VersionedTable {
       }
     }
     if (staged.isEmpty) return (v, 0)
-    (commitEntry(spark, path, updated, v, replace = true,
+    (commitEntry(spark, path, snap, updated, replace = true,
       staged = staged, op = Some("delete_keys")), staged.size)
   }
 
@@ -1527,16 +1487,17 @@ object VersionedTable {
   def changeFeed(spark: SparkSession, path: String, keyCol: String,
       fromVersion: Long, toVersion: Long,
       skipShared: Boolean = true): DataFrame = {
-    val fromG = liveGroups(spark, path, Some(fromVersion))
-    val toG = liveGroups(spark, path, Some(toVersion))
-    require(fromG.nonEmpty || toG.nonEmpty,
-      s"changeFeed: no live data at either version ($fromVersion, $toVersion)")
+    // both sides resolve from ONE listing of the log
+    val f = fs(spark, logDir(path))
+    val log = listLog(f, path)
     // each side reads under ITS OWN column mapping (the same rule as
     // time travel); a rename between the versions surfaces as the
     // logical columns differing and the existing key/type requires
     // fire — the reader's problem, as with s16/s17 evolution
-    val fromSt = schemaStateAt(spark, path, Some(fromVersion))
-    val toSt = schemaStateAt(spark, path, Some(toVersion))
+    val Snapshot(_, fromG, fromSt, _) = foldLog(f, log, Some(fromVersion))
+    val Snapshot(_, toG, toSt, _) = foldLog(f, log, Some(toVersion))
+    require(fromG.nonEmpty || toG.nonEmpty,
+      s"changeFeed: no live data at either version ($fromVersion, $toVersion)")
     // a group is "shared" only when BOTH its data files AND its
     // deletion vector are identical across the versions — a new DV on
     // an unchanged group changes its visible rows, so it must be read
@@ -1629,7 +1590,6 @@ object VersionedTable {
     val f = fs(spark, path)
     val dataDir = new Path(s"$path/data")
     if (!f.exists(dataDir)) return Seq.empty
-    val d = new Path(logDir(path))
     // entries AND checkpoints both pin groups: after expireVersions
     // the horizon checkpoint is the ONLY reference to the live set it
     // consolidated — vacuuming on entries alone would delete live data
@@ -1637,15 +1597,12 @@ object VersionedTable {
     // partitioned SPAN inside one (uuid/__graft_span=i — the one-pass
     // optimizeZOrder layout): vacuum operates on first-level dirs, so
     // the first path segment is what pins them
-    val referenced: Set[String] =
-      if (!f.exists(d)) Set.empty
-      else f.listStatus(d).map(_.getPath).toSeq
-        .filter(p => p.getName.endsWith(".json") &&
-          (p.getName.startsWith("v") || p.getName.startsWith("chk-v")))
-        .flatMap(p => parseGroups(readJson(f, p))
-          .flatMap(g => g.name +: g.dv.toSeq))
-        .map(_.split('/').head)
-        .toSet
+    val log = listLog(f, path)
+    val referenced: Set[String] = (log.entries ++ log.chks)
+      .flatMap { case (_, st) => parseGroups(readJson(f, st.getPath))
+        .flatMap(g => g.name +: g.dv.toSeq) }
+      .map(_.split('/').head)
+      .toSet
     val cutoff = System.currentTimeMillis() - minAgeMs
     f.listStatus(dataDir).toSeq
       .filter(st => st.isDirectory &&
@@ -1672,35 +1629,25 @@ object VersionedTable {
   def expireVersions(spark: SparkSession, path: String,
       keepLast: Int): Long = {
     require(keepLast >= 1, s"keepLast must be >= 1: $keepLast")
-    val current = currentVersion(spark, path)
-    val horizon = current - keepLast
-    if (horizon <= 0) return 0L
     val f = fs(spark, path)
-    val d = new Path(logDir(path))
+    val log = listLog(f, path)
+    val horizon = log.head - keepLast
+    if (horizon <= 0) return 0L
     // consolidate BEFORE dropping: the checkpoint must land first so
-    // a reader never sees the tail without its base
-    val live = liveGroups(spark, path, Some(horizon))
-    val chk = new Path(d, f"chk-v$horizon%08d.json")
-    // the horizon checkpoint may become the ONLY record of a
-    // rename/drop whose entry is about to be dropped
-    val st = schemaStateAt(spark, path, Some(horizon))
+    // a reader never sees the tail without its base. It carries the
+    // schema state too: the horizon checkpoint may become the ONLY
+    // record of a rename/drop whose entry is about to be dropped.
+    // Entries and checkpoints published after the listing are all
+    // newer than the horizon, so the one listing decides the drops.
+    val Snapshot(_, live, st, _) = foldLog(f, log, Some(horizon))
     val stJs = if (st.isEmpty) "" else s"${schemaJson(st)},"
     val body = s"""{"version":$horizon,$stJs${groupsJson(live)}}"""
-    val out = f.create(chk, true)
+    val out = f.create(new Path(logDir(path), f"chk-v$horizon%08d.json"), true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
-    var dropped = 0L
-    f.listStatus(d).foreach { st =>
-      val n = st.getPath.getName
-      if (n.startsWith("chk-v") && n.endsWith(".json")) {
-        if (n.stripPrefix("chk-v").stripSuffix(".json").toLong < horizon)
-          f.delete(st.getPath, false)
-      } else if (n.startsWith("v") && n.endsWith(".json")) {
-        if (n.stripPrefix("v").stripSuffix(".json").toLong <= horizon) {
-          f.delete(st.getPath, false); dropped += 1
-        }
-      }
-    }
-    dropped
+    log.chks.filter(_._1 < horizon).foreach(c => f.delete(c._2.getPath, false))
+    val expired = log.entries.filter(_._1 <= horizon)
+    expired.foreach(e => f.delete(e._2.getPath, false))
+    expired.size.toLong
   }
 
   /** OPTIMIZE: rewrite the current snapshot into files sized near
@@ -1717,8 +1664,8 @@ object VersionedTable {
       targetBytes: Long = 128L << 20,
       statsCol: Option[String] = None): (Long, Long) = {
     require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val v = currentVersion(spark, path)
-    val live = liveGroups(spark, path, Some(v))
+    val snap = snapshot(spark, path)
+    val live = snap.groups
     if (live.isEmpty) return (0L, 0L)
     val f = fs(spark, path)
     val bytes = live.map { g =>
@@ -1728,11 +1675,11 @@ object VersionedTable {
     // the compacted group is written under LOGICAL names, so the
     // mapping becomes vacuous for it (rename/drop history stays in
     // the log for time travel)
-    val snapshot = readGroups(spark, path, live,
-      schemaStateAt(spark, path, Some(v))).get
-    val committed = commit(spark, path, snapshot.repartition(nFiles), v,
-      replace = true, statsCol = statsCol, validate = false,
-      op = Some("optimize"))
+    // no gates: the rows are the table's own, already validated
+    val rows = readGroups(spark, path, live, snap.schema).get
+    val committed = stageAndCommit(spark, path, snap,
+      rows.repartition(nFiles), replace = true, statsCol = statsCol,
+      op = "optimize")
     (committed, nFiles.toLong)
   }
 
@@ -1758,11 +1705,9 @@ object VersionedTable {
     require(boundaries == boundaries.sorted &&
       boundaries.distinct.size == boundaries.size,
       s"boundaries must be strictly ascending: $boundaries")
-    val v = currentVersion(spark, path)
-    val live = liveGroups(spark, path, Some(v))
-    require(live.nonEmpty, "optimizeClustered on an empty table")
-    val snap = readGroups(spark, path, live,
-        schemaStateAt(spark, path, Some(v))).get
+    val base = snapshot(spark, path)
+    require(base.groups.nonEmpty, "optimizeClustered on an empty table")
+    val snap = readGroups(spark, path, base.groups, base.schema).get
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val k = col(keyCol).cast("long")
@@ -1779,7 +1724,7 @@ object VersionedTable {
         }.otherwise(boundaries.size)
       val (name, groups) = stageSpans(spark, path,
         snap.withColumn("__graft_span", spanId), keyCol)
-      (commitEntry(spark, path, groups, v, replace = true,
+      (commitEntry(spark, path, base, groups, replace = true,
         staged = Seq(name),
         op = Some("optimize_clustered")), groups.size)
     } finally snap.unpersist()
@@ -1865,11 +1810,9 @@ object VersionedTable {
       colA: String, colB: String, targetGroups: Int,
       statsCol: String): (Long, Int) = {
     require(targetGroups >= 2, s"need >= 2 groups: $targetGroups")
-    val v = currentVersion(spark, path)
-    val live = liveGroups(spark, path, Some(v))
-    require(live.nonEmpty, "optimizeZOrder on an empty table")
-    val snap0 = readGroups(spark, path, live,
-      schemaStateAt(spark, path, Some(v))).get
+    val base = snapshot(spark, path)
+    require(base.groups.nonEmpty, "optimizeZOrder on an empty table")
+    val snap0 = readGroups(spark, path, base.groups, base.schema).get
     Seq(colA, colB).foreach(c => require(
       snap0.columns.contains(c), s"no such column: $c"))
     val r = snap0.agg(
@@ -1911,7 +1854,7 @@ object VersionedTable {
         statsCol)
       require(groups.nonEmpty, "z-order write produced no spans")
       // staged = the whole uuid dir: a lost race cleans every span
-      (commitEntry(spark, path, groups, v, replace = true,
+      (commitEntry(spark, path, base, groups, replace = true,
         staged = Seq(name),
         op = Some("optimize_zorder")), groups.size)
     } finally snap.unpersist()
@@ -1935,21 +1878,20 @@ object VersionedTable {
   def restore(spark: SparkSession, path: String, toVersion: Long,
       arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
         CommitArbiter.forFs): Long = {
-    val v = currentVersion(spark, path)
+    val f = fs(spark, path)
+    val log = listLog(f, path)
+    val v = log.head
     require(toVersion >= 1 && toVersion <= v,
       s"restore target v$toVersion outside committed range [1, $v]")
-    val f = fs(spark, path)
-    val entry = new Path(logDir(path), f"v$toVersion%08d.json")
-    val chk = new Path(logDir(path), f"chk-v$toVersion%08d.json")
-    require(f.exists(entry) || f.exists(chk),
+    require((log.entries ++ log.chks).exists(_._1 == toVersion),
       s"restore target v$toVersion is behind the retention horizon " +
         "(expireVersions dropped its log entry) — its live set can " +
         "no longer be resolved")
-    val target = liveGroups(spark, path, Some(toVersion))
+    val target = foldLog(f, log, Some(toVersion))
     // belt-and-braces: vacuum never reclaims referenced groups, so a
     // missing directory means external tampering — refuse loudly
     // rather than commit a snapshot that cannot be read
-    target.foreach { g =>
+    target.groups.foreach { g =>
       (g.name +: g.dv.toSeq).foreach { n =>
         require(f.exists(new Path(groupPath(path, n))),
           s"file $n referenced by v$toVersion is missing on disk — " +
@@ -1959,9 +1901,9 @@ object VersionedTable {
     // restore the schema state of the target era too (Delta RESTORE
     // semantics): published even when empty — an empty state must
     // still OVERRIDE later renames/drops in the latest-wins walk
-    commitEntry(spark, path, target, v, replace = true,
-      staged = Seq.empty, arbiterFor = arbiterFor, op = Some("restore"),
-      schema = Some(schemaStateAt(spark, path, Some(toVersion))))
+    commitEntry(spark, path, target.copy(version = v), target.groups,
+      replace = true, staged = Seq.empty, arbiterFor = arbiterFor,
+      op = Some("restore"), schema = Some(target.schema))
   }
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE` verb):
@@ -1984,17 +1926,16 @@ object VersionedTable {
       asOfVersion: Option[Long] = None): Long = {
     require(src.startsWith("/") || src.contains("://"),
       s"clone source must be an absolute path: $src")
-    require(currentVersion(spark, dst) == 0,
-      s"clone target $dst already has commits")
-    val live = liveGroups(spark, src, asOfVersion)
+    val empty = snapshot(spark, dst)
+    require(empty.version == 0, s"clone target $dst already has commits")
+    val Snapshot(_, live, st, _) = snapshot(spark, src, asOfVersion)
     require(live.nonEmpty,
       s"clone source $src has no live data" +
         asOfVersion.fold("")(v => s" at v$v"))
     val refs = live.map(g => g.copy(name = groupPath(src, g.name),
       dv = g.dv.map(groupPath(src, _))))
-    commitEntry(spark, dst, refs, 0L, replace = true, staged = Seq.empty,
-      op = Some("clone"),
-      schema = Some(schemaStateAt(spark, src, asOfVersion)))
+    commitEntry(spark, dst, empty, refs, replace = true,
+      staged = Seq.empty, op = Some("clone"), schema = Some(st))
   }
 
   /** RENAME COLUMN, metadata-only (the Delta columnMapping idea,
@@ -2019,17 +1960,18 @@ object VersionedTable {
       require(n.nonEmpty && !n.exists(c => ">,\"]".contains(c)),
         s"column name must be free of > , \" ] (log-format limit): $n")
     }
-    val v = currentVersion(spark, path)
-    require(v >= 1, "rename on an empty table")
-    val st = schemaStateAt(spark, path, Some(v))
-    val cols = read(spark, path, Some(v)).get.schema.fieldNames.toSet
+    val snap = snapshot(spark, path)
+    require(snap.version >= 1, "rename on an empty table")
+    val st = snap.schema
+    val cols = readGroups(spark, path, snap.groups, st).get
+      .schema.fieldNames.toSet
     require(cols(oldName), s"column $oldName does not exist (have: " +
       cols.mkString(", ") + ")")
     require(!cols(newName), s"column $newName already exists")
     val ren = (st.renames.map { case (p, l) =>
       if (l == oldName) (p, newName) else (p, l)
     } :+ (oldName -> newName)).filter(pl => pl._1 != pl._2).distinct
-    commitEntry(spark, path, liveGroups(spark, path, Some(v)), v,
+    commitEntry(spark, path, snap, snap.groups,
       replace = true, staged = Seq.empty, op = Some("rename_column"),
       schema = Some(SchemaState(ren, st.drops)))
   }
@@ -2047,11 +1989,10 @@ object VersionedTable {
       colName: String): Long = {
     require(colName.nonEmpty && !colName.exists(c => ">,\"]".contains(c)),
       s"column name must be free of > , \" ] (log-format limit): $colName")
-    val v = currentVersion(spark, path)
+    val snap = snapshot(spark, path)
+    val Snapshot(v, live, st, _) = snap
     require(v >= 1, "drop on an empty table")
-    val st = schemaStateAt(spark, path, Some(v))
-    val live = liveGroups(spark, path, Some(v))
-    val cols = read(spark, path, Some(v)).get.schema.fieldNames.toSet
+    val cols = readGroups(spark, path, live, st).get.schema.fieldNames.toSet
     require(cols(colName), s"column $colName does not exist")
     require(cols.size > 1, "cannot drop the table's last column")
     live.foreach { g =>
@@ -2067,7 +2008,7 @@ object VersionedTable {
             "before dropping it")
       }
     }
-    commitEntry(spark, path, live, v,
+    commitEntry(spark, path, snap, live,
       replace = true, staged = Seq.empty, op = Some("drop_column"),
       schema = Some(SchemaState(st.renames, st.drops :+ colName)))
   }
@@ -2090,8 +2031,8 @@ object VersionedTable {
       statsCol: Option[String] = None): Long = {
     require(srcDir.startsWith("/") || srcDir.contains("://"),
       s"convert source must be an absolute path: $srcDir")
-    require(currentVersion(spark, path) == 0,
-      s"convert target $path already has commits")
+    val empty = snapshot(spark, path)
+    require(empty.version == 0, s"convert target $path already has commits")
     require(!scala.util.Try(spark.read.parquet(srcDir).schema)
         .toOption.forall(_.isEmpty),
       s"convert source $srcDir is not readable parquet")
@@ -2099,9 +2040,9 @@ object VersionedTable {
       case Some(c) => groupStats(spark, srcDir, c)
       case None => (None, Seq.empty[(String, Long, Long)])
     }
-    commitEntry(spark, path, Seq(Group(srcDir,
-        key.map(_._1), key.map(_._2), xs = xs)),
-      0L, replace = true, staged = Seq.empty, op = Some("convert"))
+    commitEntry(spark, path, empty,
+      Seq(Group(srcDir, key.map(_._1), key.map(_._2), xs = xs)),
+      replace = true, staged = Seq.empty, op = Some("convert"))
   }
 
   /** The newest version whose log entry was published at or before
@@ -2114,18 +2055,8 @@ object VersionedTable {
     * it. */
   def versionAtTime(spark: SparkSession, path: String,
       tsMs: Long): Option[Long] = {
-    val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    if (!f.exists(d)) return None
-    f.listStatus(d).toSeq
-      .filter { st =>
-        val n = st.getPath.getName
-        n.startsWith("v") && n.endsWith(".json") &&
-          st.getModificationTime <= tsMs
-      }
-      .map(_.getPath.getName.stripPrefix("v").stripSuffix(".json")
-        .toLong)
-      .sorted.lastOption
+    listLog(fs(spark, logDir(path)), path).entries
+      .filter(_._2.getModificationTime <= tsMs).lastOption.map(_._1)
   }
 
   /** Timestamp-based time travel: [[read]] at
@@ -2147,29 +2078,16 @@ object VersionedTable {
     * per surviving entry, independent of table size. */
   def history(spark: SparkSession, path: String): DataFrame = {
     val f = fs(spark, logDir(path))
-    val d = new Path(logDir(path))
-    val rows: Seq[(Long, Option[String], Option[Long], Int, Boolean,
-        Long)] =
-      if (!f.exists(d)) Seq.empty
-      else f.listStatus(d).toSeq
-        .filter { st =>
-          val n = st.getPath.getName
-          n.startsWith("v") && n.endsWith(".json")
-        }
-        .sortBy(-_.getPath.getName.stripPrefix("v")
-          .stripSuffix(".json").toLong)
-        .map { st =>
-          val raw = readJson(f, st.getPath)
-          val v = jsonField(raw, "version").toLong
-          val op = if (!raw.contains("\"op\":")) None
-            else Some(jsonField(raw, "op")
-              .stripPrefix("\"").stripSuffix("\""))
-          val batch = if (!raw.contains("\"batch\":")) None
-            else Some(jsonField(raw, "batch").toLong)
-          (v, op, batch, parseGroups(raw).size,
-            jsonField(raw, "replace").toBoolean,
-            st.getModificationTime)
-        }
+    val rows = listLog(f, path).entries.reverse.map { case (_, st) =>
+      val raw = readJson(f, st.getPath)
+      val v = jsonField(raw, "version").toLong
+      val op = if (!raw.contains("\"op\":")) None
+        else Some(jsonField(raw, "op").stripPrefix("\"").stripSuffix("\""))
+      val batch = if (!raw.contains("\"batch\":")) None
+        else Some(jsonField(raw, "batch").toLong)
+      (v, op, batch, parseGroups(raw).size,
+        jsonField(raw, "replace").toBoolean, st.getModificationTime)
+    }
     import spark.implicits._
     rows.toDF("version", "op", "batch", "n_groups", "replace", "ts_ms")
   }

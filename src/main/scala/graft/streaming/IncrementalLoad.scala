@@ -61,27 +61,6 @@ object IncrementalLoad {
       .start()
   }
 
-  /** Same for multiLine JSON staging (SportRadar payloads). */
-  def runJson(spark: SparkSession, schema: StructType, srcDir: String,
-      targetDir: String, checkpointDir: String,
-      transform: DataFrame => DataFrame,
-      pathGlob: String = "*.json",
-      maxFilesPerTrigger: Option[Int] = None,
-      maxBytesPerTrigger: Option[String] = None): StreamingQuery = {
-    val src = rateLimited(spark.readStream
-      .schema(schema)
-      .option("pathGlobFilter", pathGlob),
-      maxFilesPerTrigger, maxBytesPerTrigger)
-      .option("multiLine", true)
-      .json(srcDir)
-    transform(src).writeStream
-      .format("parquet")
-      .option("path", targetDir)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
   /** Event-time windowed aggregation with watermarking (SURVEY.md
     * §2.8 X5 streaming form): 10-minute tumbling counts per type,
     * tolerating 5 minutes of lateness. The batch testdata drives it

@@ -278,6 +278,39 @@ class VersionedTableSchemaSpec extends AnyFunSuite {
     assert(VersionedTable.read(spark, p).get.count() == 2)
   }
 
+  test("commitAppendWithRetry re-validates after a lost race to a " +
+      "restore that leaves the schema state unchanged but takes away " +
+      "a column the batch carries: the batch is refused, its staged " +
+      "group cleaned") {
+    val p = tmp()
+    import spark.implicits._
+    val v1 = VersionedTable.commit(spark, p,
+      Seq((1L, 10L)).toDF("k", "pay"), 0L, statsCol = Some("k"))
+    VersionedTable.commit(spark, p,
+      Seq((2L, 20L, "x")).toDF("k", "pay", "extra"), v1,
+      statsCol = Some("k"), allowEvolution = true)
+    var first = true
+    val loseOnceToRestore: org.apache.hadoop.fs.FileSystem =>
+        graft.sources.CommitArbiter =
+      _ => (f, entry, payload) =>
+        if (first) {
+          first = false
+          VersionedTable.restore(spark, p, v1)
+          false
+        } else graft.sources.CommitArbiter.forFs(f)
+          .publish(f, entry, payload)
+    val groupsBefore = dataGroupCount(p)
+    val err = intercept[IllegalArgumentException] {
+      VersionedTable.commitAppendWithRetry(spark, p,
+        Seq((3L, 30L, "y")).toDF("k", "pay", "extra"),
+        statsCol = Some("k"), arbiterFor = loseOnceToRestore)
+    }
+    assert(err.getMessage.contains("extra"), err.getMessage)
+    assert(dataGroupCount(p) == groupsBefore,
+      "refused batch must clean its staged group")
+    assert(VersionedTable.read(spark, p).get.columns.toSeq == Seq("k", "pay"))
+  }
+
   test("changeFeed between two post-rename versions diffs under the " +
       "logical names") {
     val p = tmp()

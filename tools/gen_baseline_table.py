@@ -1,7 +1,8 @@
 #!/usr/bin/env python3
 """Regenerate the per-query table in BASELINE.md from BENCH_DETAIL.json.
 
-Usage: gen_baseline_table.py [label]
+Usage (from the repository root, where Bench writes BENCH_DETAIL.json):
+  python3 tools/gen_baseline_table.py [label]
   label: short provenance tag for the table header (e.g. "round-10 run").
 
 Refuses to publish failure sentinels: queries recorded as v < 0 are
@@ -11,7 +12,7 @@ baseline containing -1.00 rows would normalize a functional regression.
 import json, re, sys
 
 label = sys.argv[1] if len(sys.argv) > 1 else "local run"
-detail = json.load(open("/root/repo/BENCH_DETAIL.json"))
+detail = json.load(open("BENCH_DETAIL.json"))
 qs = detail["queries"]
 ok = {k: v for k, v in qs.items() if v >= 0}
 failed = sorted(k for k, v in qs.items() if v < 0)
@@ -28,9 +29,9 @@ table = (f"### Per-query seconds (sf0.1, local[32], {len(ok)} queries, {label})\
          f"| query | sec |\n|---|---|\n{rows}\n\n"
          f"Total: {total:.1f} s.\n{note}")
 
-src = open("/root/repo/BASELINE.md").read()
+src = open("BASELINE.md").read()
 new = re.sub(r"### Per-query seconds.*", table, src, flags=re.S)
 assert new != src
-open("/root/repo/BASELINE.md", "w").write(new)
+open("BASELINE.md", "w").write(new)
 print(f"table regenerated: {len(ok)} queries, total {total:.1f}s"
       + (f", {len(failed)} failed EXCLUDED" if failed else ""))
