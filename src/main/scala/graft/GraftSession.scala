@@ -13,6 +13,13 @@ import org.apache.spark.sql.SparkSession
   *    ~2-3x total executor cores (AQE coalesces down).
   *  - Session timezone pinned UTC so timestamp semantics match the
   *    DuckDB oracle and are cluster-location-independent.
+  *  - Non-blocking reference cleanup: the ContextCleaner frees each
+  *    job's task-binary broadcast and each truncation's persisted RDD
+  *    after a GC finds them; blocking, it waits ~5 ms per item, so a
+  *    backlog from a few passes of the small graph operators keeps
+  *    the block manager's removal pools busy for over half a second.
+  *    Local sessions have one block manager, so removals run
+  *    concurrently (shuffle cleanup is non-blocking by default).
   */
 object GraftSession {
   def local(cores: Int = 32, appName: String = "graft"): SparkSession = {
@@ -31,6 +38,7 @@ object GraftSession {
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.cleaner.referenceTracking.blocking", "false")
       // testdata events.parquet stores INT64 nanosecond timestamps
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()

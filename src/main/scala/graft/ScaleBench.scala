@@ -266,6 +266,62 @@ object ScaleBench {
     // 1x/10x readings carry the claim.
     "j13_grid_radius")
 
+  /** The single-task arm against the distributed rounds of the four
+    * operators that switch to it ([[graft.ops.Iter.local]]), at
+    * relation sizes around [[graft.ops.Iter.LocalRows]]: one
+    * label-shuffled chain (ranks), the same chain closed into one
+    * cycle (cycleLabels) and the same chain as undirected edges
+    * (large-star), and chorded 64-node rings sized so nodes plus
+    * symmetrized edges make the row count (SCC). Each arm is timed
+    * once on a cached input, outputs `require`d equal; `rounds` is
+    * the distributed round count. SCALE.md records the readings. */
+  private[graft] def localArm(spark: SparkSession): String = {
+    def timed[A](f: => A): (A, Double) = {
+      val t0 = System.nanoTime(); val a = f; (a, (System.nanoTime() - t0) / 1e9)
+    }
+    def digest(df: DataFrame): Long = df
+      .agg(sum(pmod(xxhash64(col("*")), lit(1000000007L)))).head().getLong(0)
+    def both(f: Long => DataFrame): (Double, Double) = {
+      val (a, local) = timed(digest(f(Long.MaxValue)))
+      val (b, dist) = timed(digest(f(-1L)))
+      require(a == b, s"single-task arm differs from the rounds: $a vs $b")
+      (local, dist)
+    }
+    Seq(1L << 10, 1L << 14, 1L << 17, 1L << 20).map { n =>
+      val pos = spark.range(1, n + 1)
+        .select(col("id").as("p"), xxhash64(col("id")).as("label"))
+      val chain = pos.as("x")
+        .join(pos.as("y"), col("x.p") === col("y.p") + 1, "left")
+        .select(col("x.label").as("node"),
+          coalesce(col("y.label"), col("x.label")).as("succ")).cache()
+      val cycle = pos.as("x")
+        .join(pos.as("y"), col("y.p") === col("x.p") % n + 1)
+        .select(col("x.label").as("node"), col("y.label").as("succ"))
+        .cache()
+      val ring = 64L
+      val groups = math.max(1L, n / 13 / ring) // 6 chords: 13 rows a node
+      val nodes = spark.range(0, groups * ring).select(col("id").as("v"))
+        .cache()
+      val edges = Seq(1, 2, 4, 8, 16, 32).map { step =>
+        nodes.select(col("v").as("u"), (col("v") % groups +
+          ((expr(s"v DIV $groups") + step) % ring) * groups).as("w"))
+      }.reduce(_ unionByName _).cache()
+      Seq(chain, cycle, nodes, edges).foreach(_.count())
+      val lr = both(c => graft.ops.ListRank.ranks(chain, None, 64, None, c))
+      val cl = both(c =>
+        graft.ops.ListRank.cycleLabels(cycle, None, 64, None, c))
+      val sc = both(c => graft.ops.Scc.components(nodes, edges, None, 64, c))
+      val cc = both(c => graft.ops.Connect.largeStarRounds(chain
+        .filter(col("node") =!= col("succ")), "node", "succ", 64, None, c)._1)
+      Seq(chain, cycle, nodes, edges).foreach(_.unpersist())
+      def js(t: (Double, Double)) =
+        f"""{"local_sec":${t._1}%.2f,"rounds_sec":${t._2}%.2f}"""
+      val rounds = 64 - java.lang.Long.numberOfLeadingZeros(n - 1)
+      s""""n$n":{"rounds":$rounds,"ranks":${js(lr)},""" +
+        s""""cycleLabels":${js(cl)},"scc":${js(sc)},"largeStar":${js(cc)}}"""
+    }.mkString("{", ",", "}")
+  }
+
   def main(args: Array[String]): Unit = {
     val src = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -343,7 +399,10 @@ object ScaleBench {
           (df.filter(col("comp") === 1L).count(), r)
         }
         val ((lsN, lsRounds), lsSec) = timed {
-          val (df, r) = ops.Connect.largeStarRounds(chain, "s", "t")
+          // cap -1: the distributed rounds this row prices (a 128-node
+          // chain would otherwise finish in the single-task arm)
+          val (df, r) = ops.Connect.largeStarRounds(chain, "s", "t", 30,
+            None, -1L)
           (df.filter(col("comp") === 1L).count(), r)
         }
         require(mlN == 128 && lsN == 128, s"CC labels wrong: $mlN vs $lsN")
@@ -869,7 +928,9 @@ object ScaleBench {
           val links = planted(n).cache()
           links.count()
           val t0 = System.nanoTime()
-          val viaDouble = graft.ops.ListRank.ranks(links)
+          // cap -1: distributed Wyllie rounds (100 k would otherwise
+          // finish in the single-task arm; `local_arm` prices that)
+          val viaDouble = graft.ops.ListRank.ranks(links, None, 64, None, -1L)
             .agg(sum(col("rank"))).head().getLong(0)
           val dblSec = (System.nanoTime() - t0) / 1e9
           val tC = System.nanoTime()
@@ -969,7 +1030,7 @@ object ScaleBench {
           case (ng, rs) =>
             val (nodes, edges) = planted(ng, rs)
             val t0 = System.nanoTime()
-            val ids = graft.ops.Scc.components(nodes, edges)
+            val ids = graft.ops.Scc.components(nodes, edges, None, 64, -1L)
             val nScc = ids.select(col("scc_id")).distinct().count()
             val sec = (System.nanoTime() - t0) / 1e9
             require(nScc == ng, s"expected $ng components, got $nScc")
@@ -2140,6 +2201,9 @@ object ScaleBench {
         }.mkString(",")
         System.err.println(s"""[scalebench] {"restore_clone":{$js}}""")
       }
+
+      if (blockOn("local_arm"))
+        System.err.println(s"""[scalebench] {"local_arm":${localArm(spark)}}""")
 
       val c100 = rows.filter(_._4 > 0)
       // a filter selecting only SkipAt100 rows leaves c100 empty —

@@ -1,8 +1,11 @@
 package graft.ops
 
+import scala.collection.mutable
+
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Connected components — the clustering step that turns pairwise
   * near-duplicate edges into whole duplicate GROUPS (one-round dedup
@@ -29,8 +32,10 @@ import org.apache.spark.sql.functions._
   * Convergence costs NO extra job in either variant: the
   * changed-row / edge-set-checksum check rides the same action that
   * materializes the round (an accumulator bumped while the
-  * checkpoint writes), so the Spark UI shows exactly one job per
-  * round.
+  * checkpoint writes), so a distributed round is one job (two under
+  * reliable checkpointing, see [[Iter.truncate]]). Large-star's
+  * rounds over an edge set of at most [[Iter.LocalRows]] rows run
+  * together as ONE job in a single task ([[Iter.local]]).
   *
   * Lineage is truncated per round via [[Iter.truncate]]:
   * `localCheckpoint` by default, RELIABLE checkpointing when
@@ -102,67 +107,95 @@ object Connect extends Logging {
       checkpointDir: Option[String] = None): DataFrame =
     largeStarRounds(edges, srcCol, dstCol, maxIter, checkpointDir)._1
 
-  /** [[connectedComponentsLargeStar]] plus the number of rounds. */
+  /** [[connectedComponentsLargeStar]] plus the number of rounds.
+    *
+    * When the edge set — the input's, counted on its truncation pass,
+    * or any round's — has at most [[Iter.LocalRows]] rows with
+    * integral ids, the remaining rounds finish in ONE task
+    * ([[Iter.local]]): the same large-star/small-star rounds and the
+    * same (count, [[Iter.mix]] checksum) convergence test, so the same
+    * round count and the same `maxIter` warning. */
   def largeStarRounds(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 30, checkpointDir: Option[String] = None)
-      : (DataFrame, Int) = {
+      : (DataFrame, Int) =
+    largeStarRounds(edges, srcCol, dstCol, maxIter, checkpointDir,
+      Iter.LocalRows)
+
+  /** [[largeStarRounds]] with the single-task cap as an argument (-1
+    * always runs the distributed rounds). */
+  private[graft] def largeStarRounds(edges: DataFrame, srcCol: String,
+      dstCol: String, maxIter: Int, checkpointDir: Option[String],
+      localRows: Long): (DataFrame, Int) = {
     val spark = edges.sparkSession
     val nodes = edges.select(col(srcCol).as("id"))
       .union(edges.select(col(dstCol).as("id"))).distinct()
     // canonical undirected edges u > v; self-loops carry no information
-    var e = Iter.truncate(
+    var (e, rows) = Iter.truncateCounted(
       edges.select(greatest(col(srcCol), col(dstCol)).as("u"),
         least(col(srcCol), col(dstCol)).as("v"))
         .filter(col("u") =!= col("v")).distinct(), checkpointDir)
+    val single = Iter.integral(e, "u", "v")
     var iter = 0
     var prev = (-1L, -1L)
     var done = false
     while (!done && iter < maxIter) {
-      // LARGE-STAR: for each node u (symmetric neighbourhood), link
-      // every strictly larger neighbour v to m = min(Γ(u) ∪ {u}).
-      // Emitted (v, m) has v > u >= m, so it is already canonical.
-      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-      val lsm = sym.groupBy(col("u"))
-        .agg(min(col("v")).as("mn"))
-        .select(col("u").as("cu"), least(col("u"), col("mn")).as("m"))
-      val ls = sym.join(lsm, col("u") === col("cu"))
-        .filter(col("v") > col("u"))
-        .select(col("v").as("u"), col("m").as("v"))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      // SMALL-STAR on the canonical (u > all its v) orientation: link
-      // every smaller neighbour and u itself to m = min of them.
-      val ssm = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-      val ss = ls.join(ssm, Seq("u"))
-        .filter(col("v") =!= col("m"))
-        .select(col("v").as("u"), col("m").as("v")) // v > m: canonical
-        .union(ssm.select(col("u"), col("m").as("v")))
-        .filter(col("u") =!= col("v"))
-        .distinct()
-      // stability check (count + commutative checksum) rides the
-      // materializing job via accumulators — one compute pass per
-      // round (reliable-checkpoint mode adds a cache-backed write
-      // job that does not recompute the round; see Iter.truncate)
-      val cnt = spark.sparkContext.longAccumulator(s"graft.ccstar.cnt.$iter")
-      val chk = spark.sparkContext.longAccumulator(s"graft.ccstar.chk.$iter")
-      val schema = ss.schema
-      val counted = ss.mapPartitions { it =>
-        it.map { r =>
-          cnt.add(1L)
-          chk.add(Iter.mix(r.getAs[Number](0).longValue(),
-            r.getAs[Number](1).longValue()))
-          r
-        }
-      }(Encoders.row(schema))
-      e = Iter.truncate(counted, checkpointDir)
-      val cur = (cnt.value.longValue(), chk.value.longValue())
-      // a task retry inflates cnt/chk, making THIS round's pair
-      // differ from the previous one — the worst case is a spurious
-      // extra round; retry noise can never manufacture the stable
-      // round-to-round equality that declares convergence early
-      done = cur == prev
-      prev = cur
-      iter += 1
+      val rest =
+        if (single && rows <= localRows)
+          starLocal(e, iter, prev, maxIter, checkpointDir)
+        else None
+      rest match {
+        // the kernel ran every remaining round: converged or maxIter
+        case Some((fin, ran, conv)) => e = fin; iter += ran; done = conv
+        case None =>
+          // LARGE-STAR: for each node u (symmetric neighbourhood), link
+          // every strictly larger neighbour v to m = min(Γ(u) ∪ {u}).
+          // Emitted (v, m) has v > u >= m, so it is already canonical.
+          val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
+          val lsm = sym.groupBy(col("u"))
+            .agg(min(col("v")).as("mn"))
+            .select(col("u").as("cu"), least(col("u"), col("mn")).as("m"))
+          val ls = sym.join(lsm, col("u") === col("cu"))
+            .filter(col("v") > col("u"))
+            .select(col("v").as("u"), col("m").as("v"))
+            .filter(col("u") =!= col("v"))
+            .distinct()
+          // SMALL-STAR on the canonical (u > all its v) orientation:
+          // link every smaller neighbour and u itself to m = min of them.
+          val ssm = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
+          val ss = ls.join(ssm, Seq("u"))
+            .filter(col("v") =!= col("m"))
+            .select(col("v").as("u"), col("m").as("v")) // v > m: canonical
+            .union(ssm.select(col("u"), col("m").as("v")))
+            .filter(col("u") =!= col("v"))
+            .distinct()
+          // stability check (count + commutative checksum) rides the
+          // materializing job via accumulators — one compute pass per
+          // round (reliable-checkpoint mode adds a cache-backed write
+          // job that does not recompute the round; see Iter.truncate)
+          val cnt =
+            spark.sparkContext.longAccumulator(s"graft.ccstar.cnt.$iter")
+          val chk =
+            spark.sparkContext.longAccumulator(s"graft.ccstar.chk.$iter")
+          val schema = ss.schema
+          val counted = ss.mapPartitions { it =>
+            it.map { r =>
+              cnt.add(1L)
+              chk.add(Iter.mix(r.getAs[Number](0).longValue(),
+                r.getAs[Number](1).longValue()))
+              r
+            }
+          }(Encoders.row(schema))
+          e = Iter.truncate(counted, checkpointDir)
+          val cur = (cnt.value.longValue(), chk.value.longValue())
+          // a task retry inflates cnt/chk, making THIS round's pair
+          // differ from the previous one — the worst case is a spurious
+          // extra round; retry noise can never manufacture the stable
+          // round-to-round equality that declares convergence early
+          done = cur == prev
+          prev = cur
+          rows = cur._1
+          iter += 1
+      }
     }
     if (!done) {
       logWarning(s"large-star CC hit maxIter=$maxIter before the edge set " +
@@ -176,6 +209,59 @@ object Connect extends Logging {
     val out = nodes.join(comp, nodes("id") === comp("u"), "left_outer")
       .select(col("id"), coalesce(col("cmp"), col("id")).as("comp"))
     (out, iter)
+  }
+
+  /** The remaining rounds of [[largeStarRounds]] in one task
+    * ([[Iter.local]]), from round `iter0` whose predecessor left the
+    * (count, checksum) pair `prev0`: the same large-star then
+    * small-star rewiring of the same canonical edge set, stopping on
+    * the same stable pair or at `maxIter`. Returns the final edges
+    * (typed like `e`), the rounds run and whether they converged. */
+  private def starLocal(e: DataFrame, iter0: Int, prev0: (Long, Long),
+      maxIter: Int, checkpointDir: Option[String])
+      : Option[(DataFrame, Int, Boolean)] = {
+    val sc = e.sparkSession.sparkContext
+    val ran = sc.longAccumulator("graft.ccstar.local.rounds")
+    val converged = sc.longAccumulator("graft.ccstar.local.converged")
+    val schema = StructType(Seq(StructField("u", LongType),
+      StructField("v", LongType)))
+    Iter.local(e.select(col("u").cast(LongType), col("v").cast(LongType)),
+      schema, checkpointDir) { it =>
+      var es: Iterable[(Long, Long)] =
+        it.map(r => (r.getLong(0), r.getLong(1))).toVector
+      var iter = iter0
+      var prev = prev0
+      var done = false
+      while (!done && iter < maxIter) {
+        // LARGE-STAR: m(x) = min(Γ(x) ∪ {x}); each edge u > v links u
+        // to m(v)
+        val m = new mutable.LongMap[Long]()
+        def lower(x: Long, y: Long): Unit =
+          m(x) = math.min(m.getOrElse(x, x), y)
+        es.foreach { case (u, v) => lower(u, v); lower(v, u) }
+        val ls = es.iterator.map { case (u, v) => (u, m(v)) }.toSet
+        // SMALL-STAR: every smaller neighbour of u, and u itself, links
+        // to m2(u), the least of them
+        val m2 = new mutable.LongMap[Long]()
+        ls.foreach { case (u, v) => m2(u) = math.min(m2.getOrElse(u, v), v) }
+        val ss = mutable.HashSet.empty[(Long, Long)]
+        ls.foreach { case (u, v) => if (v != m2(u)) ss += ((v, m2(u))) }
+        m2.foreach { case (u, mu) => ss += ((u, mu)) }
+        val cur = (ss.size.toLong,
+          ss.iterator.map { case (u, v) => Iter.mix(u, v) }.sum)
+        done = cur == prev
+        prev = cur
+        es = ss
+        iter += 1
+      }
+      ran.add(iter - iter0)
+      if (done) converged.add(1L)
+      es.iterator.map { case (u, v) => Row(u, v) }.toSeq
+    }.map { df =>
+      (df.select(col("u").cast(e.schema("u").dataType),
+        col("v").cast(e.schema("v").dataType)),
+        ran.value.toInt, !converged.isZero)
+    }
   }
 
   /** Message-form k-core peel — the BEYOND-BROADCAST arm of

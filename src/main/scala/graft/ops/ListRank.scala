@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
 /** Distributed LIST RANKING by pointer doubling (Wyllie's algorithm) —
   * the canonical O(log n)-round technique for successor-chain data
@@ -23,11 +26,13 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: one self-join per round, both sides the same n-row
   * relation shuffled on the join key; lineage truncated per round
-  * ([[Iter.truncate]]); convergence checked by one count per round.
-  * 100 TB: n rows per round × log2(n) rounds, each a plain keyed
-  * shuffle — contrast with the single-partition window, which is the
-  * one shape that CANNOT distribute (SCALE.md `list_rank` prices
-  * both arms).
+  * ([[Iter.truncate]]); convergence checked once, after the last
+  * round. 100 TB: n rows per round × log2(n) rounds, each a plain
+  * keyed shuffle — contrast with the single-partition window, which
+  * is the one shape that CANNOT distribute (SCALE.md `list_rank`
+  * prices both arms). Relations of at most [[Iter.LocalRows]] rows
+  * run the same rounds in one task instead ([[Iter.local]]; SCALE.md
+  * `local_arm`).
   */
 object ListRank {
 
@@ -39,27 +44,53 @@ object ListRank {
     *   to ceil(log2 bound) rounds, capped by n (always sound); unlike
     *   cycleLabels a TOO-SMALL bound is caught loudly here — the
     *   parked check refuses an unconverged run rather than returning
-    *   short ranks. */
+    *   short ranks.
+    *
+    * Inputs of at most [[Iter.LocalRows]] links with integral ids
+    * (the up-front `n`) finish in ONE task ([[Iter.local]]): the same
+    * doubling rounds and the same dangling and parked refusals, in
+    * memory — one job instead of one per round. */
   def ranks(links: DataFrame, checkpointDir: Option[String] = None,
-      maxRounds: Int = 64, reachBound: Option[Long] = None): DataFrame = {
+      maxRounds: Int = 64, reachBound: Option[Long] = None): DataFrame =
+    ranks(links, checkpointDir, maxRounds, reachBound, Iter.LocalRows)
+
+  /** [[ranks]] with the single-task cap as an argument (-1 always runs
+    * the distributed rounds). */
+  private[graft] def ranks(links: DataFrame, checkpointDir: Option[String],
+      maxRounds: Int, reachBound: Option[Long], localRows: Long)
+      : DataFrame = {
     // after k rounds every pointer has jumped 2^k links, and no chain
     // is longer than the relation itself — so ceil(log2 n) rounds
     // suffice UNCONDITIONALLY, and the loop needs no per-round
-    // convergence action (half the jobs): one n-count up front, one
-    // parked-check at the end (which doubles as the rootless-cycle
-    // refusal — a cycle never parks).
+    // convergence action (half the jobs): one n-count up front (on the
+    // input's truncation pass), one parked-check at the end (which
+    // doubles as the rootless-cycle refusal — a cycle never parks).
     // truncate the input once: the dangling check, the n-count, and
     // the loop's round 0 all reference it, and an expensive upstream
-    // plan (window-built fixtures) must not re-execute per reference
-    val lk = Iter.truncate(links.select(col("node"), col("succ")),
-      checkpointDir)
-    val n0 = lk.count()
+    // plan (window-built fixtures) must not re-execute per reference;
+    // the count rides that truncation pass
+    val (lk, n0) = Iter.truncateCounted(
+      links.select(col("node"), col("succ")), checkpointDir)
     val n = math.min(n0,
       reachBound.map(math.max(_, 1L)).getOrElse(Long.MaxValue))
     val bound =
       if (n <= 1) 0
       else 64 - java.lang.Long.numberOfLeadingZeros(n - 1) // ceil(log2 n)
     val rounds = math.min(bound, maxRounds)
+    val single =
+      if (n0 > localRows || !Iter.integral(lk, "node", "succ")) None
+      else doublingLocal(lk, n0, rounds, checkpointDir, ranked = true)
+    single.map(_.select(
+      col("node").cast(lk.schema("node").dataType), col("x").as("rank")))
+      .getOrElse(doubling(lk, n0, rounds, checkpointDir, ranked = true)
+        .withColumnRenamed("x", "rank"))
+  }
+
+  /** The distributed rounds of [[ranks]] (`ranked`: x is the distance,
+    * summed) and [[cycleLabels]] (x is the min label, least): one
+    * self-join + truncation per round. Returns (node, x). */
+  private def doubling(lk: DataFrame, n0: Long, rounds: Int,
+      checkpointDir: Option[String], ranked: Boolean): DataFrame = {
     // DANGLING pointers (succ values that are not nodes) must refuse:
     // the self-join silently DROPS such rows mid-iteration — surviving
     // nodes would "converge" with wrong ranks and the vanished ones
@@ -72,37 +103,120 @@ object ListRank {
     if (rounds == 0) {
       val dangling = lk.as("x").join(lk.as("y"),
         col("x.succ") === col("y.node"), "left_anti").count()
-      require(dangling == 0,
-        s"$dangling dangling successor pointer(s): succ values that " +
-          "are not nodes")
+      require(dangling == 0, danglingMsg(dangling))
     }
-    // state: (node, ptr, dist); roots start parked at dist 0
+    // state: (node, ptr, x); ranks: roots start parked at distance 0;
+    // labels: x = min label among positions [0, 2^k) of the successor
+    // walk, ptr = successor 2^k ahead
     var state = lk.select(col("node"), col("succ").as("ptr"),
-      when(col("succ") === col("node"), lit(0L)).otherwise(lit(1L))
-        .as("dist"))
+      (if (ranked) when(col("succ") === col("node"), lit(0L))
+        .otherwise(lit(1L)) else col("node")).as("x"))
     (0 until rounds).foreach { i =>
       val jumped = state.as("a")
         .join(state.as("b"), col("a.ptr") === col("b.node"))
         .select(col("a.node").as("node"), col("b.ptr").as("ptr"),
-          (col("a.dist") + col("b.dist")).as("dist"))
+          (if (ranked) col("a.x") + col("b.x")
+           else least(col("a.x"), col("b.x"))).as("x"))
       state = Iter.truncate(jumped, checkpointDir)
       if (i == 0) {
         val c = state.count()
-        require(c == n0,
-          s"${n0 - c} dangling successor pointer(s): succ values that " +
-            "are not nodes")
+        require(c == n0, danglingMsg(n0 - c))
       }
     }
     // parked ⟺ the pointer sits on a root ⟺ one more jump would add
     // 0 (only roots carry dist 0 — non-root dist starts at 1 and
     // never shrinks). One join-count, once — not per round.
-    val pending = state.as("s")
-      .join(state.as("t"), col("s.ptr") === col("t.node"))
-      .filter(col("t.dist") =!= 0L).count()
-    require(pending == 0,
-      s"list ranking did not converge in $rounds rounds " +
-        "(rootless cycle in the input, or maxRounds too low)")
-    state.select(col("node"), col("dist").as("rank"))
+    if (ranked) {
+      val pending = state.as("s")
+        .join(state.as("t"), col("s.ptr") === col("t.node"))
+        .filter(col("t.x") =!= 0L).count()
+      require(pending == 0, unparkedMsg(rounds))
+    }
+    state.select(col("node"), col("x"))
+  }
+
+  private def danglingMsg(k: Long): String =
+    s"$k dangling successor pointer(s): succ values that are not nodes"
+
+  private def unparkedMsg(rounds: Int): String =
+    s"list ranking did not converge in $rounds rounds " +
+      "(rootless cycle in the input, or maxRounds too low)"
+
+  /** The rows of a (node, …) bag by node, for the in-memory self-join:
+    * `head(k)` is the last row with node k (-1 when none), `next(j)`
+    * the row before j with the same node, `count(k)` how many. */
+  private final class ByNode(ns: Array[Long]) {
+    private val last = new mutable.LongMap[Int](ns.length)
+    private val counts = new mutable.LongMap[Int](ns.length)
+    val next = new Array[Int](ns.length)
+    ns.indices.foreach { j =>
+      next(j) = last.getOrElse(ns(j), -1)
+      last(ns(j)) = j
+      counts(ns(j)) = counts.getOrElse(ns(j), 0) + 1
+    }
+    def head(k: Long): Int = last.getOrElse(k, -1)
+    def count(k: Long): Int = counts.getOrElse(k, 0)
+  }
+
+  /** [[doubling]] in one task ([[Iter.local]]): the same `rounds`
+    * self-joins over the same bag of (node, ptr, x) rows, so duplicate
+    * node ids multiply exactly as the relational join does, and the
+    * round-1 dangling count and the parked check refuse with the
+    * distributed arm's messages. Returns (node, x) longs; None (the
+    * distributed rounds run) on a null id or a join that would outgrow
+    * both the input and [[Iter.LocalRows]] rows (only duplicate node
+    * ids grow it). */
+  private def doublingLocal(lk: DataFrame, n0: Long, rounds: Int,
+      checkpointDir: Option[String], ranked: Boolean): Option[DataFrame] = {
+    val schema = StructType(Seq(StructField("node", LongType),
+      StructField("x", LongType)))
+    val in = lk.select(col("node").cast(LongType), col("succ").cast(LongType))
+    Iter.local(in, schema, checkpointDir) { it =>
+      val nb = mutable.ArrayBuilder.make[Long]
+      val pb = mutable.ArrayBuilder.make[Long]
+      it.foreach { r =>
+        if (r.isNullAt(0) || r.isNullAt(1)) throw Iter.Decline
+        nb += r.getLong(0)
+        pb += r.getLong(1)
+      }
+      var ns = nb.result()
+      var ps = pb.result()
+      var xs =
+        if (!ranked) ns.clone()
+        else Array.tabulate(ns.length)(j => if (ps(j) == ns(j)) 0L else 1L)
+      if (rounds == 0) {
+        val at = new ByNode(ns)
+        Iter.refuse(ps.forall(at.count(_) > 0),
+          danglingMsg(ps.count(at.count(_) == 0)))
+      }
+      (0 until rounds).foreach { i =>
+        val at = new ByNode(ns)
+        val c = ps.iterator.map(at.count(_).toLong).sum
+        if (i == 0) Iter.refuse(c == n0, danglingMsg(n0 - c))
+        if (c > math.max(n0, Iter.LocalRows)) throw Iter.Decline
+        val (ns2, ps2, xs2) = (new Array[Long](c.toInt),
+          new Array[Long](c.toInt), new Array[Long](c.toInt))
+        var o = 0
+        ns.indices.foreach { a =>
+          var b = at.head(ps(a))
+          while (b >= 0) {
+            ns2(o) = ns(a)
+            ps2(o) = ps(b)
+            xs2(o) = if (ranked) xs(a) + xs(b) else math.min(xs(a), xs(b))
+            o += 1
+            b = at.next(b)
+          }
+        }
+        ns = ns2; ps = ps2; xs = xs2
+      }
+      if (ranked) {
+        // parked: no pointer sits on a row of non-zero distance
+        val moving = new mutable.LongMap[Unit]()
+        ns.indices.foreach(j => if (xs(j) != 0L) moving(ns(j)) = ())
+        Iter.refuse(!ps.exists(moving.contains), unparkedMsg(rounds))
+      }
+      ns.indices.map(j => Row(ns(j), xs(j)))
+    }
   }
 
   /** List ranking by INDEPENDENT-SET CONTRACTION (the O(n)-WORK form,
@@ -279,12 +393,22 @@ object ListRank {
     *
     * Input must be FUNCTIONAL (node unique in `links`); a node with
     * two successors would duplicate through the self-join. Returns
-    * (node, label). */
+    * (node, label).
+    *
+    * Inputs of at most [[Iter.LocalRows]] links with integral ids
+    * (the up-front `n`) finish in ONE task ([[Iter.local]]) — the same
+    * min-label doubling and dangling refusal, in memory. */
   def cycleLabels(links: DataFrame, checkpointDir: Option[String] = None,
-      maxRounds: Int = 64, reachBound: Option[Long] = None): DataFrame = {
-    val lk = Iter.truncate(links.select(col("node"), col("succ")),
-      checkpointDir)
-    val n = lk.count()
+      maxRounds: Int = 64, reachBound: Option[Long] = None): DataFrame =
+    cycleLabels(links, checkpointDir, maxRounds, reachBound, Iter.LocalRows)
+
+  /** [[cycleLabels]] with the single-task cap as an argument (-1
+    * always runs the distributed rounds). */
+  private[graft] def cycleLabels(links: DataFrame,
+      checkpointDir: Option[String], maxRounds: Int,
+      reachBound: Option[Long], localRows: Long): DataFrame = {
+    val (lk, n) = Iter.truncateCounted(
+      links.select(col("node"), col("succ")), checkpointDir)
     // `reachBound` (round-16): a caller that KNOWS the longest forward
     // reach (e.g. the max cycle length of a permutation it just built)
     // can bound the doubling at ceil(log2 bound) instead of
@@ -300,34 +424,13 @@ object ListRank {
     require(rounds <= maxRounds,
       s"cycle labeling needs $rounds rounds for horizon $horizon " +
         s"($n links) (> maxRounds)")
-    // dangling-pointer refusal, the ranks() round-16 form: ride round
-    // 1's materialized count (the self-join drops exactly the dangling
-    // rows) instead of a dedicated anti-join + count pass; only the
-    // no-join path still pays the explicit probe
-    if (rounds == 0) {
-      val dangling = lk.as("x").join(lk.as("y"),
-        col("x.succ") === col("y.node"), "left_anti").count()
-      require(dangling == 0,
-        s"$dangling dangling successor pointer(s): succ values that " +
-          "are not nodes")
-    }
-    // state: (node, ptr, mn) — mn = min label among positions
-    // [0, 2^k) of the successor walk; ptr = successor 2^k ahead
-    var state = lk.select(col("node"), col("succ").as("ptr"),
-      col("node").as("mn"))
-    (0 until rounds).foreach { i =>
-      val jumped = state.as("a")
-        .join(state.as("b"), col("a.ptr") === col("b.node"))
-        .select(col("a.node").as("node"), col("b.ptr").as("ptr"),
-          least(col("a.mn"), col("b.mn")).as("mn"))
-      state = Iter.truncate(jumped, checkpointDir)
-      if (i == 0) {
-        val c = state.count()
-        require(c == n,
-          s"${n - c} dangling successor pointer(s): succ values that " +
-            "are not nodes")
-      }
-    }
-    state.select(col("node"), col("mn").as("label"))
+    val single =
+      if (n > localRows || !Iter.integral(lk, "node", "succ")) None
+      else doublingLocal(lk, n, rounds, checkpointDir, ranked = false)
+    single.map { df =>
+      val t = lk.schema("node").dataType
+      df.select(col("node").cast(t), col("x").cast(t).as("label"))
+    }.getOrElse(doubling(lk, n, rounds, checkpointDir, ranked = false)
+      .withColumnRenamed("x", "label"))
   }
 }

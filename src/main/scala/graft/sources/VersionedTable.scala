@@ -279,9 +279,12 @@ object VersionedTable {
     * the ordered live groups (with stats), the column-mapping state in
     * effect there, and `schemaAt`, the version of the newest entry that
     * carried schema state (a checkpoint counts as its own version, since
-    * it may consolidate such entries; 0 when none). */
+    * it may consolidate such entries; 0 when none), and `batch`, the
+    * streaming micro-batch tag of the entry at `version` (read when the
+    * fold reaches that entry, or on request when `version` is a
+    * checkpoint). */
   private final case class Snapshot(version: Long, groups: Seq[Group],
-      schema: SchemaState, schemaAt: Long)
+      schema: SchemaState, schemaAt: Long, batch: Option[Long] = None)
 
   /** The state at `asOf` (None = the listing's head), in one pass:
     * start from the newest checkpoint ≤ the version, then fold every
@@ -290,7 +293,7 @@ object VersionedTable {
     * the FULL state). The files OPENED are bounded by
     * [[CheckpointInterval]], not table age. */
   private def foldLog(f: FileSystem, log: LogListing,
-      asOf: Option[Long]): Snapshot = {
+      asOf: Option[Long], headBatch: Boolean = false): Snapshot = {
     val v = asOf.getOrElse(log.head)
     val chk = log.chks.filter(_._1 <= v).lastOption
     val base = chk.fold(Snapshot(v, Seq.empty, EmptySchemaState, 0L)) {
@@ -300,7 +303,7 @@ object VersionedTable {
           parseSchema(raw).getOrElse(EmptySchemaState), c)
     }
     val from = chk.fold(0L)(_._1)
-    log.entries.filter { case (e, _) => e > from && e <= v }
+    val folded = log.entries.filter { case (e, _) => e > from && e <= v }
       .foldLeft(base) { case (acc, (e, st)) =>
         val raw = readJson(f, st.getPath)
         val gs = parseGroups(raw)
@@ -309,15 +312,28 @@ object VersionedTable {
           groups =
             if (jsonField(raw, "replace").toBoolean) gs else acc.groups ++ gs,
           schema = sch.getOrElse(acc.schema),
-          schemaAt = if (sch.isDefined) e else acc.schemaAt)
+          schemaAt = if (sch.isDefined) e else acc.schemaAt,
+          batch = if (e == v) batchTag(raw) else acc.batch)
       }
+    // the checkpoint at `v` stands in for its entry in the fold
+    if (!headBatch || v != from) folded
+    else log.entries.find(_._1 == v).fold(folded) { case (_, st) =>
+      folded.copy(batch = batchTag(readJson(f, st.getPath)))
+    }
   }
 
-  /** Load the table state once per verb: one listing, one fold. */
+  /** The `batch` tag of one log entry's JSON, if any. */
+  private def batchTag(raw: String): Option[Long] =
+    if (!raw.contains("\"batch\":")) None
+    else Some(jsonField(raw, "batch").toLong)
+
+  /** Load the table state once per verb: one listing, one fold.
+    * `headBatch` also reads the head entry's batch tag when the head
+    * is a checkpoint version (the fold starts after it). */
   private def snapshot(spark: SparkSession, path: String,
-      asOf: Option[Long] = None): Snapshot = {
+      asOf: Option[Long] = None, headBatch: Boolean = false): Snapshot = {
     val f = fs(spark, logDir(path))
-    foldLog(f, listLog(f, path), asOf)
+    foldLog(f, listLog(f, path), asOf, headBatch)
   }
 
   /** The EARLIEST version a read/diff can still faithfully resolve
@@ -794,10 +810,25 @@ object VersionedTable {
     * so head-entry inspection is the sufficient check). */
   def headBatchId(spark: SparkSession, path: String): Option[Long] = {
     val f = fs(spark, logDir(path))
-    val head = listLog(f, path).entries.lastOption.getOrElse(return None)
-    val raw = readJson(f, head._2.getPath)
-    if (!raw.contains("\"batch\":")) None
-    else Some(jsonField(raw, "batch").toLong)
+    listLog(f, path).entries.lastOption
+      .flatMap { case (_, st) => batchTag(readJson(f, st.getPath)) }
+  }
+
+  /** Append `df` as the commit of streaming micro-batch `batchId`,
+    * tagged with it — or return the head unchanged when the head entry
+    * already carries that tag (Structured Streaming's retry of the
+    * last batch) or `df` is empty. One snapshot (one listing of the
+    * log) serves the tag check, both write gates and the publish.
+    * The body of [[graft.streaming.VersionedSink.appendBatch]]. */
+  private[graft] def commitBatch(spark: SparkSession, path: String,
+      df: DataFrame, batchId: Long, statsCol: Option[String]): Long = {
+    val snap = snapshot(spark, path, headBatch = true)
+    if (snap.batch.contains(batchId) || df.isEmpty) snap.version
+    else {
+      requireWritable(spark, path, snap, df, allowEvolution = false)
+      stageAndCommit(spark, path, snap, df, replace = false, statsCol,
+        Some(batchId), op = "append")
+    }
   }
 
   /** Per-JVM (group dir → read-back schema) cache for the protocol's
@@ -923,7 +954,7 @@ object VersionedTable {
     * [[read]] (the reconciling path). None on an empty table too. */
   def readIndexed(spark: SparkSession, path: String, keyCol: String,
       asOfVersion: Option[Long] = None): Option[DataFrame] = {
-    val Snapshot(_, live, st, _) = snapshot(spark, path, asOfVersion)
+    val Snapshot(_, live, st, _, _) = snapshot(spark, path, asOfVersion)
     if (live.isEmpty) return None
     val dirs = live.map(g => groupPath(path, g.name))
     // uniform-schema gate in TWO planning reads, not one per group
@@ -1052,7 +1083,9 @@ object VersionedTable {
     * rewrites nothing is a complete no-op — no new version, no
     * zero-row group (the common empty streaming micro-batch). One
     * optimistic attempt at the current version; a lost race cleans
-    * every staged sidecar/group and rethrows. Returns
+    * every staged sidecar/group and rethrows. `batchId` tags the entry
+    * with a streaming micro-batch id; when the head entry already
+    * carries it (a retried batch) the call is a no-op. Returns
     * (versionAfterCall, groupsMasked, groupsRewritten). */
   def mergeDv(spark: SparkSession, path: String, updates: DataFrame,
       keyCol: String, maxDvFraction: Double = 0.3,
@@ -1062,10 +1095,11 @@ object VersionedTable {
       batchId: Option[Long] = None): (Long, Int, Int) = {
     require(maxDvFraction >= 0.0 && maxDvFraction <= 1.0,
       s"maxDvFraction must be in [0,1]: $maxDvFraction")
-    // one snapshot: gates, plan and publish all at its version (the
-    // merge() rule)
-    val snap = snapshot(spark, path)
-    val Snapshot(v, live, st, _) = snap
+    // one snapshot: batch-tag check, gates, plan and publish all at
+    // its version (the merge() rule)
+    val snap = snapshot(spark, path, headBatch = batchId.isDefined)
+    val Snapshot(v, live, st, _, _) = snap
+    if (batchId.isDefined && snap.batch == batchId) return (v, 0, 0)
     requireWritable(spark, path, snap, updates, allowEvolution)
     if (live.isEmpty) {
       // dropIfEmpty discipline even on the bootstrap commit: an empty
@@ -1406,7 +1440,7 @@ object VersionedTable {
   def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
       keyCol: String): (Long, Int) = {
     val snap = snapshot(spark, path)
-    val Snapshot(v, live, st, _) = snap
+    val Snapshot(v, live, st, _, _) = snap
     require(live.nonEmpty, "deleteKeys on an empty table")
     val k = keys.select(col(keyCol)).filter(col(keyCol).isNotNull)
       .distinct()
@@ -1494,8 +1528,8 @@ object VersionedTable {
     // time travel); a rename between the versions surfaces as the
     // logical columns differing and the existing key/type requires
     // fire — the reader's problem, as with s16/s17 evolution
-    val Snapshot(_, fromG, fromSt, _) = foldLog(f, log, Some(fromVersion))
-    val Snapshot(_, toG, toSt, _) = foldLog(f, log, Some(toVersion))
+    val Snapshot(_, fromG, fromSt, _, _) = foldLog(f, log, Some(fromVersion))
+    val Snapshot(_, toG, toSt, _, _) = foldLog(f, log, Some(toVersion))
     require(fromG.nonEmpty || toG.nonEmpty,
       s"changeFeed: no live data at either version ($fromVersion, $toVersion)")
     // a group is "shared" only when BOTH its data files AND its
@@ -1639,7 +1673,7 @@ object VersionedTable {
     // record of a rename/drop whose entry is about to be dropped.
     // Entries and checkpoints published after the listing are all
     // newer than the horizon, so the one listing decides the drops.
-    val Snapshot(_, live, st, _) = foldLog(f, log, Some(horizon))
+    val Snapshot(_, live, st, _, _) = foldLog(f, log, Some(horizon))
     val stJs = if (st.isEmpty) "" else s"${schemaJson(st)},"
     val body = s"""{"version":$horizon,$stJs${groupsJson(live)}}"""
     val out = f.create(new Path(logDir(path), f"chk-v$horizon%08d.json"), true)
@@ -1928,7 +1962,7 @@ object VersionedTable {
       s"clone source must be an absolute path: $src")
     val empty = snapshot(spark, dst)
     require(empty.version == 0, s"clone target $dst already has commits")
-    val Snapshot(_, live, st, _) = snapshot(spark, src, asOfVersion)
+    val Snapshot(_, live, st, _, _) = snapshot(spark, src, asOfVersion)
     require(live.nonEmpty,
       s"clone source $src has no live data" +
         asOfVersion.fold("")(v => s" at v$v"))
@@ -1990,7 +2024,7 @@ object VersionedTable {
     require(colName.nonEmpty && !colName.exists(c => ">,\"]".contains(c)),
       s"column name must be free of > , \" ] (log-format limit): $colName")
     val snap = snapshot(spark, path)
-    val Snapshot(v, live, st, _) = snap
+    val Snapshot(v, live, st, _, _) = snap
     require(v >= 1, "drop on an empty table")
     val cols = readGroups(spark, path, live, st).get.schema.fieldNames.toSet
     require(cols(colName), s"column $colName does not exist")

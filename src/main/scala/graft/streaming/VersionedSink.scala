@@ -12,8 +12,9 @@ import graft.sources.VersionedTable
   * Exactly-once, minimum viable form (the Delta streaming-sink idea):
   * the commit entry is tagged with the micro-batch id. Structured
   * Streaming re-runs a FAILED batch with the SAME batchId after
-  * recovery, so the sink checks the HEAD entry's tag before
-  * committing — a retry of an already-committed batch is a no-op
+  * recovery, so the sink checks the HEAD entry's tag — read from the
+  * same one listing of the log the commit is based on — before
+  * committing; a retry of an already-committed batch is a no-op
   * (prior batches are known-committed by the sink's own sequencing,
   * so head inspection is the sufficient check; a lost commit race
   * against a concurrent writer retries at the new head like any
@@ -41,13 +42,8 @@ object VersionedSink {
     * batch is empty again). Returns the version holding this batch
     * (the unchanged head for empty/retried ones). */
   def appendBatch(spark: SparkSession, path: String, df: DataFrame,
-      batchId: Long, statsCol: Option[String] = None): Long = {
-    val head = VersionedTable.currentVersion(spark, path)
-    if (VersionedTable.headBatchId(spark, path).contains(batchId)) head
-    else if (df.isEmpty) head
-    else VersionedTable.commit(spark, path, df, head,
-      statsCol = statsCol, batchId = Some(batchId))
-  }
+      batchId: Long, statsCol: Option[String] = None): Long =
+    VersionedTable.commitBatch(spark, path, df, batchId, statsCol)
 
   /** foreachBatch adapter: `writeStream.foreachBatch(into(path))`. */
   def into(path: String, statsCol: Option[String] = None)
@@ -74,9 +70,8 @@ object VersionedSink {
     require(maxAttempts >= 1, "maxAttempts must be >= 1")
     var attempts = 0
     while (true) {
-      val head = VersionedTable.currentVersion(spark, path)
-      if (VersionedTable.headBatchId(spark, path).contains(batchId))
-        return head
+      // mergeDv reads the head's batch tag from the snapshot it merges
+      // against: a retried batch returns the head unchanged
       try {
         return VersionedTable.mergeDv(spark, path, df, keyCol,
           maxDvFraction = maxDvFraction, batchId = Some(batchId))._1

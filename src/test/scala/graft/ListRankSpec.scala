@@ -42,8 +42,9 @@ class ListRankSpec extends AnyFunSuite {
       "coverage) where a naive walk would need 33 rounds") {
     val n = 33L
     val chain = links((0L -> 0L) +: (1L to n).map(i => i -> (i - 1)): _*)
-    // maxRounds = 7 is enough for 33 links (ceil(log2 33) = 6, plus
-    // the final no-move round that detects convergence)
+    // maxRounds = 7 covers the ceil(log2 34) = 6 doubling rounds of
+    // these 34 links; convergence needs no extra round — one parked
+    // check after the last round confirms it
     val r = ListRank.ranks(chain, maxRounds = 7).collect()
       .map(x => x.getLong(0) -> x.getLong(1)).toMap
     assert(r == (0L to n).map(i => i -> i).toMap)

@@ -12,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.VersionedTable
 import graft.sources.VersionedTable.CommitConflictException
+import graft.streaming.VersionedSink
 
 /** The stock local filesystem under its own `vtcount` scheme: it
   * records every directory it lists, and can run one action just
@@ -57,7 +58,8 @@ object ListCountingFs {
 /** Every table verb reads `_log/` through ONE listing: the snapshot it
   * gates, plans and commits against (a commit landing on a
   * checkpoint boundary included — the checkpoint follows from that
-  * snapshot plus the new entry). */
+  * snapshot plus the new entry). The streaming sink's batches take
+  * the head's batch tag from that same snapshot. */
 class LogListingSpec extends AnyFunSuite {
   lazy val spark = {
     val s = TestSpark.spark
@@ -171,6 +173,43 @@ class LogListingSpec extends AnyFunSuite {
     assert(n == 1, s"$n listings of _log/")
     assert(hasCheckpoint(p, 10L))
     assert(rows(p) == baseRows - (3L -> "r0") - (33L -> "r3"))
+  }
+
+  test("appendBatch lists the log once; its retry at the checkpoint " +
+      "head lists it once and commits nothing") {
+    val p = table()
+    val n = logListings(p) {
+      assert(VersionedSink.appendBatch(spark, p, df(500L -> "b7"), 7L,
+        Some("k")) == 10L)
+    }
+    assert(n == 1, s"$n listings of _log/")
+    assert(hasCheckpoint(p, 10L))
+    val retry = logListings(p) {
+      assert(VersionedSink.appendBatch(spark, p, df(500L -> "b7"), 7L,
+        Some("k")) == 10L)
+    }
+    assert(retry == 1, s"$retry listings of _log/ on the retry")
+    assert(VersionedTable.currentVersion(spark, p) == 10L)
+    assert(VersionedTable.read(spark, p).get.count() == baseRows.size + 1)
+  }
+
+  test("upsertBatch lists the log once; its retry at the checkpoint " +
+      "head lists it once and commits nothing") {
+    val p = table()
+    val n = logListings(p) {
+      assert(VersionedSink.upsertBatch(spark, p,
+        df(1L -> "u", 500L -> "new"), 7L, "k") == 10L)
+    }
+    assert(n == 1, s"$n listings of _log/")
+    assert(hasCheckpoint(p, 10L))
+    val retry = logListings(p) {
+      assert(VersionedSink.upsertBatch(spark, p,
+        df(1L -> "u", 500L -> "new"), 7L, "k") == 10L)
+    }
+    assert(retry == 1, s"$retry listings of _log/ on the retry")
+    assert(VersionedTable.currentVersion(spark, p) == 10L)
+    assert(rows(p) == baseRows - (1L -> "r0") + (1L -> "u") +
+      (500L -> "new"))
   }
 
   test("a mergePruned that loses its race deletes its staged group and " +
