@@ -1,8 +1,9 @@
 package graft.sources
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Minimal versioned table: a Delta/Iceberg-shaped commit protocol
   * built from primitives this environment has (parquet + an atomic
@@ -37,6 +38,8 @@ import org.apache.spark.sql.functions._
   *    `checkpointInterval` commits the winner writes a consolidated
   *    live-set checkpoint (stats included), so a read opens
   *    O(commits since checkpoint) log entries, not O(commits).
+  *    Checkpoints are written to a temp file and renamed into place,
+  *    so no reader ever folds a torn one.
   *  - every verb loads the table state ONCE: one `_log/` listing,
   *    folded into an immutable snapshot (version, live groups with
   *    their stats, column mapping and checks). The verb gates, plans
@@ -56,7 +59,8 @@ import org.apache.spark.sql.functions._
   *    touches O(batch-affected) groups, not O(table); groups without
   *    stats are conservatively rewritten. [[mergeDv]] is the
   *    merge-on-read arm: touched groups gain a deletion vector and
-  *    the batch lands as one new group.
+  *    the batch lands as one new group. In both arms an EMPTY batch
+  *    is a no-op: no version, no zero-row group.
   *  - [[vacuum]] deletes data groups referenced by NO log entry (the
   *    orphans left by writers that crashed between staging and
   *    publish). Groups referenced by ANY version — including replaced
@@ -120,6 +124,15 @@ object VersionedTable {
     * columns (Delta defaults to 32; the tiny-JSON log keeps this
     * smaller). */
   val MaxStatsColumns = 8
+
+  /** Whether group `g` may hold a key in [lo, hi] — the one test every
+    * stats-pruned verb skips groups by (and the rebase fold proves
+    * disjointness by). */
+  private def overlaps(g: Group, lo: Long, hi: Long): Boolean =
+    (g.lo, g.hi) match {
+      case (Some(glo), Some(ghi)) => glo <= hi && lo <= ghi
+      case _ => true // no stats: the range is unknown
+    }
 
   /** Column-mapping state — the metadata that makes RENAME/DROP
     * COLUMN zero-rewrite operations (the Delta columnMapping idea,
@@ -392,39 +405,48 @@ object VersionedTable {
     val payload =
       s"""{"version":$next,$opJs$batchJs$schemaJs"replace":$replace,${groupsJson(groups)}}"""
     if (!publishExclusive(f, entry, payload.getBytes("UTF-8"), arbiterFor)) {
-      staged.foreach(g => f.delete(new Path(s"$path/data/$g"), true))
+      staged.foreach(dropStaged(spark, path, _))
       throw new CommitConflictException(next)
     }
     // the winner of a checkpoint-boundary version consolidates the
-    // live set — derived, idempotent metadata (only one writer ever
-    // holds version `next`, so no same-name contention). Published
-    // via write-temp-then-RENAME, never create+write in place: with
-    // contended appends (commitAppendWithRetry) other writers read
-    // the log concurrently, and a reader catching the checkpoint
-    // between create and close would fold a TORN live set — rename is
-    // atomic on local/HDFS, so the name only ever points at complete
-    // bytes. A crash before rename leaves only a dot-prefixed temp
-    // (invisible to the chk-v listing).
-    if (next % CheckpointInterval == 0) {
-      // the state at `next` is `base` plus this entry: no log re-walk
-      val live = if (replace) groups else base.groups ++ groups
-      val chk = new Path(logDir(path), f"chk-v$next%08d.json")
-      val tmp = new Path(logDir(path),
-        s".tmp-chk-${java.util.UUID.randomUUID()}")
-      // checkpoints carry the schema state too: after expiry they can
-      // be the ONLY record of a rename/drop
-      val st = schema.getOrElse(base.schema)
-      val stJs = if (st.isEmpty) "" else s"${schemaJson(st)},"
-      val body = s"""{"version":$next,$stJs${groupsJson(live)}}"""
-      try {
-        val out = f.create(tmp, true)
-        try out.write(body.getBytes("UTF-8")) finally out.close()
-        f.rename(tmp, chk)
-      } finally {
-        if (f.exists(tmp)) f.delete(tmp, false)
-      }
-    }
+    // live set; the state at `next` is `base` plus this entry, so no
+    // log re-walk. A checkpoint that did not land only makes reads
+    // fold more entries.
+    if (next % CheckpointInterval == 0)
+      writeCheckpoint(f, path, next,
+        if (replace) groups else base.groups ++ groups,
+        schema.getOrElse(base.schema))
     next
+  }
+
+  /** Publish the live set `live` with schema state `st` as the
+    * checkpoint of version `v`: derived, idempotent metadata, written
+    * by [[commitEntry]] at checkpoint boundaries and by
+    * [[expireVersions]] at its horizon. The body goes to a dot-prefixed
+    * temp file that is then RENAMED into place, never created in
+    * place: other writers read the log concurrently, and a reader (or
+    * a crash) catching a checkpoint between create and close would
+    * fold a TORN live set into every later read. Rename is atomic on
+    * local/HDFS, so the name only ever points at complete bytes, and a
+    * crash before it leaves only a temp file the chk-v listing
+    * ignores. Renaming onto an existing checkpoint of the same version
+    * is harmless: its bytes are the same. Checkpoints carry the schema
+    * state, since after expiry they can be the ONLY record of a
+    * rename/drop. True when the checkpoint is in place. */
+  private def writeCheckpoint(f: FileSystem, path: String, v: Long,
+      live: Seq[Group], st: SchemaState): Boolean = {
+    val chk = new Path(logDir(path), f"chk-v$v%08d.json")
+    val tmp = new Path(logDir(path),
+      s".tmp-chk-${java.util.UUID.randomUUID()}")
+    val stJs = if (st.isEmpty) "" else s"${schemaJson(st)},"
+    val body = s"""{"version":$v,$stJs${groupsJson(live)}}"""
+    try {
+      val out = f.create(tmp, true)
+      try out.write(body.getBytes("UTF-8")) finally out.close()
+      f.rename(tmp, chk) || f.exists(chk)
+    } finally {
+      if (f.exists(tmp)) f.delete(tmp, false)
+    }
   }
 
   /** Write-side schema gate: a batch introducing columns the table
@@ -544,10 +566,16 @@ object VersionedTable {
         readGroupDir(spark, s"$path/data/${g.name}").limit(1).isEmpty
     }
     if (empty) {
-      fs(spark, path).delete(new Path(s"$path/data/${g.name}"), true)
+      dropStaged(spark, path, g.name)
       None
     } else Some(g)
   }
+
+  /** Delete one staged data dir: a lost race's, a refused batch's, or
+    * one that turned out empty. */
+  private def dropStaged(spark: SparkSession, path: String,
+      name: String): Unit =
+    fs(spark, path).delete(new Path(s"$path/data/$name"), true)
 
   /** Columns eligible for extra [min,max] stats: integral (exact
     * bounds) or decimal with an integral part that FITS a long
@@ -556,8 +584,7 @@ object VersionedTable {
     * excluded (NaN breaks min/max monotonicity). Names must avoid
     * the log grammar's reserved characters and the ':'/'|' stats
     * separators. */
-  private def statsEligible(f: org.apache.spark.sql.types.StructField)
-      : Boolean = {
+  private def statsEligible(f: StructField): Boolean = {
     import org.apache.spark.sql.types._
     f.name.nonEmpty &&
       !f.name.exists(ch => ":|,\">]".contains(ch)) &&
@@ -586,115 +613,78 @@ object VersionedTable {
       s"unexpected stats value type: ${other.getClass}")
   }
 
-  /** Stage `df` as a fresh uuid group; returns the group with key
-    * stats when `statsCol` names a long-castable column (observed
-    * on the write pass itself). */
-  private def stageGroup(spark: SparkSession, path: String,
-      df: DataFrame, statsCol: Option[String]): Group = {
-    val name = java.util.UUID.randomUUID().toString
-    // stats + row count ride the WRITE pass as observed metrics
-    // (guide §1: one pass, not write-then-rescan — the former
-    // read-back agg was a whole extra job per staged group on every
-    // write verb). Same bare-min/max shape as [[groupStats]], same
-    // driver-side outward rounding; min/max are retry-insensitive and
-    // a retried zero-row task adds 0 to the count, so emptiness stays
-    // exact under speculative/re-run tasks.
-    val schema = df.schema
-    val (keyFast, statCols) = statsCol match {
-      case Some(c) =>
-        val kf = schema.fields.find(_.name == c).exists(statsEligible)
-        val extras = schema.fields
-          .filter(f => f.name != c && statsEligible(f))
-          .take(MaxStatsColumns).toSeq.map(_.name)
-        (kf, (if (kf) Seq(c) else Seq.empty) ++ extras)
-      case None => (false, Seq.empty[String])
+  /** The stats a group records, decided once for every path that
+    * stages or adopts one ([[stageGroup]]'s observed write,
+    * [[stageSpans]]' grouped read-back, [[convertFrom]]'s sweep): the
+    * row count, the `key` column's [min,max], and the [min,max] of
+    * the first [[MaxStatsColumns]] [[statsEligible]] non-key columns
+    * of `fields`. Every aggregate is a BARE named min/max over a raw
+    * column (the shape parquet footer aggregate pushdown accepts);
+    * rounding happens driver-side on the one result row. A key column
+    * that is neither integral nor a fitting decimal keeps the legacy
+    * cast("long") aggregates. No key: the row count alone. */
+  private final class StatsPlan(fields: Seq[StructField],
+      key: Option[String]) {
+    private val eligible = fields.filter(statsEligible).map(_.name)
+    private val keyFast = key.exists(eligible.contains)
+    private val cols: Seq[String] = key.toSeq.flatMap { c =>
+      (if (keyFast) Seq(c) else Seq.empty) ++
+        eligible.filter(_ != c).take(MaxStatsColumns)
     }
-    val aggs: Seq[org.apache.spark.sql.Column] =
-      count(lit(1)).as("__n") +:
-        ((statsCol match {
-          case Some(c) if !keyFast =>
-            Seq(min(col(c).cast("long")).as("__klo"),
-              max(col(c).cast("long")).as("__khi"))
-          case _ => Seq.empty
-        }) ++ statCols.zipWithIndex.flatMap { case (n, i) =>
+    val aggs: Seq[Column] = count(lit(1)).as("__n") +:
+      ((if (keyFast) Seq.empty else key.toSeq.flatMap(c =>
+        Seq(min(col(c).cast("long")).as("__klo"),
+          max(col(c).cast("long")).as("__khi")))) ++
+        cols.zipWithIndex.flatMap { case (n, i) =>
           Seq(min(col(n)).as(s"__lo$i"), max(col(n)).as(s"__hi$i"))
         })
-    val obs = new org.apache.spark.sql.Observation()
-    df.observe(obs, aggs.head, aggs.tail: _*)
-      .write.mode("overwrite").parquet(s"$path/data/$name")
-    // seed the schema cache at write time: read-back inference would
-    // report exactly this schema with nullability relaxed, so every
-    // later open of the group (the merge semi-joins, the reconciling
-    // read) skips the footer-inference job entirely
-    cacheGroupSchema(s"$path/data/$name",
-      relaxNullability(schema).asInstanceOf[org.apache.spark.sql.types.StructType])
-    val m = obs.get
-    val nRows = m("__n").asInstanceOf[Number].longValue()
-    statsCol match {
-      case Some(c) =>
-        val perCol = statCols.zipWithIndex.flatMap { case (n, i) =>
-          (m(s"__lo$i"), m(s"__hi$i")) match {
-            case (null, _) | (_, null) => None
-            case (lo, hi) => Some((n, statsLong(lo, ceil = false),
-              statsLong(hi, ceil = true)))
-          }
+
+    /** Group `name` with the stats of one result row of [[aggs]],
+      * looked up by aggregate name. */
+    def group(name: String, get: String => Any): Group = {
+      val perCol = cols.zipWithIndex.flatMap { case (n, i) =>
+        (get(s"__lo$i"), get(s"__hi$i")) match {
+          case (null, _) | (_, null) => None
+          case (lo, hi) => Some((n, statsLong(lo, ceil = false),
+            statsLong(hi, ceil = true)))
         }
-        val key: Option[(Long, Long)] =
-          if (keyFast) perCol.find(_._1 == c).map(t => (t._2, t._3))
-          else if (m("__klo") == null) None
-          else Some((m("__klo").asInstanceOf[Number].longValue(),
-            m("__khi").asInstanceOf[Number].longValue()))
-        Group(name, key.map(_._1), key.map(_._2),
-          xs = perCol.filterNot(_._1 == c), rows = Some(nRows))
-      case None => Group(name, None, None, rows = Some(nRows))
+      }
+      val k: Option[(Long, Long)] = key.flatMap { c =>
+        if (keyFast) perCol.find(_._1 == c).map(t => (t._2, t._3))
+        else Option(get("__klo")).map(lo => (statsLong(lo, ceil = false),
+          statsLong(get("__khi"), ceil = true)))
+      }
+      Group(name, k.map(_._1), k.map(_._2),
+        xs = perCol.filterNot(t => key.contains(t._1)),
+        rows = Some(get("__n").asInstanceOf[Number].longValue()))
     }
   }
 
-  /** The one-agg stats sweep over an on-disk parquet directory —
-    * shared by [[stageGroup]] (freshly staged groups) and
-    * [[convertFrom]] (zero-copy adoption of external parquet). */
-  private def groupStats(spark: SparkSession, dir: String,
-      c: String): (Option[(Long, Long)], Seq[(String, Long, Long)]) = {
-    locally {
-        // ONE agg over the just-written parquet covers the key AND
-        // the first MaxStatsColumns eligible non-key columns. Every
-        // agg expression is a BARE min/max over a raw column — no
-        // casts, no floor/ceil wrappers — rounding happens
-        // driver-side on the 1-row result. Measured cost (adjudicated
-        // against round-15 HEAD on the same host): ~5-10% on the
-        // write-heavy protocol rows for up to 8 extra pruning
-        // columns; the bare-min/max shape is also exactly what
-        // parquet FOOTER aggregate pushdown accepts if a session
-        // routes parquet through DSv2. A key column that is neither
-        // integral nor a fitting decimal keeps the legacy
-        // cast("long") agg expressions.
-        val written = spark.read.parquet(dir)
-        val keyField = written.schema.fields.find(_.name == c)
-        val keyFast = keyField.exists(statsEligible)
-        val extras = written.schema.fields
-          .filter(f => f.name != c && statsEligible(f))
-          .take(MaxStatsColumns).toSeq
-        val statCols: Seq[String] =
-          (if (keyFast) Seq(c) else Seq.empty) ++ extras.map(_.name)
-        val aggs: Seq[org.apache.spark.sql.Column] =
-          (if (keyFast) Seq.empty
-           else Seq(min(col(c).cast("long")),
-             max(col(c).cast("long")))) ++
-            statCols.flatMap(n => Seq(min(col(n)), max(col(n))))
-        val r = written.agg(aggs.head, aggs.tail: _*).head()
-        val base = if (keyFast) 0 else 2
-        val perCol = statCols.zipWithIndex.flatMap { case (n, i) =>
-          val (li, hj) = (base + 2 * i, base + 2 * i + 1)
-          if (r.isNullAt(li) || r.isNullAt(hj)) None
-          else Some((n, statsLong(r.get(li), ceil = false),
-            statsLong(r.get(hj), ceil = true)))
-        }
-        val key: Option[(Long, Long)] =
-          if (keyFast) perCol.find(_._1 == c).map(t => (t._2, t._3))
-          else if (r.isNullAt(0)) None
-          else Some((r.getLong(0), r.getLong(1)))
-        (key, perCol.filterNot(_._1 == c))
-    }
+  /** Write `df` as a fresh uuid dir under `data/`, with `aggs` observed
+    * on the write pass itself (one pass, not write-then-rescan: min/max
+    * are retry-insensitive and a retried zero-row task adds 0 to a
+    * count, so the figures stay exact under re-run tasks). Seeds the
+    * schema cache: read-back inference would report exactly this
+    * schema with nullability relaxed, so later opens of the dir skip
+    * the footer-inference job. Returns (dir name, observed values). */
+  private def writeObserved(spark: SparkSession, path: String,
+      df: DataFrame, aggs: Seq[Column]): (String, Map[String, Any]) = {
+    val name = java.util.UUID.randomUUID().toString
+    val obs = new Observation()
+    df.observe(obs, aggs.head, aggs.tail: _*)
+      .write.mode("overwrite").parquet(s"$path/data/$name")
+    cacheGroupSchema(s"$path/data/$name",
+      relaxNullability(df.schema).asInstanceOf[StructType])
+    (name, obs.get)
+  }
+
+  /** Stage `df` as a fresh uuid group, its stats (key stats when
+    * `statsCol` is set) observed on the write pass. */
+  private def stageGroup(spark: SparkSession, path: String,
+      df: DataFrame, statsCol: Option[String]): Group = {
+    val plan = new StatsPlan(df.schema.fields.toSeq, statsCol)
+    val (name, observed) = writeObserved(spark, path, df, plan.aggs)
+    plan.group(name, observed)
   }
 
   /** Atomically publish `df` as version `expectedVersion + 1`.
@@ -715,8 +705,7 @@ object VersionedTable {
       arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
         CommitArbiter.forFs): Long = {
     val snap = snapshot(spark, path, Some(expectedVersion))
-    requireKnownColumns(spark, path, snap, df, allowEvolution)
-    requireChecks(snap, df)
+    requireWritable(spark, path, snap, df, allowEvolution)
     stageAndCommit(spark, path, snap, df, replace, statsCol, batchId,
       arbiterFor, if (replace) "overwrite" else "append")
   }
@@ -782,7 +771,7 @@ object VersionedTable {
           try requireWritable(spark, path, snap, df, allowEvolution = false)
           catch {
             case t: Throwable =>
-              fs(spark, path).delete(new Path(s"$path/data/${g.name}"), true)
+              dropStaged(spark, path, g.name)
               throw t
           }
           gated = snap
@@ -796,7 +785,7 @@ object VersionedTable {
         case e: CommitConflictException =>
           conflicts += 1
           if (conflicts >= maxAttempts) {
-            fs(spark, path).delete(new Path(s"$path/data/${g.name}"), true)
+            dropStaged(spark, path, g.name)
             throw e
           }
       }
@@ -846,10 +835,9 @@ object VersionedTable {
     * need partition discovery. Bounded: cleared wholesale past a cap
     * (fixture churn creates many short-lived tables). */
   private val groupSchemaCache = new java.util.concurrent
-    .ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+    .ConcurrentHashMap[String, StructType]()
 
-  private def cacheGroupSchema(dir: String,
-      s: org.apache.spark.sql.types.StructType): Unit = {
+  private def cacheGroupSchema(dir: String, s: StructType): Unit = {
     if (groupSchemaCache.size >= 8192) groupSchemaCache.clear()
     groupSchemaCache.put(dir, s)
   }
@@ -894,24 +882,53 @@ object VersionedTable {
     * are live there). */
   private def readGroups(spark: SparkSession, path: String,
       gs: Seq[Group], schema: SchemaState): Option[DataFrame] =
-    gs.map { g =>
-      val base = schema(readGroupDir(spark, groupPath(path, g.name)))
-      g.dv match {
-        case Some(d) =>
-          // the DV is a key list scoped to THIS group; broadcast
-          // anti-join (key lists are deleted-row-count-sized). Renames
-          // apply to the DV too (key-column renames track
-          // automatically) but drops do NOT — a drop of an unrelated
-          // column is a no-op on a key-only frame, and dropping the
-          // key itself is refused at dropColumn.
-          val dvf = schema.applyRenames(
-            readGroupDir(spark, groupPath(path, d)))
-          val c = dvf.columns.head
-          base.join(broadcast(dvf.select(col(c)).distinct()),
-            Seq(c), "left_anti")
-        case None => base
-      }
-    }.reduceOption(_.unionByName(_, allowMissingColumns = true))
+    gs.map(g => applyDv(spark, path, g, schema,
+        schema(readGroupDir(spark, groupPath(path, g.name)))))
+      .reduceOption(_.unionByName(_, allowMissingColumns = true))
+
+  /** `rows` (group `g` read under `schema`) minus the keys in g's
+    * deletion vector, if it has one. The DV is a key list scoped to
+    * THIS group; broadcast anti-join (key lists are
+    * deleted-row-count-sized). Renames apply to the DV too (key-column
+    * renames track automatically) but drops do NOT — a drop of an
+    * unrelated column is a no-op on a key-only frame, and dropping the
+    * key itself is refused at dropColumn. */
+  private def applyDv(spark: SparkSession, path: String, g: Group,
+      schema: SchemaState, rows: DataFrame): DataFrame =
+    g.dv.fold(rows) { d =>
+      val dvf = schema.applyRenames(readGroupDir(spark, groupPath(path, d)))
+      val c = dvf.columns.head
+      rows.join(broadcast(dvf.select(col(c)).distinct()), Seq(c), "left_anti")
+    }
+
+  /** The deletion-vector step of [[deleteKeys]] and [[mergeDv]]: the
+    * keys of `k` (non-null, distinct) that group `g`'s VISIBLE
+    * (mapped, already masked) rows hold — so re-deleting a masked key
+    * adds no entry — are written as a sidecar whose row count rides
+    * the write, then merged with g's prior vector, mapped by the
+    * [[applyDv]] rule. Returns the new vector and its row count, or
+    * None (sidecar dropped) when `g` holds none of the keys. */
+  private def stageDv(spark: SparkSession, path: String, g: Group,
+      st: SchemaState, k: DataFrame, keyCol: String)
+      : Option[(String, Long)] = {
+    def write(df: DataFrame): (String, Long) = {
+      val (name, m) =
+        writeObserved(spark, path, df, Seq(count(lit(1)).as("__n")))
+      (name, m("__n").asInstanceOf[Number].longValue())
+    }
+    val (hit, n) = write(readGroups(spark, path, Seq(g), st).get
+      .select(col(keyCol)).join(k, Seq(keyCol), "left_semi"))
+    if (n == 0L) {
+      dropStaged(spark, path, hit)
+      None
+    } else Some(g.dv.fold((hit, n)) { d =>
+      val merged = write(readGroupDir(spark, s"$path/data/$hit")
+        .unionByName(st.applyRenames(readGroupDir(spark, groupPath(path, d)))
+          .select(col(keyCol))).distinct())
+      dropStaged(spark, path, hit)
+      merged
+    })
+  }
 
   /** Read the table as of `asOfVersion` (None = latest), with the
     * column mapping in effect AT that version applied (time travel
@@ -977,7 +994,7 @@ object VersionedTable {
         m
       case m => m
     }
-    def fieldSet(s: org.apache.spark.sql.types.StructType) =
+    def fieldSet(s: StructType) =
       s.fields.map(f => (f.name, f.dataType)).toSet
     if (fieldSet(merged) != fieldSet(first)) return None
     // the index prunes at the SCAN, which sees physical names: stats
@@ -1001,16 +1018,8 @@ object VersionedTable {
         first))
     val (dvd, plain) = live.partition(_.dv.isDefined)
     val flat = if (plain.nonEmpty) Seq(frameOf(plain)) else Seq.empty
-    val maskedParts = dvd.map { g =>
-      // the readGroups DV rule: the sidecar holds this group's key
-      // column; renames apply to it, drops never can (key drops are
-      // refused at dropColumn while the vector is live)
-      val dvf = st.applyRenames(
-        readGroupDir(spark, groupPath(path, g.dv.get)))
-      val c = dvf.columns.head
-      frameOf(Seq(g)).join(broadcast(dvf.select(col(c)).distinct()),
-        Seq(c), "left_anti")
-    }
+    val maskedParts =
+      dvd.map(g => applyDv(spark, path, g, st, frameOf(Seq(g))))
     (flat ++ maskedParts).reduceOption(_.unionByName(_))
   }
 
@@ -1049,7 +1058,8 @@ object VersionedTable {
     * Groups without stats are conservatively rewritten. Equivalent to
     * [[merge]] row-for-row (spec-pinned); on a key-clustered table
     * the rewrite cost is O(touched groups), not O(table) — the
-    * difference SCALE.md's vtable_prune block measures. Returns
+    * difference SCALE.md's vtable_prune block measures. An empty
+    * batch publishes nothing and returns the current version. Returns
     * (committedVersion, rewrittenGroupCount). */
   def mergePruned(spark: SparkSession, path: String, updates: DataFrame,
       keyCol: String, allowEvolution: Boolean = false): (Long, Int) = {
@@ -1116,8 +1126,6 @@ object VersionedTable {
     var staged = List.empty[String]
     var masked = 0
     var rewrote = 0
-    def cleanup(): Unit = staged.foreach(g =>
-      fs(spark, path).delete(new Path(s"$path/data/$g"), true))
     try {
       // stage the batch FIRST (round-16, guide §1: one pass over the
       // updates lineage instead of three): the staged write's observed
@@ -1132,57 +1140,14 @@ object VersionedTable {
       val stagedData = readGroupDir(spark, s"$path/data/${gNew0.name}")
       val k = stagedData.select(col(keyCol))
         .filter(col(keyCol).isNotNull).distinct()
-      val batchBounds = (gNew0.lo, gNew0.hi) match {
-        case (Some(lo), Some(hi)) => Some((lo, hi))
-        case _ => None // empty batch or all-null keys: matches nothing
-      }
-      val updated = live.map { g =>
-        val overlaps = (g.lo, g.hi, batchBounds) match {
-          case (_, _, None) => false // all-null batch keys match nothing
-          case (Some(lo), Some(hi), Some((uLo, uHi))) =>
-            lo <= uHi && uLo <= hi
-          case _ => true // no stats -> conservative probe
-        }
-        if (!overlaps) g
-        else {
-          // this group's share of the update: batch keys its VISIBLE
-          // (mapped, DV-masked) rows actually contain — a key already
-          // masked by a prior delete/merge needs no new vector entry.
-          // The sidecar write's observed count replaces the old
-          // read-back empty probe AND the dvRows re-count.
-          val hit = readGroups(spark, path, Seq(g), st).get
-            .select(col(keyCol)).join(k, Seq(keyCol), "left_semi")
-          val name = java.util.UUID.randomUUID().toString
-          val hitObs = new org.apache.spark.sql.Observation()
-          hit.observe(hitObs, count(lit(1)).as("__n"))
-            .write.mode("overwrite").parquet(s"$path/data/$name")
-          cacheGroupSchema(s"$path/data/$name", relaxNullability(hit.schema)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-          val hitRows =
-            hitObs.get("__n").asInstanceOf[Number].longValue()
-          if (hitRows == 0L) {
-            fs(spark, path).delete(new Path(s"$path/data/$name"), true)
-            g
-          } else {
-            // merge with any prior vector (the deleteKeys discipline)
-            val (vec, dvRows) = g.dv match {
-              case Some(d) =>
-                val merged = java.util.UUID.randomUUID().toString
-                val mObs = new org.apache.spark.sql.Observation()
-                val mDf = readGroupDir(spark, s"$path/data/$name")
-                  .unionByName(st.applyRenames(
-                    readGroupDir(spark, groupPath(path, d)))
-                    .select(col(keyCol))).distinct()
-                mDf.observe(mObs, count(lit(1)).as("__n"))
-                  .write.mode("overwrite").parquet(s"$path/data/$merged")
-                cacheGroupSchema(s"$path/data/$merged",
-                  relaxNullability(mDf.schema)
-                    .asInstanceOf[org.apache.spark.sql.types.StructType])
-                fs(spark, path)
-                  .delete(new Path(s"$path/data/$name"), true)
-                (merged, mObs.get("__n").asInstanceOf[Number].longValue())
-              case None => (name, hitRows)
-            }
+      // None for an empty batch or all-null keys: matches nothing
+      val batchBounds = gNew0.lo.zip(gNew0.hi)
+      val updated = live.flatMap { g =>
+        if (!batchBounds.exists { case (lo, hi) => overlaps(g, lo, hi) })
+          Some(g)
+        else stageDv(spark, path, g, st, k, keyCol) match {
+          case None => Some(g)
+          case Some((vec, dvRows)) =>
             // physical rows recorded at the group's own stage time;
             // pre-round-16 groups lack the field and pay one count
             val physRows = g.rows.getOrElse(
@@ -1190,28 +1155,23 @@ object VersionedTable {
             if (dvRows <= maxDvFraction * physRows) {
               staged ::= vec
               masked += 1
-              g.copy(dv = Some(vec))
+              Some(g.copy(dv = Some(vec)))
             } else {
               // density fallback: rewrite the group without the batch
               // keys, vector dropped — the copy-on-write arm, chosen
-              // only where the vector stopped being "small"
-              fs(spark, path).delete(new Path(s"$path/data/$vec"), true)
+              // only where the vector stopped being "small"; a group
+              // emptied entirely leaves the live set
+              dropStaged(spark, path, vec)
+              rewrote += 1
               val remaining = readGroups(spark, path, Seq(g), st).get
                 .join(k, Seq(keyCol), "left_anti")
-              val ng = stageGroup(spark, path, remaining, Some(keyCol))
-              dropIfEmpty(spark, path, ng) match {
-                case Some(kept) =>
-                  staged ::= kept.name
-                  rewrote += 1
-                  kept
-                case None =>
-                  rewrote += 1
-                  null // group emptied entirely: drop from the live set
-              }
+              val kept = dropIfEmpty(spark, path,
+                stageGroup(spark, path, remaining, Some(keyCol)))
+              kept.foreach(ng => staged ::= ng.name)
+              kept
             }
-          }
         }
-      }.filter(_ != null)
+      }
       // dropIfEmpty on the appended group (the deleteRange
       // discipline): an EMPTY updates batch — the common empty
       // streaming micro-batch through VersionedSink.upsertBatch —
@@ -1229,7 +1189,7 @@ object VersionedTable {
       // commitEntry already cleans `staged` on a lost race; the
       // re-delete here is a no-op then, and the real cleanup for any
       // failure BEFORE the publish (IO mid-staging)
-      case e: Throwable => cleanup(); throw e
+      case e: Throwable => staged.foreach(dropStaged(spark, path, _)); throw e
     }
   }
 
@@ -1257,7 +1217,8 @@ object VersionedTable {
     * pins the snapshot the merge reads — a caller that planned its
     * batch against a known version passes it so commits that landed
     * since are handled by the same fold-or-conflict check instead of
-    * being silently merged over. Returns
+    * being silently merged over. An empty batch publishes nothing and
+    * returns the version it read. Returns
     * (committedVersion, rewrittenGroupCount, rebases). */
   def mergePrunedRebase(spark: SparkSession, path: String,
       updates: DataFrame, keyCol: String,
@@ -1269,9 +1230,12 @@ object VersionedTable {
   /** The one copy-on-write MERGE body behind [[mergePruned]] (no
     * rebases) and [[mergePrunedRebase]]: gate, partition the live set
     * by key stats, rewrite the touched groups as one staged group,
-    * publish, and on a lost race fold up to `maxRebases` times. An
-    * empty table or an all-null key batch commits one plain attempt
-    * tagged `merge_pruned`. Returns
+    * publish, and on a lost race fold up to `maxRebases` times. On an
+    * empty table nothing is touched, and an all-null key batch
+    * touches nothing (null keys match nothing): its rows are appended
+    * by the same publish loop, tagged `merge_pruned`. An empty batch
+    * stages an empty group, which is dropped: no version is published
+    * and the version read is returned. Returns
     * (committedVersion, rewrittenGroupCount, rebases). */
   private def mergeCopyOnWrite(spark: SparkSession, path: String,
       updates: DataFrame, keyCol: String, allowEvolution: Boolean,
@@ -1281,32 +1245,17 @@ object VersionedTable {
     // fromVersion pins it earlier, same safety)
     val snap = snapshot(spark, path, fromVersion)
     requireWritable(spark, path, snap, updates, allowEvolution)
-    if (snap.groups.isEmpty)
-      return (stageAndCommit(spark, path, snap, updates, replace = true,
-        statsCol = Some(keyCol), op = "merge_pruned"), 0, 0)
-    val r = updates.agg(min(col(keyCol).cast("long")),
-      max(col(keyCol).cast("long"))).head()
-    // all-null update keys match nothing: append the updates as-is
-    if (r.isNullAt(0)) {
-      val g = stageGroup(spark, path, updates, Some(keyCol))
-      return (commitEntry(spark, path, snap, snap.groups :+ g,
-        replace = true, staged = Seq(g.name),
-        op = Some("merge_pruned")), 0, 0)
-    }
-    val (uLo, uHi) = (r.getLong(0), r.getLong(1))
-    val (touched, carried0) = snap.groups.partition { g =>
-      (g.lo, g.hi) match {
-        case (Some(lo), Some(hi)) => lo <= uHi && uLo <= hi
-        case _ => true // no stats -> conservative rewrite
+    // the batch's key range: None for an empty or all-null batch, and
+    // not computed on an empty table, where there is nothing to touch
+    val bounds =
+      if (snap.groups.isEmpty) None
+      else {
+        val r = updates.agg(min(col(keyCol).cast("long")),
+          max(col(keyCol).cast("long"))).head()
+        if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
       }
-    }
-    // the key span this merge READ (touched groups) or WRITES (the
-    // update range): an interloper inside it is a real conflict. A
-    // stats-less touched group has an UNKNOWN row range, so no
-    // disjointness can be proven and every race is a real conflict.
-    val unbounded = touched.exists(g => g.lo.isEmpty || g.hi.isEmpty)
-    val protLo = (uLo +: touched.flatMap(_.lo)).min
-    val protHi = (uHi +: touched.flatMap(_.hi)).max
+    val (touched, carried0) = snap.groups.partition(g =>
+      bounds.exists { case (lo, hi) => overlaps(g, lo, hi) })
     val rewritten =
       readGroups(spark, path, touched, snap.schema) match {
         case Some(t) =>
@@ -1318,7 +1267,21 @@ object VersionedTable {
             "left_anti").unionByName(updates, allowMissingColumns = true)
         case None => updates
       }
-    val g = stageGroup(spark, path, rewritten, Some(keyCol))
+    val g = dropIfEmpty(spark, path,
+        stageGroup(spark, path, rewritten, Some(keyCol)))
+      .getOrElse(return (snap.version, 0, 0))
+    // the key span this merge READ (touched groups) or WROTE (the
+    // staged group, which holds every batch key): an interloper inside
+    // it is a real conflict. A stats-less touched group has an UNKNOWN
+    // row range, so no disjointness can be proven and every race is a
+    // real conflict. No span at all (null keys, nothing touched) is
+    // disjoint from every append.
+    val unbounded = touched.exists(t => t.lo.isEmpty || t.hi.isEmpty)
+    val spans = (g +: touched).flatMap(t => t.lo.zip(t.hi))
+    val span =
+      if (spans.isEmpty) None
+      else Some((spans.map(_._1).min, spans.map(_._2).max))
+    val tag = if (bounds.isEmpty) "merge_pruned" else op
     val f = fs(spark, logDir(path))
     var carried = carried0
     var expected = snap.version
@@ -1330,7 +1293,7 @@ object VersionedTable {
         // real conflicts below delete it explicitly
         return (commitEntry(spark, path, snap.copy(version = expected),
           carried :+ g, replace = true, staged = Seq.empty,
-          op = Some(op)), touched.size, rebases)
+          op = Some(tag)), touched.size, rebases)
       } catch {
         case e: CommitConflictException =>
           val log = if (rebases < maxRebases) Some(listLog(f, path)) else None
@@ -1339,17 +1302,13 @@ object VersionedTable {
               val raw = readJson(f, st.getPath)
               val gs = parseGroups(raw)
               val foldable = !jsonField(raw, "replace").toBoolean &&
-                !unbounded && gs.forall { ig =>
-                  (ig.lo, ig.hi) match {
-                    case (Some(lo), Some(hi)) => hi < protLo || lo > protHi
-                    case _ => false // stats-less append: can't prove disjoint
-                  }
-                }
+                !unbounded && gs.forall(ig =>
+                  span.forall { case (lo, hi) => !overlaps(ig, lo, hi) })
               if (foldable) carried = carried ++ gs
               foldable
           })
           if (!folded) {
-            fs(spark, path).delete(new Path(s"$path/data/${g.name}"), true)
+            dropStaged(spark, path, g.name)
             throw e
           }
           rebases += 1
@@ -1374,12 +1333,7 @@ object VersionedTable {
       asOfVersion: Option[Long] = None): (Option[DataFrame], Int) = {
     require(lo <= hi, s"empty read range [$lo,$hi]")
     val snap = snapshot(spark, path, asOfVersion)
-    val overlapping = snap.groups.filter { g =>
-      (g.lo, g.hi) match {
-        case (Some(glo), Some(ghi)) => glo <= hi && lo <= ghi
-        case _ => true // no stats -> conservative open
-      }
-    }
+    val overlapping = snap.groups.filter(overlaps(_, lo, hi))
     val k = col(keyCol).cast("long")
     (readGroups(spark, path, overlapping, snap.schema)
       .map(_.filter(k >= lo && k <= hi)), overlapping.size)
@@ -1402,12 +1356,7 @@ object VersionedTable {
       lo: Long, hi: Long): (Long, Int) = {
     require(lo <= hi, s"empty delete range [$lo,$hi]")
     val snap = snapshot(spark, path)
-    val (touched, carried) = snap.groups.partition { g =>
-      (g.lo, g.hi) match {
-        case (Some(glo), Some(ghi)) => glo <= hi && lo <= ghi
-        case _ => true // no stats -> conservative rewrite
-      }
-    }
+    val (touched, carried) = snap.groups.partition(overlaps(_, lo, hi))
     if (touched.isEmpty) return (snap.version, 0)
     val k = col(keyCol).cast("long")
     val remaining = readGroups(spark, path, touched, snap.schema).get
@@ -1450,47 +1399,10 @@ object VersionedTable {
     val (kLo, kHi) = (r.getLong(0), r.getLong(1))
     var staged = List.empty[String]
     val updated = live.map { g =>
-      val overlaps = (g.lo, g.hi) match {
-        case (Some(lo), Some(hi)) => lo <= kHi && kLo <= hi
-        case _ => true // no stats -> conservative check
-      }
-      if (!overlaps) g
-      else {
-        // this group's share of the delete: keys its (mapped, already
-        // DV-masked) rows actually contain — checking through
-        // readGroups keeps a re-delete of an already-deleted key a
-        // no-op instead of a duplicate vector entry
-        val hit = readGroups(spark, path, Seq(g), st).get
-          .select(col(keyCol)).join(k, Seq(keyCol), "left_semi")
-        // emptiness rides the sidecar write's own observed count
-        // (round-16): no read-back probe job at all
-        val name = java.util.UUID.randomUUID().toString
-        val hitObs = new org.apache.spark.sql.Observation()
-        hit.observe(hitObs, count(lit(1)).as("__n"))
-          .write.mode("overwrite").parquet(s"$path/data/$name")
-        cacheGroupSchema(s"$path/data/$name", relaxNullability(hit.schema)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-        if (hitObs.get("__n").asInstanceOf[Number].longValue() == 0L) {
-          fs(spark, path).delete(new Path(s"$path/data/$name"), true)
-          g
-        } else g.dv match {
-          case Some(d) =>
-            // merge with the prior vector into a fresh sidecar
-            val merged = java.util.UUID.randomUUID().toString
-            val mDf = readGroupDir(spark, s"$path/data/$name")
-              .unionByName(st(readGroupDir(spark, groupPath(path, d)))
-                .select(col(keyCol))).distinct()
-            mDf.write.mode("overwrite").parquet(s"$path/data/$merged")
-            cacheGroupSchema(s"$path/data/$merged",
-              relaxNullability(mDf.schema)
-                .asInstanceOf[org.apache.spark.sql.types.StructType])
-            fs(spark, path).delete(new Path(s"$path/data/$name"), true)
-            staged ::= merged
-            g.copy(dv = Some(merged))
-          case None =>
-            staged ::= name
-            g.copy(dv = Some(name))
-        }
+      if (!overlaps(g, kLo, kHi)) g
+      else stageDv(spark, path, g, st, k, keyCol).fold(g) { case (vec, _) =>
+        staged ::= vec
+        g.copy(dv = Some(vec))
       }
     }
     if (staged.isEmpty) return (v, 0)
@@ -1659,7 +1571,10 @@ object VersionedTable {
     *    unreferenced and a subsequent [[vacuum]] reclaims them (the
     *    horizon checkpoint pins the still-live ones — vacuum reads
     *    checkpoints too).
-    * Returns the number of dropped log entries. */
+    * The horizon checkpoint is written to a temp file and renamed into
+    * place, like every checkpoint; when it does not land, the call
+    * throws before deleting anything. Returns the number of dropped
+    * log entries. */
   def expireVersions(spark: SparkSession, path: String,
       keepLast: Int): Long = {
     require(keepLast >= 1, s"keepLast must be >= 1: $keepLast")
@@ -1674,10 +1589,9 @@ object VersionedTable {
     // Entries and checkpoints published after the listing are all
     // newer than the horizon, so the one listing decides the drops.
     val Snapshot(_, live, st, _, _) = foldLog(f, log, Some(horizon))
-    val stJs = if (st.isEmpty) "" else s"${schemaJson(st)},"
-    val body = s"""{"version":$horizon,$stJs${groupsJson(live)}}"""
-    val out = f.create(new Path(logDir(path), f"chk-v$horizon%08d.json"), true)
-    try out.write(body.getBytes("UTF-8")) finally out.close()
+    if (!writeCheckpoint(f, path, horizon, live, st))
+      throw new java.io.IOException(
+        s"checkpoint v$horizon of $path did not land; no entry expired")
     log.chks.filter(_._1 < horizon).foreach(c => f.delete(c._2.getPath, false))
     val expired = log.entries.filter(_._1 <= horizon)
     expired.foreach(e => f.delete(e._2.getPath, false))
@@ -1783,40 +1697,14 @@ object VersionedTable {
     // span files themselves hold only the data columns, so each
     // leaf dir reads exactly like any other staged group
     val written = spark.read.parquet(s"$path/data/$name")
-    val keyFast = written.schema.fields.find(_.name == statsCol)
-      .exists(statsEligible)
-    val extras = written.schema.fields
-      .filter(f => f.name != statsCol && f.name != "__graft_span" &&
-        statsEligible(f))
-      .take(MaxStatsColumns).toSeq
-    val statCols =
-      (if (keyFast) Seq(statsCol) else Seq.empty) ++ extras.map(_.name)
-    val aggs = count(lit(1)) +:
-      ((if (keyFast) Seq.empty
-        else Seq(min(col(statsCol).cast("long")),
-          max(col(statsCol).cast("long")))) ++
-        statCols.flatMap(n => Seq(min(col(n)), max(col(n)))))
-    val statRows = written.groupBy(col("__graft_span"))
-      .agg(aggs.head, aggs.tail: _*).collect()
-    // col 0 is the span id, col 1 the row count
-    val base = 2 + (if (keyFast) 0 else 2)
-    val groups = statRows.sortBy(_.getInt(0)).map { r =>
-      val perCol = statCols.zipWithIndex.flatMap { case (n, i) =>
-        val (li, hj) = (base + 2 * i, base + 2 * i + 1)
-        if (r.isNullAt(li) || r.isNullAt(hj)) None
-        else Some((n, statsLong(r.get(li), ceil = false),
-          statsLong(r.get(hj), ceil = true)))
-      }
-      val key: Option[(Long, Long)] =
-        if (keyFast) perCol.find(_._1 == statsCol)
-          .map(t => (t._2, t._3))
-        else if (r.isNullAt(2)) None
-        else Some((r.getLong(2), r.getLong(3)))
-      Group(s"$name/__graft_span=${r.getInt(0)}",
-        key.map(_._1), key.map(_._2),
-        xs = perCol.filterNot(_._1 == statsCol),
-        rows = Some(r.getLong(1)))
-    }.toSeq
+    val plan = new StatsPlan(
+      written.schema.fields.toSeq.filter(_.name != "__graft_span"),
+      Some(statsCol))
+    val groups = written.groupBy(col("__graft_span"))
+      .agg(plan.aggs.head, plan.aggs.tail: _*).collect()
+      .sortBy(_.getInt(0)).toSeq
+      .map(r => plan.group(s"$name/__graft_span=${r.getInt(0)}",
+        r.getAs[Any](_)))
     (name, groups)
   }
 
@@ -2070,12 +1958,15 @@ object VersionedTable {
     require(!scala.util.Try(spark.read.parquet(srcDir).schema)
         .toOption.forall(_.isEmpty),
       s"convert source $srcDir is not readable parquet")
-    val (key, xs) = statsCol match {
-      case Some(c) => groupStats(spark, srcDir, c)
-      case None => (None, Seq.empty[(String, Long, Long)])
+    val adopted = statsCol.fold(Group(srcDir, None, None)) { c =>
+      val src = spark.read.parquet(srcDir)
+      val plan = new StatsPlan(src.schema.fields.toSeq, Some(c))
+      val r = src.agg(plan.aggs.head, plan.aggs.tail: _*).head()
+      // no row count: the source dir is outside the immutability
+      // contract, so the count could go stale
+      plan.group(srcDir, r.getAs[Any](_)).copy(rows = None)
     }
-    commitEntry(spark, path, empty,
-      Seq(Group(srcDir, key.map(_._1), key.map(_._2), xs = xs)),
+    commitEntry(spark, path, empty, Seq(adopted),
       replace = true, staged = Seq.empty, op = Some("convert"))
   }
 
@@ -2117,9 +2008,7 @@ object VersionedTable {
       val v = jsonField(raw, "version").toLong
       val op = if (!raw.contains("\"op\":")) None
         else Some(jsonField(raw, "op").stripPrefix("\"").stripSuffix("\""))
-      val batch = if (!raw.contains("\"batch\":")) None
-        else Some(jsonField(raw, "batch").toLong)
-      (v, op, batch, parseGroups(raw).size,
+      (v, op, batchTag(raw), parseGroups(raw).size,
         jsonField(raw, "replace").toBoolean, st.getModificationTime)
     }
     import spark.implicits._

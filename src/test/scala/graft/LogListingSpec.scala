@@ -5,9 +5,10 @@ import java.nio.file.{Files, Path => JPath}
 import java.util.concurrent.ConcurrentLinkedQueue
 import java.util.concurrent.atomic.AtomicReference
 
-import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, LocatedFileStatus,
-  Path, RawLocalFileSystem, RemoteIterator}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, LocalFileSystem,
+  LocatedFileStatus, Path, RawLocalFileSystem, RemoteIterator}
 import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.sources.VersionedTable
@@ -15,9 +16,11 @@ import graft.sources.VersionedTable.CommitConflictException
 import graft.streaming.VersionedSink
 
 /** The stock local filesystem under its own `vtcount` scheme: it
-  * records every directory it lists, and can run one action just
-  * before a writer publishes into a given `_log/` (the `mkdirs`
-  * every commit makes first). Registered per session as
+  * records every directory it lists and every file it creates, can
+  * run one action just before a writer publishes into a given `_log/`
+  * (the `mkdirs` every commit makes first), and can fail one created
+  * stream on `close` — bytes that never reached the file, as in a
+  * crash mid-write. Registered per session as
   * `fs.vtcount.impl`, so only paths written `vtcount:///...` pass
   * through it. */
 class ListCountingFs extends LocalFileSystem(new RawLocalFileSystem {
@@ -41,6 +44,21 @@ class ListCountingFs extends LocalFileSystem(new RawLocalFileSystem {
   override def mkdirs(f: Path, permission: FsPermission): Boolean = {
     runHook(f); super.mkdirs(f, permission)
   }
+  override def create(f: Path, permission: FsPermission,
+      overwrite: Boolean, bufferSize: Int, replication: Short,
+      blockSize: Long, progress: Progressable): FSDataOutputStream = {
+    val p = f.toUri.getPath
+    created.add(p)
+    val out = super.create(f, permission, overwrite, bufferSize,
+      replication, blockSize, progress)
+    val fault = failOnClose.get
+    if (fault == null || !fault(p) || !failOnClose.compareAndSet(fault, null))
+      out
+    else new FSDataOutputStream(out, null) {
+      override def close(): Unit =
+        throw new java.io.IOException(s"injected failure closing $p")
+    }
+  }
   private def runHook(f: Path): Unit = {
     val hook = beforePublish.get
     if (hook != null && hook._1 == f.toUri.getPath &&
@@ -51,6 +69,9 @@ class ListCountingFs extends LocalFileSystem(new RawLocalFileSystem {
 object ListCountingFs {
   val Uri: URI = URI.create("vtcount:///")
   val listed = new ConcurrentLinkedQueue[String]()
+  val created = new ConcurrentLinkedQueue[String]()
+  /** Fails the next created stream whose path it accepts, on close. */
+  val failOnClose = new AtomicReference[String => Boolean]()
   /** (log dir, action): runs once, on the next mkdirs of that dir. */
   val beforePublish = new AtomicReference[(String, () => Unit)]()
 }
@@ -229,5 +250,42 @@ class LogListingSpec extends AnyFunSuite {
     assert(added.size == 1, s"only the winner's group remains: $added")
     assert(VersionedTable.currentVersion(spark, p) == 10L)
     assert(rows(p) == baseRows + (900L -> "winner"))
+  }
+
+  private def logFiles(p: String): Set[String] =
+    java.nio.file.Paths.get(new URI(p).getPath, "_log").toFile.list().toSet
+
+  test("checkpoints land by rename: neither a checkpoint-boundary " +
+      "commit nor expireVersions creates a chk-v*.json path") {
+    val p = table()
+    val log = new URI(p).getPath + "/_log/"
+    ListCountingFs.created.clear()
+    assert(VersionedTable.commit(spark, p, df(500L -> "n"), 9L,
+      statsCol = Some("k")) == 10L)
+    assert(VersionedTable.expireVersions(spark, p, keepLast = 3) == 7L)
+    val direct = ListCountingFs.created.toArray.map(_.toString)
+      .filter(c => c.startsWith(log) && new Path(c).getName.startsWith("chk-v"))
+    assert(direct.isEmpty, s"created in place: ${direct.mkString(", ")}")
+    assert(hasCheckpoint(p, 10L) && hasCheckpoint(p, 7L))
+    assert(logFiles(p).forall(n => !n.startsWith(".tmp")))
+    assert(rows(p) == baseRows + (500L -> "n"))
+    // v8 resolves from the horizon checkpoint v7 plus entry v8
+    assert(VersionedTable.read(spark, p, Some(8L)).get.count() == 40L)
+  }
+
+  test("a checkpoint write that fails inside expireVersions expires " +
+      "no entry and leaves the head readable") {
+    val p = table()
+    val log = new URI(p).getPath + "/_log/"
+    val before = logFiles(p)
+    ListCountingFs.failOnClose.set(c => c.startsWith(log) && c.contains("chk"))
+    intercept[java.io.IOException] {
+      VersionedTable.expireVersions(spark, p, keepLast = 3)
+    }
+    assert(ListCountingFs.failOnClose.get == null, "the fault never ran")
+    assert(logFiles(p).filter(_.startsWith("v")) ==
+      before.filter(_.startsWith("v")), "an entry was deleted")
+    assert(rows(p) == baseRows)
+    assert(VersionedTable.read(spark, p, Some(6L)).get.count() == 30L)
   }
 }

@@ -1057,4 +1057,47 @@ class VersionedTableSpec extends AnyFunSuite {
       "the staged empty batch dir must be cleaned up")
     assert(snapshot(p) == Map(1L -> "a"))
   }
+
+  test("an empty mergePruned batch publishes no version and stages no " +
+      "stats-less group, so a later rebase still folds a disjoint " +
+      "append") {
+    val fresh = tmp()
+    assert(VersionedTable.mergePruned(spark, fresh, kdf(), "k") == ((0L, 0)))
+    assert(VersionedTable.currentVersion(spark, fresh) == 0L)
+    assert(dataGroupCount(fresh) == 0, "the empty staged group is dropped")
+    val p = tmp()
+    val v1 = VersionedTable.commit(spark, p, kdf(1L -> 10, 2L -> 20),
+      0L, statsCol = Some("k"))
+    assert(VersionedTable.mergePruned(spark, p, kdf(), "k") == ((v1, 0)))
+    assert(VersionedTable.currentVersion(spark, p) == v1)
+    assert(dataGroupCount(p) == 1, "the empty staged group is dropped")
+    // a merge pinned at v1 while a disjoint append lands still folds
+    val v2 = VersionedTable.commit(spark, p, kdf(500L -> 5), v1,
+      statsCol = Some("k"))
+    assert(VersionedTable.mergePrunedRebase(spark, p, kdf(2L -> 99), "k",
+      fromVersion = Some(v1)) == ((v2 + 1, 1, 1)))
+    assert(ksnapshot(p) == Map(1L -> 10L, 2L -> 99L, 500L -> 5L))
+  }
+
+  test("mergePrunedRebase of an empty or all-null-key batch, pinned " +
+      "behind a disjoint append, does not conflict") {
+    val p = tmp()
+    val v1 = VersionedTable.commit(spark, p, kdf(1L -> 10, 2L -> 20),
+      0L, statsCol = Some("k"))
+    val v2 = VersionedTable.commit(spark, p, kdf(500L -> 5), v1,
+      statsCol = Some("k"))
+    // empty: nothing to publish, the pinned version comes back
+    assert(VersionedTable.mergePrunedRebase(spark, p, kdf(), "k",
+      fromVersion = Some(v1)) == ((v1, 0, 0)))
+    assert(VersionedTable.currentVersion(spark, p) == v2)
+    // null keys match nothing: appended, with one fold over the append
+    val nulls = spark.sql(
+      "SELECT CAST(NULL AS BIGINT) AS k, CAST(7 AS BIGINT) AS pay")
+    assert(VersionedTable.mergePrunedRebase(spark, p, nulls, "k",
+      fromVersion = Some(v1)) == ((v2 + 1, 0, 1)))
+    val got = VersionedTable.read(spark, p).get.collect().map(r =>
+      (if (r.isNullAt(0)) None else Some(r.getLong(0))) -> r.getLong(1))
+    assert(got.toSet == Set(Some(1L) -> 10L, Some(2L) -> 20L,
+      Some(500L) -> 5L, None -> 7L))
+  }
 }
