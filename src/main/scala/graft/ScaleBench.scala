@@ -18,7 +18,7 @@ import org.apache.spark.sql.functions._
   * explosions, global sorts are n·log n, candidate joins grow with
   * duplicate density). Measured numbers live in SCALE.md.
   *
-  * Run: sbt "runMain graft.ScaleBench"   (regenerates target/sf1 if absent)
+  * Run: sbt "runMain graft.ScaleBench"   (replicates a tier on first use)
   */
 object ScaleBench {
 
@@ -335,12 +335,16 @@ object ScaleBench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // three tiers, identical 32-file layout: 1x, 10x, 100x sf0.1
-    val tiers = Seq(1 -> "target/sf01rw", 10 -> "target/sf1",
+    // three tiers, identical 32-file layout: 1x, 10x, 100x sf0.1, each
+    // replicated on first use, so a run builds only the tiers its rows
+    // and blocks read (local_arm and cc_chain read none)
+    val tierDirs = Map(1 -> "target/sf01rw", 10 -> "target/sf1",
       100 -> "target/sf10")
-    tiers.foreach { case (c, dir) =>
+    def tier(copies: Int): String = {
+      val dir = tierDirs(copies)
       if (!Files.exists(Paths.get(s"$dir/lineitem.parquet")))
-        replicate(spark, src, dir, copies = c)
+        replicate(spark, src, dir, copies)
+      dir
     }
 
     def time(name: String, d: String): Double = {
@@ -368,9 +372,9 @@ object ScaleBench {
       if (blocks.nonEmpty && only.isEmpty) Seq.empty[String]
       else Subset.filter(n => only.forall(_.contains(n)))
     val rows = rowNames.map { name =>
-      val t1 = best(name, tiers(0)._2)
-      val t10 = best(name, tiers(1)._2)
-      val t100 = if (SkipAt100(name)) -1.0 else best(name, tiers(2)._2)
+      val t1 = best(name, tier(1))
+      val t10 = best(name, tier(10))
+      val t100 = if (SkipAt100(name)) -1.0 else best(name, tier(100))
       (name, t1, t10, t100)
     }
     val json = rows.map { case (n, t1, t10, t100) =>
@@ -442,16 +446,16 @@ object ScaleBench {
           }
           math.min(once, once)
         }
-        val ex1 = knnExact("target/sf01rw")
-        val ex10 = knnExact("target/sf1")
+        val ex1 = knnExact(tier(1))
+        val ex10 = knnExact(tier(10))
         // the quadratic only BITES at the 100x tier: at 10x the 20 M
         // blocked pairs are still one dense compute burst (~1 G long
         // mult-adds over 32 cores), so x1/x10 sit at the job floor —
         // the 100x point (2 G pairs) is where the slopes separate
-        val ex100 = knnExact("target/sf10")
-        val an1 = knnAnn("target/sf01rw", 8)
-        val an10 = knnAnn("target/sf1", 25)
-        val an100 = knnAnn("target/sf10", 80)
+        val ex100 = knnExact(tier(100))
+        val an1 = knnAnn(tier(1), 8)
+        val an10 = knnAnn(tier(10), 25)
+        val an100 = knnAnn(tier(100), 80)
         System.err.println(
           f"""[scalebench] {"knn_graph":{"exact_x1":$ex1%.2f,""" +
             f""""exact_x10":$ex10%.2f,"exact_x100":$ex100%.2f,""" +
@@ -482,7 +486,7 @@ object ScaleBench {
           }
           math.min(once, once)
         }
-        val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
+        val js = Seq(10 -> tier(10), 100 -> tier(100)).map {
           case (c, dir) =>
             val ep = s"target/kc_edges_x$c"
             if (!Files.exists(Paths.get(ep)))
@@ -539,7 +543,7 @@ object ScaleBench {
           }
           math.min(once, once)
         }
-        val kmv = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
+        val kmv = Seq(10 -> tier(10), 100 -> tier(100)).map {
           case (c, dir) => (c, best2(dir, heap = false), best2(dir, heap = true))
         }
         val js = kmv.map { case (c, w, h) =>
@@ -571,7 +575,7 @@ object ScaleBench {
           val a = timed(f); val b = timed(f)
           (a._1, math.min(a._2, b._2))
         }
-        val tiersJs = Seq(1 -> "target/sf01rw", 10 -> "target/sf1").map {
+        val tiersJs = Seq(1 -> tier(1), 10 -> tier(10)).map {
           case (c, dir) =>
             val docs = Tables.documents(spark, dir)
             // batch: original-id docs only, so it is IDENTICAL at every
@@ -703,7 +707,7 @@ object ScaleBench {
           }
           math.min(once, once)
         }
-        val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
+        val js = Seq(10 -> tier(10), 100 -> tier(100)).map {
           case (c, dir) =>
             val ep = s"target/adj_edges_x$c"
             val t0 = System.nanoTime()
@@ -744,8 +748,8 @@ object ScaleBench {
       // timed at the same sizes (same rewrite shape + the commit).
       if (blockOn("vtable_merge")) locally {
         import graft.sources.VersionedTable
-        val js = Seq(1 -> "target/sf01rw", 10 -> "target/sf1",
-          100 -> "target/sf10").map { case (c, dir) =>
+        val js = Seq(1 -> tier(1), 10 -> tier(10),
+          100 -> tier(100)).map { case (c, dir) =>
           val p = s"target/vt_ev_x$c"
           val fsp = new org.apache.hadoop.fs.Path(p)
           val fs = fsp.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -782,7 +786,7 @@ object ScaleBench {
       // file-skipping argument, measured.
       if (blockOn("vtable_prune")) locally {
         import graft.sources.VersionedTable
-        val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
+        val js = Seq(10 -> tier(10), 100 -> tier(100)).map {
           case (c, dir) =>
             val ev = spark.read.parquet(s"$dir/events.parquet")
             def build(p: String): Unit = {
@@ -966,7 +970,7 @@ object ScaleBench {
       // O(table) law that makes CDC off a 100 TB table readable.
       if (blockOn("feed_tiers")) locally {
         import graft.sources.VersionedTable
-        val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
+        val js = Seq(10 -> tier(10), 100 -> tier(100)).map {
           case (c, dir) =>
             val ev = spark.read.parquet(s"$dir/events.parquet")
               .select(col("event_id"), col("user_id"), col("event_type"))
@@ -1056,7 +1060,7 @@ object ScaleBench {
           }
           math.min(once, once)
         }
-        val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
+        val js = Seq(10 -> tier(10), 100 -> tier(100)).map {
           case (c, dir) =>
             def hashes = ops.Multimodal.decodeDHash(spark,
               ops.Multimodal.synthVariantImages(spark,
@@ -1107,7 +1111,7 @@ object ScaleBench {
             (dir, msg) => SparkEntry.queries(
               if (msg) "x9_hits_msg" else "x9_hits")(spark, dir)))
         val js = arms.map { case (op, mk) =>
-          val parts = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
+          val parts = Seq(10 -> tier(10), 100 -> tier(100)).map {
             case (c, dir) =>
               val b = best2(mk(dir, false))
               val m = best2(mk(dir, true))
@@ -1133,8 +1137,8 @@ object ScaleBench {
           }
           math.min(once, once)
         }
-        val js = Seq(1 -> "target/sf01rw", 10 -> "target/sf1",
-          100 -> "target/sf10").map { case (c, dir) =>
+        val js = Seq(1 -> tier(1), 10 -> tier(10),
+          100 -> tier(100)).map { case (c, dir) =>
           val row = SparkEntry.queries("x9_rank_advisor")(spark, dir).head()
           val nodes = row.getAs[Long]("n_nodes_est")
           val arm = row.getAs[String]("arm")
@@ -1166,7 +1170,7 @@ object ScaleBench {
           }
           math.min(once, once)
         }
-        val ev = spark.read.parquet("target/sf1/events.parquet")
+        val ev = spark.read.parquet(s"${tier(10)}/events.parquet")
         val pinned = ev.schema
         val js = Seq(500, 4000).map { nf =>
           val p = s"target/smc_$nf"
@@ -1228,7 +1232,7 @@ object ScaleBench {
           "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"
             -> "8m",
           "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "2m")
-        val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
+        val js = Seq(10 -> tier(10), 100 -> tier(100)).map {
           case (c, dir) =>
             val left = spark.read.parquet(s"$dir/events.parquet")
               .select(when(col("event_id") % 3 === 0, lit(42L))
@@ -1302,7 +1306,7 @@ object ScaleBench {
           }
           math.min(once, once)
         }
-        val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
+        val js = Seq(10 -> tier(10), 100 -> tier(100)).map {
           case (c, dir) =>
             val ev = spark.read.parquet(s"$dir/events.parquet")
             val rowsPerGroup = 6000L // ~256 KiB of events rows
@@ -1387,9 +1391,9 @@ object ScaleBench {
           if (a._1 <= b._1) a else b
         }
         // tier rows (defaults): min-of-2 at 1x/10x, single at 100x
-        val t1 = best2("target/sf01rw", 2, "007")
-        val t10 = best2("target/sf1", 2, "007")
-        val t100 = statsRun("target/sf10", 2, "007")
+        val t1 = best2(tier(1), 2, "007")
+        val t10 = best2(tier(10), 2, "007")
+        val t100 = statsRun(tier(100), 2, "007")
         // replicas are DISJOINT, so no source can ever reach outside
         // its own replica: per-source state is bounded by one
         // replica's node universe (<= its part count) at EVERY tier —
@@ -1398,7 +1402,7 @@ object ScaleBench {
         // tier: 10x the sources sample the per-source reach
         // distribution 10x more often.)
         val replicaNodes =
-          spark.read.parquet("target/sf01rw/part.parquet").count()
+          spark.read.parquet(s"${tier(1)}/part.parquet").count()
         require(t1._4 <= replicaNodes && t10._4 <= replicaNodes &&
           t100._4 <= replicaNodes,
           s"per-source reach must be replica-bounded (<= $replicaNodes " +
@@ -1411,7 +1415,7 @@ object ScaleBench {
           (dTag, depth) <- Seq("d2" -> 2, "d3" -> 3)
           (sTag, hex) <- Seq("s512" -> "007", "s128" -> "01f")
         } yield {
-          val g = best2("target/sf01rw", depth, hex)
+          val g = best2(tier(1), depth, hex)
           f""""${dTag}_$sTag":{"sec":${g._1}%.2f,"sources":${g._2},""" +
             f""""state_rows":${g._3},"max_reach":${g._4}}"""
         }
@@ -1445,7 +1449,7 @@ object ScaleBench {
           if (a._1 <= b._1) a else b
         }
         val parts = Seq(
-          (10, "target/sf1", true), (100, "target/sf10", false)).map {
+          (10, tier(10), true), (100, tier(100), false)).map {
           case (c, dir, twice) =>
             val b = if (twice) best2(dir, msg = false)
               else armRun(dir, msg = false)
@@ -1521,7 +1525,7 @@ object ScaleBench {
           }
           math.min(once, once)
         }
-        val js = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
+        val js = Seq(10 -> tier(10), 100 -> tier(100)).map {
           case (c, dir) =>
             val b = best2(Parity39.hitsQ(spark, dir, msg = false))
             val two = best2(Parity39.hitsQ(spark, dir, msg = true))
@@ -1638,9 +1642,9 @@ object ScaleBench {
           val a = run(dir); val b = run(dir)
           if (a._1 <= b._1) a else b
         }
-        val t1 = best2("target/sf01rw")
-        val t10 = best2("target/sf1")
-        val t100 = run("target/sf10")
+        val t1 = best2(tier(1))
+        val t10 = best2(tier(10))
+        val t100 = run(tier(100))
         // interior nodes are replica-local, so the scored-node count
         // must track the tier like the seeds do
         require(t10._2 >= 8 * t1._2 && t100._2 >= 8 * t10._2,
@@ -1673,9 +1677,9 @@ object ScaleBench {
           val a = run(dir); val b = run(dir)
           if (a._1 <= b._1) a else b
         }
-        val t1 = best2("target/sf01rw")
-        val t10 = best2("target/sf1")
-        val t100 = run("target/sf10")
+        val t1 = best2(tier(1))
+        val t10 = best2(tier(10))
+        val t100 = run(tier(100))
         Seq(t1, t10, t100).foreach { t =>
           require(t._2 == 5 * t._3,
             s"every walk must run the full 4 steps: rows ${t._2} vs " +
@@ -1810,8 +1814,8 @@ object ScaleBench {
           val a = run(dir); val b = run(dir)
           if (a._1 <= b._1) a else b
         }
-        val t1 = best2("target/sf01rw")
-        val t10 = best2("target/sf1")
+        val t1 = best2(tier(1))
+        val t10 = best2(tier(10))
         require(t10._2 >= 8 * t1._2 && t10._2 <= 12 * t1._2,
           s"disjoint replicas: surviving truss edges must track the " +
             s"tier linearly: ${t1._2} -> ${t10._2}")
@@ -1972,8 +1976,8 @@ object ScaleBench {
           val x = run(dir); val y = run(dir)
           if (x._1 <= y._1) x else y
         }
-        val (s1, r1) = best2("target/sf01rw")
-        val (s10, r10) = best2("target/sf1")
+        val (s1, r1) = best2(tier(1))
+        val (s10, r10) = best2(tier(10))
         require(r1.map(t => (t._1, t._2, t._3)) ==
           r10.map(t => (t._1, t._2, t._3)),
           s"merge sequence must be replica-invariant:\n$r1\nvs\n$r10")
@@ -2084,13 +2088,13 @@ object ScaleBench {
             sum(when(col("rank_pico") > 0, 1L).otherwise(0L))).head()
           (r.getLong(0), r.getLong(1))
         }
-        val m1 = best2("x9_mis", "target/sf01rw", misAgg)
-        val m10 = best2("x9_mis", "target/sf1", misAgg)
+        val m1 = best2("x9_mis", tier(1), misAgg)
+        val m10 = best2("x9_mis", tier(10), misAgg)
         require(m10._2 >= 8 * m1._2 && m10._3 >= 8 * m1._3,
           s"disjoint replicas: MIS size must track the tier: " +
             s"${m1._2}/${m1._3} -> ${m10._2}/${m10._3}")
-        val p1 = best2("x9_ppr", "target/sf01rw", pprAgg)
-        val p10 = best2("x9_ppr", "target/sf1", pprAgg)
+        val p1 = best2("x9_ppr", tier(1), pprAgg)
+        val p10 = best2("x9_ppr", tier(10), pprAgg)
         require(p10._2 >= 8 * p1._2,
           s"seed count must track the tier: ${p1._2} -> ${p10._2}")
         def js(t: (Double, Long, Long), k1: String, k2: String): String =
@@ -2132,7 +2136,7 @@ object ScaleBench {
           val x = once; val y = once
           if (x._1 <= y._1) x else y
         }
-        val parts = Seq(10 -> "target/sf1", 100 -> "target/sf10").map {
+        val parts = Seq(10 -> tier(10), 100 -> tier(100)).map {
           case (c, dir) =>
             val b = best2(dir, msg = false)
             val m = best2(dir, msg = true)

@@ -73,14 +73,16 @@ object Ingest {
     * abort-on-error default; at 100 TB one bad row must not kill the
     * load, and silently dropping it loses audit). PERMISSIVE parsing
     * surfaces each unparseable row's RAW LINE in `_corrupt_record`;
-    * the return pair is (typed good rows, quarantined raw lines +
-    * source file). The split runs from one cached parse — Spark
-    * forbids referencing only the corrupt column on the streaming
-    * re-parse path, and caching also guarantees both halves see the
-    * same parse. */
-  private def parseCsvQuarantine(spark: SparkSession, path: String,
+    * `f` gets (typed good rows, quarantined raw lines + source file).
+    * The split runs from one cached parse — Spark forbids referencing
+    * only the corrupt column on the streaming re-parse path, and
+    * caching also guarantees both halves see the same parse. The cache
+    * is unpersisted on the way out, so repeated loads do not
+    * accumulate pinned InMemoryRelations: write/collect both frames
+    * inside `f`, since lazy plans would silently re-parse. */
+  def withCsvQuarantine[T](spark: SparkSession, path: String,
       schema: org.apache.spark.sql.types.StructType)
-      : (DataFrame, DataFrame, DataFrame) = {
+      (f: (DataFrame, DataFrame) => T): T = {
     val Corrupt = "_corrupt_record"
     // _metadata must become a REAL column before the cache: the hidden
     // file-source column never enters InMemoryRelation, so a later
@@ -94,35 +96,10 @@ object Ingest {
       .csv(path)
       .select(col("*"), sourceFile.as("__source_file"))
       .cache()
-    val good = parsed.filter(col(Corrupt).isNull)
-      .drop(Corrupt, "__source_file")
-    val bad = parsed.filter(col(Corrupt).isNotNull)
-      .select(col("__source_file").as("source_file"),
-        col(Corrupt).as("raw_line"))
-    (parsed, good, bad)
-  }
-
-  /** One-shot form: the returned halves share a cached parse that
-    * stays pinned for the session — fine for a single interactive
-    * load, a leak for repeated/batched loads. Prefer
-    * [[withCsvQuarantine]], which unpersists on the way out. */
-  def readCsvQuarantine(spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType)
-      : (DataFrame, DataFrame) = {
-    val (_, good, bad) = parseCsvQuarantine(spark, path, schema)
-    (good, bad)
-  }
-
-  /** Bracketed form of [[readCsvQuarantine]]: consume both halves
-    * inside `f`; the backing cache is unpersisted on the way out, so
-    * repeated loads do not accumulate pinned InMemoryRelations.
-    * Write/collect both frames before returning — the cache is gone
-    * afterwards and lazy plans would silently re-parse. */
-  def withCsvQuarantine[T](spark: SparkSession, path: String,
-      schema: org.apache.spark.sql.types.StructType)
-      (f: (DataFrame, DataFrame) => T): T = {
-    val (parsed, good, bad) = parseCsvQuarantine(spark, path, schema)
-    try f(good, bad)
+    try f(parsed.filter(col(Corrupt).isNull).drop(Corrupt, "__source_file"),
+      parsed.filter(col(Corrupt).isNotNull)
+        .select(col("__source_file").as("source_file"),
+          col(Corrupt).as("raw_line")))
     finally parsed.unpersist()
   }
 

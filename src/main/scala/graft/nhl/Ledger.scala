@@ -3,24 +3,31 @@ package graft.nhl
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.sources.VersionedTable
+
 /** `COPY INTO` load-history semantics (SURVEY.md §2 row S7 + §7):
   * load each staged file exactly once, so replays are no-ops.
   *
-  * Without a table format, the ledger is a small parquet table of
-  * loaded `source_file` names; new data is anti-joined against it
-  * before an append. The ledger is tiny (one row per file), so the
-  * anti-join broadcasts — the big side never shuffles. With a table
-  * format this collapses to MERGE; with Structured Streaming the
-  * checkpoint plays the ledger role (see graft.streaming).
+  * A COPY INTO target is a [[graft.sources.VersionedTable]] whose log
+  * carries the load history: each load is ONE commit, and its log
+  * entry names the `source_file`s whose rows it holds, so data and
+  * history land in the same atomic publish (Snowflake records load
+  * history in the same statement). The loaded-file set is folded from
+  * the log on the driver, so a load costs one Spark job, and
+  * checkpoints and version expiry keep the set. With Structured
+  * Streaming the checkpoint plays the ledger role (see
+  * graft.streaming).
   *
   * Also covers S11/P7 (dbt incremental delete+insert): because keys
   * are content hashes, "delete rows whose key is in the new batch then
   * insert the new batch" ≡ "append rows whose key isn't already in the
-  * target" — implemented as the same anti-join on `unique_key`.
+  * target" — implemented as an anti-join on `unique_key`. Those two
+  * verbs, [[deleteInsert]] and [[incrementalByKey]], still write a
+  * plain parquet directory at `dataPath`, so [[readTarget]] tells the
+  * layouts apart by whether the target has a `_log/`.
   */
 object Ledger {
 
-  def ledgerPath(targetPath: String): String = s"$targetPath/_ledger"
   def dataPath(targetPath: String): String = s"$targetPath/data"
 
   /** Path existence through the Hadoop FileSystem API so the ledger
@@ -31,39 +38,29 @@ object Ledger {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  private def loadedFiles(spark: SparkSession, target: String): DataFrame = {
-    val p = ledgerPath(target)
-    if (pathExists(spark, p))
-      spark.read.parquet(p)
-    else
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField(
-            "source_file", org.apache.spark.sql.types.StringType))))
-  }
-
-  /** Read the incrementally-maintained table. */
-  def readTarget(spark: SparkSession, target: String): Option[DataFrame] = {
-    val p = dataPath(target)
-    if (pathExists(spark, p)) Some(spark.read.parquet(p)) else None
-  }
-
-  /** Append only rows from not-yet-loaded files; record those files.
-    * Returns the number of rows appended. Exactly the reference's
-    * COPY INTO idempotence: re-running on the same stage is a no-op
-    * (ref: include/sql/copy_into_*.sql + Snowflake load history). */
-  def copyInto(spark: SparkSession, batch: DataFrame, target: String): Long = {
-    val ledger = broadcast(loadedFiles(spark, target))
-    val fresh = batch.join(ledger, Seq("source_file"), "left_anti")
-    val n = fresh.count()
-    if (n > 0) {
-      fresh.write.mode(SaveMode.Append).parquet(dataPath(target))
-      fresh.select(col("source_file")).distinct()
-        .write.mode(SaveMode.Append).parquet(ledgerPath(target))
+  /** Read the incrementally-maintained table: a COPY INTO target as
+    * one relation over its live groups (no footer read for groups this
+    * JVM wrote or read), a plain-directory target as parquet. None
+    * before the first load. */
+  def readTarget(spark: SparkSession, target: String): Option[DataFrame] =
+    if (pathExists(spark, s"$target/_log"))
+      // a COPY INTO group records no key stats, so the index column
+      // prunes nothing here; the flat relation is what is wanted
+      VersionedTable.readIndexed(spark, target, "source_file")
+        .orElse(VersionedTable.read(spark, target))
+    else {
+      val p = dataPath(target)
+      if (pathExists(spark, p)) Some(spark.read.parquet(p)) else None
     }
-    n
-  }
+
+  /** Append only rows from not-yet-loaded files and record those files,
+    * as one versioned-table commit tagged `copy_into`. Returns the
+    * number of rows appended. Exactly the reference's COPY INTO
+    * idempotence: re-running on the same stage is a no-op, also after
+    * a crash mid-load (ref: include/sql/copy_into_*.sql + Snowflake
+    * load history). */
+  def copyInto(spark: SparkSession, batch: DataFrame, target: String): Long =
+    VersionedTable.copyFiles(spark, target, batch, "source_file")
 
   /** dbt-default incremental `delete+insert`: drop target rows whose
     * key appears in the batch, then insert the batch — batch rows WIN

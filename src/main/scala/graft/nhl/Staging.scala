@@ -18,14 +18,23 @@ object Staging {
     * (ref: team_statistics.sql:12-25). */
   private val statCols = Schemas.teamStatsCols
 
+  /** Matches exactly the strings whose full uppercase contains
+    * "DIVISION" (besides ASCII, only ı → I and ſ → S add one of its
+    * letters), without `upper`, whose first use loads ICU case mapping
+    * for the life of the JVM. */
+  private val DivisionPattern = "[dD][iIı][vV][iIı][sSſ][iIı][oO][nN]"
+
   /** P6: scraped HTML embeds division-header rows; null them out
     * column-wise (ref: team_statistics.sql:12-25 CASE WHEN
-    * UPPER(col) LIKE '%DIVISION%' THEN NULL). */
-  def nullOutDivisionRows(df: DataFrame): DataFrame =
-    statCols.foldLeft(df) { (d, c) =>
-      d.withColumn(c,
-        when(upper(col(c)).like("%DIVISION%"), lit(null)).otherwise(col(c)))
-    }
+    * UPPER(col) LIKE '%DIVISION%' THEN NULL), in one projection. */
+  def nullOutDivisionRows(df: DataFrame): DataFrame = {
+    val stat = statCols.toSet
+    df.select(df.columns.toSeq.map { c =>
+      val v = col(s"`${c.replace("`", "``")}`") // any name, dots included
+      if (!stat(c)) v
+      else when(v.rlike(DivisionPattern), lit(null)).otherwise(v).as(c)
+    }: _*)
+  }
 
   /** P5: keep rows where all 14 stat columns are non-null
     * (ref: team_statistics.sql:32-46). */

@@ -12,7 +12,7 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *
   * into the heap-based [[TopKPerKeyNode]] — same single shuffle, but
   * O(n log k) bounded-heap work instead of a full O(n log n) partition
-  * sort (1.9x at sf0.1, growing with rows-per-key; see TopKBench).
+  * sort (1.9x at sf0.1, growing with rows-per-key; see SCALE.md).
   *
   * Fires only when the rewrite is airtight:
   *  - the Window computes exactly ONE expression: row_number() over a

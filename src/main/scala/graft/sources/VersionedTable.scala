@@ -34,12 +34,15 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *  - a log entry references one or more groups and may carry
   *    per-group [min,max] KEY STATS (the Delta file-stats idea):
   *    `replace = true` entries reset the live set, `false` entries
-  *    append. Readers fold entries ≤ the requested version. Every
-  *    `checkpointInterval` commits the winner writes a consolidated
-  *    live-set checkpoint (stats included), so a read opens
-  *    O(commits since checkpoint) log entries, not O(commits).
-  *    Checkpoints are written to a temp file and renamed into place,
-  *    so no reader ever folds a torn one.
+  *    append. An entry may also name the source files it loaded
+  *    (COPY INTO load history, [[copyFiles]]); that set accumulates
+  *    across append AND replace entries. Readers fold entries ≤ the
+  *    requested version. Every `checkpointInterval` commits the
+  *    winner writes a consolidated checkpoint of the live set (stats
+  *    included) and the loaded-file set, so a read opens O(commits
+  *    since checkpoint) log entries, not O(commits). Checkpoints are
+  *    written to a temp file and renamed into place, so no reader
+  *    ever folds a torn one.
   *  - every verb loads the table state ONCE: one `_log/` listing,
   *    folded into an immutable snapshot (version, live groups with
   *    their stats, column mapping and checks). The verb gates, plans
@@ -222,6 +225,19 @@ object VersionedTable {
     if (body.isEmpty) Seq.empty else body.split(",").toSeq.map(_.trim)
   }
 
+  /** The loaded-file names of an entry or checkpoint, percent-encoded
+    * so no name can break the log grammar. Logs written before load
+    * history carry no "files" field: an empty set. */
+  private def filesJson(files: Iterable[String]): String =
+    if (files.isEmpty) ""
+    else files.map(n => s""""${java.net.URLEncoder.encode(n, "UTF-8")}"""")
+      .mkString(""","files":[""", ",", "]")
+
+  private def parseFiles(raw: String): Seq[String] =
+    if (!raw.contains("\"files\":[")) Seq.empty
+    else arrayBody(raw, "files").map(n => java.net.URLDecoder.decode(
+      n.stripPrefix("\"").stripSuffix("\""), "UTF-8"))
+
   private def parseGroups(raw: String): Seq[Group] = {
     val names = arrayBody(raw, "groups")
       .map(_.stripPrefix("\"").stripSuffix("\""))
@@ -295,15 +311,18 @@ object VersionedTable {
     * it may consolidate such entries; 0 when none), and `batch`, the
     * streaming micro-batch tag of the entry at `version` (read when the
     * fold reaches that entry, or on request when `version` is a
-    * checkpoint). */
+    * checkpoint), and `files`, the source files loaded up to `version`
+    * ([[copyFiles]]' load history). */
   private final case class Snapshot(version: Long, groups: Seq[Group],
-      schema: SchemaState, schemaAt: Long, batch: Option[Long] = None)
+      schema: SchemaState, schemaAt: Long, batch: Option[Long] = None,
+      files: Set[String] = Set.empty)
 
   /** The state at `asOf` (None = the listing's head), in one pass:
     * start from the newest checkpoint ≤ the version, then fold every
     * entry after it — a replace entry resets the live set, an append
-    * extends it, and the latest schema-carrying entry wins (each holds
-    * the FULL state). The files OPENED are bounded by
+    * extends it, the latest schema-carrying entry wins (each holds
+    * the FULL state), and every entry's loaded files join the set,
+    * whatever its kind. The files OPENED are bounded by
     * [[CheckpointInterval]], not table age. */
   private def foldLog(f: FileSystem, log: LogListing,
       asOf: Option[Long], headBatch: Boolean = false): Snapshot = {
@@ -313,7 +332,8 @@ object VersionedTable {
       case (c, st) =>
         val raw = readJson(f, st.getPath)
         Snapshot(v, parseGroups(raw),
-          parseSchema(raw).getOrElse(EmptySchemaState), c)
+          parseSchema(raw).getOrElse(EmptySchemaState), c,
+          files = parseFiles(raw).toSet)
     }
     val from = chk.fold(0L)(_._1)
     val folded = log.entries.filter { case (e, _) => e > from && e <= v }
@@ -326,7 +346,8 @@ object VersionedTable {
             if (jsonField(raw, "replace").toBoolean) gs else acc.groups ++ gs,
           schema = sch.getOrElse(acc.schema),
           schemaAt = if (sch.isDefined) e else acc.schemaAt,
-          batch = if (e == v) batchTag(raw) else acc.batch)
+          batch = if (e == v) batchTag(raw) else acc.batch,
+          files = acc.files ++ parseFiles(raw))
       }
     // the checkpoint at `v` stands in for its entry in the fold
     if (!headBatch || v != from) folded
@@ -386,13 +407,14 @@ object VersionedTable {
     * entry applies to. `batchId` (optional) tags the entry with a
     * streaming micro-batch id — the idempotence token
     * [[graft.streaming.VersionedSink]] deduplicates retried batches
-    * on. */
+    * on. `files` are the source files this entry loads, published in
+    * the same atomic create as its groups ([[copyFiles]]). */
   private def commitEntry(spark: SparkSession, path: String,
       base: Snapshot, groups: Seq[Group], replace: Boolean,
       staged: Seq[String], batchId: Option[Long] = None,
       arbiterFor: FileSystem => CommitArbiter = CommitArbiter.forFs,
       schema: Option[SchemaState] = None,
-      op: Option[String] = None): Long = {
+      op: Option[String] = None, files: Seq[String] = Seq.empty): Long = {
     val next = base.version + 1
     val f = fs(spark, path)
     f.mkdirs(new Path(logDir(path)))
@@ -403,7 +425,7 @@ object VersionedTable {
     val opJs = op.map(o => s""""op":"$o",""").getOrElse("")
     val schemaJs = schema.map(st => s"${schemaJson(st)},").getOrElse("")
     val payload =
-      s"""{"version":$next,$opJs$batchJs$schemaJs"replace":$replace,${groupsJson(groups)}}"""
+      s"""{"version":$next,$opJs$batchJs$schemaJs"replace":$replace,${groupsJson(groups)}${filesJson(files)}}"""
     if (!publishExclusive(f, entry, payload.getBytes("UTF-8"), arbiterFor)) {
       staged.foreach(dropStaged(spark, path, _))
       throw new CommitConflictException(next)
@@ -415,12 +437,13 @@ object VersionedTable {
     if (next % CheckpointInterval == 0)
       writeCheckpoint(f, path, next,
         if (replace) groups else base.groups ++ groups,
-        schema.getOrElse(base.schema))
+        schema.getOrElse(base.schema), base.files ++ files)
     next
   }
 
-  /** Publish the live set `live` with schema state `st` as the
-    * checkpoint of version `v`: derived, idempotent metadata, written
+  /** Publish the live set `live` with schema state `st` and the
+    * loaded-file set `files` as the checkpoint of version `v`:
+    * derived, idempotent metadata, written
     * by [[commitEntry]] at checkpoint boundaries and by
     * [[expireVersions]] at its horizon. The body goes to a dot-prefixed
     * temp file that is then RENAMED into place, never created in
@@ -431,15 +454,16 @@ object VersionedTable {
     * crash before it leaves only a temp file the chk-v listing
     * ignores. Renaming onto an existing checkpoint of the same version
     * is harmless: its bytes are the same. Checkpoints carry the schema
-    * state, since after expiry they can be the ONLY record of a
-    * rename/drop. True when the checkpoint is in place. */
+    * state and the load history, since after expiry they can be the
+    * ONLY record of a rename/drop or of a loaded file. True when the
+    * checkpoint is in place. */
   private def writeCheckpoint(f: FileSystem, path: String, v: Long,
-      live: Seq[Group], st: SchemaState): Boolean = {
+      live: Seq[Group], st: SchemaState, files: Set[String]): Boolean = {
     val chk = new Path(logDir(path), f"chk-v$v%08d.json")
     val tmp = new Path(logDir(path),
       s".tmp-chk-${java.util.UUID.randomUUID()}")
     val stJs = if (st.isEmpty) "" else s"${schemaJson(st)},"
-    val body = s"""{"version":$v,$stJs${groupsJson(live)}}"""
+    val body = s"""{"version":$v,$stJs${groupsJson(live)}${filesJson(files)}}"""
     try {
       val out = f.create(tmp, true)
       try out.write(body.getBytes("UTF-8")) finally out.close()
@@ -820,6 +844,33 @@ object VersionedTable {
     }
   }
 
+  /** COPY INTO as one commit, the body of [[graft.nhl.Ledger.copyInto]]:
+    * rows of `batch` whose `fileCol` names a file the snapshot already
+    * loaded are skipped (rows with a null name always load); the rest
+    * are staged as ONE group whose write also observes their file
+    * names, and one append entry tagged `copy_into` publishes group
+    * and names together, so a crash leaves both or neither. An empty
+    * remainder publishes nothing. One optimistic attempt, as in
+    * [[merge]]. Returns the rows appended. */
+  private[graft] def copyFiles(spark: SparkSession, path: String,
+      batch: DataFrame, fileCol: String): Long = {
+    val snap = snapshot(spark, path)
+    val file = col(fileCol)
+    val fresh =
+      if (snap.files.isEmpty) batch
+      else batch.filter(file.isNull || !file.isin(snap.files.toSeq: _*))
+    val plan = new StatsPlan(fresh.schema.fields.toSeq, None)
+    val (name, observed) = writeObserved(spark, path, fresh,
+      plan.aggs :+ collect_set(file).as("__files"))
+    dropIfEmpty(spark, path, plan.group(name, observed)).fold(0L) { g =>
+      commitEntry(spark, path, snap, Seq(g), replace = false,
+        staged = Seq(g.name), op = Some("copy_into"),
+        files = observed("__files").asInstanceOf[scala.collection.Seq[String]]
+          .toSeq)
+      g.rows.get
+    }
+  }
+
   /** Per-JVM (group dir → read-back schema) cache for the protocol's
     * OWN immutable parquet: data groups and DV sidecars are written
     * once under fresh UUID names and never modified (rewrites land
@@ -965,18 +1016,21 @@ object VersionedTable {
     * index keyed on the PHYSICAL name of `keyCol`.
     *
     * The one remaining gate is genuinely MIXED physical schemas
-    * across live groups (one distributed mergeSchema footer sweep to
-    * check): a flat parquet relation cannot reconcile per-group
+    * across live groups (checked on the driver when every group's
+    * schema is cached, else by one distributed mergeSchema footer
+    * sweep): a flat parquet relation cannot reconcile per-group
     * column sets, so those return None and callers fall back to
     * [[read]] (the reconciling path). None on an empty table too. */
   def readIndexed(spark: SparkSession, path: String, keyCol: String,
       asOfVersion: Option[Long] = None): Option[DataFrame] = {
-    val Snapshot(_, live, st, _, _) = snapshot(spark, path, asOfVersion)
+    val Snapshot(_, live, st, _, _, _) = snapshot(spark, path, asOfVersion)
     if (live.isEmpty) return None
     val dirs = live.map(g => groupPath(path, g.name))
-    // uniform-schema gate in TWO planning reads, not one per group
-    // (index_tiers measured the per-group form at ~65 ms/group — a
-    // linear planning term a 10k-group table cannot pay): the
+    // uniform-schema gate. When every group's schema is cached (this
+    // JVM wrote or read it), the field sets are compared on the
+    // driver, with no job. Otherwise two planning reads, not one per
+    // group (index_tiers measured the per-group form at ~65 ms/group —
+    // a linear planning term a 10k-group table cannot pay): the
     // DISTRIBUTED mergeSchema footer sweep throws on type conflicts,
     // and a merged field set differing from any single group's means
     // some group lacks a column — both non-flat, fall back. The sweep
@@ -984,19 +1038,24 @@ object VersionedTable {
     // set always merges to the same schema) — a total-vs-filtered
     // readIndexed pair pays it once, not twice.
     val first = readGroupDir(spark, dirs.head).schema
-    val sweepKey = dirs.sorted.mkString("\u0000")
-    val merged = groupSchemaCache.get(sweepKey) match {
-      case null =>
-        val m = scala.util.Try(
-          spark.read.option("mergeSchema", "true")
-            .parquet(dirs: _*).schema).getOrElse(return None)
-        cacheGroupSchema(sweepKey, m)
-        m
-      case m => m
-    }
     def fieldSet(s: StructType) =
       s.fields.map(f => (f.name, f.dataType)).toSet
-    if (fieldSet(merged) != fieldSet(first)) return None
+    val known = dirs.map(d => Option(groupSchemaCache.get(d)))
+    val others =
+      if (known.forall(_.isDefined)) known.flatten
+      else {
+        val sweepKey = dirs.sorted.mkString("\u0000")
+        Seq(groupSchemaCache.get(sweepKey) match {
+          case null =>
+            val m = scala.util.Try(
+              spark.read.option("mergeSchema", "true")
+                .parquet(dirs: _*).schema).getOrElse(return None)
+            cacheGroupSchema(sweepKey, m)
+            m
+          case m => m
+        })
+      }
+    if (others.exists(s => fieldSet(s) != fieldSet(first))) return None
     // the index prunes at the SCAN, which sees physical names: stats
     // ride under keyCol's physical name (identity when the uniform
     // physical schema already carries the logical name — groups
@@ -1108,7 +1167,7 @@ object VersionedTable {
     // one snapshot: batch-tag check, gates, plan and publish all at
     // its version (the merge() rule)
     val snap = snapshot(spark, path, headBatch = batchId.isDefined)
-    val Snapshot(v, live, st, _, _) = snap
+    val Snapshot(v, live, st, _, _, _) = snap
     if (batchId.isDefined && snap.batch == batchId) return (v, 0, 0)
     requireWritable(spark, path, snap, updates, allowEvolution)
     if (live.isEmpty) {
@@ -1389,7 +1448,7 @@ object VersionedTable {
   def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
       keyCol: String): (Long, Int) = {
     val snap = snapshot(spark, path)
-    val Snapshot(v, live, st, _, _) = snap
+    val Snapshot(v, live, st, _, _, _) = snap
     require(live.nonEmpty, "deleteKeys on an empty table")
     val k = keys.select(col(keyCol)).filter(col(keyCol).isNotNull)
       .distinct()
@@ -1440,8 +1499,8 @@ object VersionedTable {
     // time travel); a rename between the versions surfaces as the
     // logical columns differing and the existing key/type requires
     // fire — the reader's problem, as with s16/s17 evolution
-    val Snapshot(_, fromG, fromSt, _, _) = foldLog(f, log, Some(fromVersion))
-    val Snapshot(_, toG, toSt, _, _) = foldLog(f, log, Some(toVersion))
+    val Snapshot(_, fromG, fromSt, _, _, _) = foldLog(f, log, Some(fromVersion))
+    val Snapshot(_, toG, toSt, _, _, _) = foldLog(f, log, Some(toVersion))
     require(fromG.nonEmpty || toG.nonEmpty,
       s"changeFeed: no live data at either version ($fromVersion, $toVersion)")
     // a group is "shared" only when BOTH its data files AND its
@@ -1584,12 +1643,13 @@ object VersionedTable {
     if (horizon <= 0) return 0L
     // consolidate BEFORE dropping: the checkpoint must land first so
     // a reader never sees the tail without its base. It carries the
-    // schema state too: the horizon checkpoint may become the ONLY
-    // record of a rename/drop whose entry is about to be dropped.
+    // schema state and the loaded-file set too: the horizon checkpoint
+    // may become the ONLY record of a rename/drop or of a file load
+    // whose entry is about to be dropped.
     // Entries and checkpoints published after the listing are all
     // newer than the horizon, so the one listing decides the drops.
-    val Snapshot(_, live, st, _, _) = foldLog(f, log, Some(horizon))
-    if (!writeCheckpoint(f, path, horizon, live, st))
+    val at = foldLog(f, log, Some(horizon))
+    if (!writeCheckpoint(f, path, horizon, at.groups, at.schema, at.files))
       throw new java.io.IOException(
         s"checkpoint v$horizon of $path did not land; no entry expired")
     log.chks.filter(_._1 < horizon).foreach(c => f.delete(c._2.getPath, false))
@@ -1850,7 +1910,7 @@ object VersionedTable {
       s"clone source must be an absolute path: $src")
     val empty = snapshot(spark, dst)
     require(empty.version == 0, s"clone target $dst already has commits")
-    val Snapshot(_, live, st, _, _) = snapshot(spark, src, asOfVersion)
+    val Snapshot(_, live, st, _, _, _) = snapshot(spark, src, asOfVersion)
     require(live.nonEmpty,
       s"clone source $src has no live data" +
         asOfVersion.fold("")(v => s" at v$v"))
@@ -1912,7 +1972,7 @@ object VersionedTable {
     require(colName.nonEmpty && !colName.exists(c => ">,\"]".contains(c)),
       s"column name must be free of > , \" ] (log-format limit): $colName")
     val snap = snapshot(spark, path)
-    val Snapshot(v, live, st, _, _) = snap
+    val Snapshot(v, live, st, _, _, _) = snap
     require(v >= 1, "drop on an empty table")
     val cols = readGroups(spark, path, live, st).get.schema.fieldNames.toSet
     require(cols(colName), s"column $colName does not exist")
