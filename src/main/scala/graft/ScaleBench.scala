@@ -208,7 +208,7 @@ object ScaleBench {
     // Deliberately absent round-13 rows: the Parity62 load-path
     // replays (s3/s4/s6/s7/s9/s11/s14) drive multi-step stateful
     // protocols over key-modulus slices — their cost is the protocol
-    // round trips (writes, ledger reads, directory swaps), constants
+    // round trips (writes, log reads, log commits), constants
     // at any tier, not data-volume scaling; the one format-throughput
     // claim that DOES grow with the fact is already measured by
     // s12_orc_roundtrip. s5_partition_prune writes one directory per

@@ -9,9 +9,12 @@ import org.apache.spark.sql.types.{DoubleType, LongType}
   */
 object Staging {
 
-  /** stg games / playoffs: identity pass-through; incremental dedup
-    * is applied by Ledger.incrementalByKey at write time
-    * (ref: games.sql:9-13, playoffs.sql:9-13). */
+  /** stg games / playoffs: identity pass-through. [[Pipeline]] stages
+    * the COPY INTO target, whose per-file load history already makes a
+    * replayed file a no-op, so no key filter runs here; the
+    * reference's key-level `NOT IN` filter (ref: games.sql:9-13,
+    * playoffs.sql:9-13) is Ledger.incrementalByKey, for a caller that
+    * materializes the model as its own table. */
   def stgGames(raw: DataFrame): DataFrame = raw
 
   /** The 14 stat columns cleaned by the reference

@@ -433,11 +433,14 @@ object VersionedTable {
     // the winner of a checkpoint-boundary version consolidates the
     // live set; the state at `next` is `base` plus this entry, so no
     // log re-walk. A checkpoint that did not land only makes reads
-    // fold more entries.
+    // fold more entries, so its failure must not report the landed
+    // version as failed (a caller retrying the verb would apply it
+    // twice).
     if (next % CheckpointInterval == 0)
-      writeCheckpoint(f, path, next,
+      try writeCheckpoint(f, path, next,
         if (replace) groups else base.groups ++ groups,
         schema.getOrElse(base.schema), base.files ++ files)
+      catch { case _: java.io.IOException => }
     next
   }
 
@@ -871,6 +874,31 @@ object VersionedTable {
     }
   }
 
+  /** Append-if-absent by key as one commit, the body of
+    * [[graft.nhl.Ledger.incrementalByKey]]: rows of `batch` whose
+    * `keyCol` the snapshot already holds are dropped, the rest are
+    * deduplicated on it, staged as ONE group and published as an
+    * append against the snapshot's version. Unlike
+    * [[commitAppendWithRetry]] a lost race is not republished: the
+    * anti-join read that version, so the loser throws
+    * [[CommitConflictException]] instead of inserting a key twice. An
+    * empty remainder publishes nothing. Returns the rows appended. */
+  private[graft] def appendAbsent(spark: SparkSession, path: String,
+      batch: DataFrame, keyCol: String): Long = {
+    val snap = snapshot(spark, path)
+    requireWritable(spark, path, snap, batch, allowEvolution = false)
+    val fresh = readGroups(spark, path, snap.groups, snap.schema)
+      .fold(batch)(t =>
+        batch.join(t.select(col(keyCol)), Seq(keyCol), "left_anti"))
+      .dropDuplicates(keyCol)
+    dropIfEmpty(spark, path, stageGroup(spark, path, fresh, None)).fold(0L) {
+      g =>
+        commitEntry(spark, path, snap, Seq(g), replace = false,
+          staged = Seq(g.name), op = Some("append_absent"))
+        g.rows.get
+    }
+  }
+
   /** Per-JVM (group dir → read-back schema) cache for the protocol's
     * OWN immutable parquet: data groups and DV sidecars are written
     * once under fresh UUID names and never modified (rewrites land
@@ -1086,10 +1114,20 @@ object VersionedTable {
     * replace same-key rows, everything else carries over — the whole
     * snapshot is rewritten as one replace commit. One optimistic
     * attempt at the current version — callers loop on
-    * [[CommitConflictException]] for the retry semantics. Returns the
+    * [[CommitConflictException]] for the retry semantics. The entry
+    * records key stats when the key is [[statsEligible]] (a string
+    * key, e.g. an md5, records the row count alone). Returns the
     * committed version. */
   def merge(spark: SparkSession, path: String, updates: DataFrame,
-      keyCol: String, allowEvolution: Boolean = false): Long = {
+      keyCol: String, allowEvolution: Boolean = false): Long =
+    mergeCounted(spark, path, updates, keyCol, allowEvolution)._1
+
+  /** [[merge]], returning also the row count of the version it
+    * publishes, observed on its write: the body of
+    * [[graft.nhl.Ledger.deleteInsert]]. Returns (version, rows). */
+  private[graft] def mergeCounted(spark: SparkSession, path: String,
+      updates: DataFrame, keyCol: String,
+      allowEvolution: Boolean = false): (Long, Long) = {
     // gates, plan and publish all at ONE snapshot: a schema-carrying
     // commit landing after it moves the head past the snapshot and the
     // publish CONFLICTS (caller re-derives, gates re-run) — gating at
@@ -1106,8 +1144,11 @@ object VersionedTable {
     }
     // no second gate: the updates were just gated above, carried rows
     // hold by induction — re-probing would scan the snapshot
-    stageAndCommit(spark, path, snap, merged, replace = true,
-      statsCol = Some(keyCol), op = "merge")
+    val g = stageGroup(spark, path, merged,
+      Some(keyCol).filter(k => merged.schema.exists(f =>
+        f.name == k && statsEligible(f))))
+    (commitEntry(spark, path, snap, Seq(g), replace = true,
+      staged = Seq(g.name), op = Some("merge")), g.rows.get)
   }
 
   /** MERGE (upsert by key), stats-pruned copy-on-write form: only
@@ -1170,18 +1211,6 @@ object VersionedTable {
     val Snapshot(v, live, st, _, _, _) = snap
     if (batchId.isDefined && snap.batch == batchId) return (v, 0, 0)
     requireWritable(spark, path, snap, updates, allowEvolution)
-    if (live.isEmpty) {
-      // dropIfEmpty discipline even on the bootstrap commit: an empty
-      // first micro-batch must not found the table on a zero-row group
-      dropIfEmpty(spark, path,
-          stageGroup(spark, path, updates, Some(keyCol))) match {
-        case None => return (v, 0, 0)
-        case Some(g) =>
-          return (commitEntry(spark, path, snap, Seq(g), replace = true,
-            staged = Seq(g.name), batchId = batchId,
-            arbiterFor = arbiterFor, op = Some("merge_dv")), 0, 0)
-      }
-    }
     var staged = List.empty[String]
     var masked = 0
     var rewrote = 0

@@ -13,10 +13,13 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.nhl.{Ingest, Ledger, Staging}
 import graft.sources.VersionedTable
 
-/** COPY INTO (`Ledger.copyInto`) as one commit on the versioned log:
-  * the Spark jobs a game day's load, replay and read cost; a crash
-  * while the load is recorded; and load history across checkpoints,
-  * compaction and version expiry. */
+/** The Ledger verbs as commits on the versioned log. COPY INTO
+  * (`Ledger.copyInto`): the Spark jobs a game day's load, replay and
+  * read cost; a crash while the load is recorded; and load history
+  * across checkpoints, compaction and version expiry. delete+insert
+  * and append-if-absent (`deleteInsert`, `incrementalByKey`): a string
+  * key, one log entry and few jobs per call, and a crash at the
+  * publish. */
 class LedgerSpec extends AnyFunSuite {
   lazy val spark = {
     val s = TestSpark.spark
@@ -135,5 +138,73 @@ class LedgerSpec extends AnyFunSuite {
     val want = Map("f0.csv" -> 1L) ++ (1 to 9).map(i => s"f$i.csv" -> 2L)
     assert(perFile(t) == want)
     assert(VersionedTable.currentVersion(spark, t) == 10L)
+  }
+
+  private def keyed(rows: (String, Long)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("unique_key", "v")
+  }
+
+  private def content(t: String): Set[(String, Long)] =
+    Ledger.readTarget(spark, t).get.collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toSet
+
+  private val verbs = Seq[(String, (DataFrame, String) => Long)](
+    "deleteInsert" -> ((b, t) => Ledger.deleteInsert(spark, b, t)),
+    "incrementalByKey" -> ((b, t) => Ledger.incrementalByKey(spark, b, t)))
+
+  test("merge and deleteInsert on a string key equal the anti-join of " +
+      "the table against the batch's keys plus the batch") {
+    val cur = keyed("a" -> 1L, "b" -> 2L, "c" -> 3L)
+    val batch = keyed("b" -> 20L, "d" -> 4L)
+    val want = cur.join(batch.select("unique_key"), Seq("unique_key"),
+      "left_anti").unionByName(batch).collect().map(r =>
+        r.getString(0) -> r.getLong(1)).toSet
+    val m = target()
+    VersionedTable.commit(spark, m, cur, 0L)
+    assert(VersionedTable.merge(spark, m, batch, "unique_key") == 2L)
+    assert(content(m) == want)
+    val d = target()
+    assert(Ledger.deleteInsert(spark, cur, d) == 3L)
+    assert(Ledger.deleteInsert(spark, batch, d) == 4L)
+    assert(content(d) == want)
+  }
+
+  test("deleteInsert and incrementalByKey each publish exactly one log " +
+      "entry, in at most three Spark jobs") {
+    verbs.foreach { case (name, verb) =>
+      val t = target()
+      Seq(keyed("a" -> 1L, "b" -> 2L), keyed("b" -> 20L, "c" -> 3L))
+        .zipWithIndex.foreach { case (b, i) =>
+          val (_, n) = jobs(verb(b, t))
+          assert(n <= 3, s"$name call ${i + 1}: $n jobs")
+          assert(VersionedTable.currentVersion(spark, t) == i + 1L,
+            s"$name call ${i + 1}")
+        }
+    }
+  }
+
+  test("a crash at the publish of deleteInsert or incrementalByKey " +
+      "leaves the rows of before the call, and the rerun gives what a " +
+      "run without the crash gives") {
+    val first = keyed("a" -> 1L, "b" -> 2L)
+    val second = keyed("b" -> 20L, "c" -> 3L)
+    verbs.foreach { case (name, verb) =>
+      val clean = target()
+      verb(first, clean)
+      val cleanN = verb(second, clean)
+      val t = s"vtcount://${target()}"
+      verb(first, t)
+      val before = content(t)
+      ListCountingFs.beforePublish.set(s"${new URI(t).getPath}/_log" ->
+        (() => throw new java.io.IOException("injected crash")))
+      try {
+        intercept[java.io.IOException](verb(second, t))
+        assert(ListCountingFs.beforePublish.get == null, "no fault ran")
+      } finally ListCountingFs.beforePublish.set(null)
+      assert(content(t) == before, s"the failed $name changed the target")
+      assert(verb(second, t) == cleanN)
+      assert(content(t) == content(clean), name)
+    }
   }
 }

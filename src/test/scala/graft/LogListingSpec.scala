@@ -288,4 +288,21 @@ class LogListingSpec extends AnyFunSuite {
     assert(rows(p) == baseRows)
     assert(VersionedTable.read(spark, p, Some(6L)).get.count() == 30L)
   }
+
+  test("a checkpoint that fails after its entry landed does not fail " +
+      "the commit: the version is returned and reads back, and no temp " +
+      "file is left") {
+    val p = table()
+    val log = new URI(p).getPath + "/_log/"
+    ListCountingFs.failOnClose.set(c =>
+      c.startsWith(log) && new Path(c).getName.startsWith(".tmp-chk-"))
+    val (v, lost) = try VersionedTable.commitAppendWithRetry(spark, p,
+        df(500L -> "n"), statsCol = Some("k"))
+      finally ListCountingFs.failOnClose.set(null)
+    assert(v == 10L && lost == 0)
+    assert(!hasCheckpoint(p, 10L), "the fault never ran")
+    assert(rows(p) == baseRows + (500L -> "n"))
+    assert(logFiles(p).forall(n => !n.contains("tmp-chk")),
+      logFiles(p).mkString(", "))
+  }
 }

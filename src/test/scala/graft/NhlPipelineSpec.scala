@@ -1,9 +1,12 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.nhl._
+import graft.sources.VersionedTable
+import graft.sources.VersionedTable.CommitConflictException
 
 /** End-to-end NHL-shaped fixtures through ingest -> staging -> mart,
   * pinning the reference semantics (SURVEY.md §2/§5).
@@ -189,64 +192,39 @@ class NhlPipelineSpec extends AnyFunSuite {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got == Map("a" -> 1L, "b" -> 20L, "c" -> 3L),
       s"delete+insert semantics violated: $got")
-    // the staged swap directory must not survive the publish
-    val stagedP = new org.apache.hadoop.fs.Path(
-      Ledger.dataPath(target) + "_staged")
-    assert(!stagedP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      .exists(stagedP))
+    // every staged group is referenced by the log: no orphan to vacuum
+    assert(VersionedTable.vacuum(spark, target, minAgeMs = 0L).isEmpty)
     // replaying the same batch is value-idempotent (keys deleted then
     // reinserted with identical rows)
     assert(Ledger.deleteInsert(spark, df("b" -> 20L, "c" -> 3L), target) == 3)
     assert(Ledger.readTarget(spark, target).get.count() == 3)
   }
 
-  test("delete+insert crash recovery: a table parked mid-swap " +
-      "(data_old present, data absent) is restored, not rebuilt from " +
-      "the batch alone") {
+  test("delete+insert and incremental by key commit against the " +
+      "version they read: a commit landing before the publish makes " +
+      "each throw CommitConflictException and keeps the winner's rows") {
     import spark.implicits._
-    val target = s"$fx/target_direcov_${System.nanoTime()}"
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.vtcount.impl", classOf[ListCountingFs].getName)
     def df(rows: (String, Long)*) = rows.toDF("unique_key", "v")
-    assert(Ledger.deleteInsert(spark, df("a" -> 1L, "b" -> 2L), target) == 2)
-    // simulate the crash window: previous run parked data -> data_old
-    // and died before publishing its staged state
-    val conf = spark.sparkContext.hadoopConfiguration
-    val dataP = new org.apache.hadoop.fs.Path(Ledger.dataPath(target))
-    val oldP = new org.apache.hadoop.fs.Path(Ledger.dataPath(target) + "_old")
-    val fs = dataP.getFileSystem(conf)
-    assert(fs.rename(dataP, oldP))
-    // the rerun must restore the previous state FIRST — so key 'a'
-    // (absent from the retry batch) survives
-    assert(Ledger.deleteInsert(spark, df("b" -> 20L), target) == 2)
-    val got = Ledger.readTarget(spark, target).get
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(got == Map("a" -> 1L, "b" -> 20L),
-      s"crash recovery lost rows: $got")
-    assert(!fs.exists(oldP), "recovery must consume the parked copy")
-  }
-
-  test("delete+insert is single-writer ENFORCED: a held swap lock " +
-      "rejects the second writer; the lock releases on completion " +
-      "and a crashed holder's stale lock is an explicit stop") {
-    import spark.implicits._
-    val target = s"$fx/target_dilock_${System.nanoTime()}"
-    def df(rows: (String, Long)*) = rows.toDF("unique_key", "v")
-    assert(Ledger.deleteInsert(spark, df("a" -> 1L), target) == 1)
-    // lock must NOT survive a successful run
-    val lockP = new org.apache.hadoop.fs.Path(s"$target/_swap.lock")
-    val fs = lockP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(!fs.exists(lockP), "swap lock must release after success")
-    // simulate a concurrent/crashed holder: plant the lock, then the
-    // next writer must refuse loudly instead of interleaving renames
-    fs.create(lockP, false).close()
-    val ex = intercept[IllegalStateException] {
-      Ledger.deleteInsert(spark, df("b" -> 2L), target)
+    Seq[(DataFrame, String) => Long](
+      (b, t) => Ledger.deleteInsert(spark, b, t),
+      (b, t) => Ledger.incrementalByKey(spark, b, t)).foreach { verb =>
+      val local = s"$fx/target_race_${System.nanoTime()}"
+      val target = s"vtcount://$local"
+      assert(verb(df("a" -> 1L), target) == 1L)
+      // another writer commits v2 after this call's snapshot (v1)
+      ListCountingFs.beforePublish.set(s"$local/_log" -> (() =>
+        VersionedTable.commit(spark, target, df("w" -> 9L), 1L)))
+      try intercept[CommitConflictException] {
+        verb(df("a" -> 2L, "b" -> 2L), target)
+      } finally ListCountingFs.beforePublish.set(null)
+      val got = Ledger.readTarget(spark, target).get
+        .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(got == Map("a" -> 1L, "w" -> 9L), s"after the lost race: $got")
+      // the loser cleaned its staged group
+      assert(VersionedTable.vacuum(spark, target, minAgeMs = 0L).isEmpty)
     }
-    assert(ex.getMessage.contains("_swap.lock"))
-    // the refused writer changed nothing
-    assert(Ledger.readTarget(spark, target).get.count() == 1)
-    // operator removes the stale lock -> next run proceeds normally
-    fs.delete(lockP, false)
-    assert(Ledger.deleteInsert(spark, df("b" -> 2L), target) == 2)
   }
 
   test("quality gate: passes on clean col, throws on nulls (A1)") {
