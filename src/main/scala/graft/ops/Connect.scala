@@ -1,11 +1,9 @@
 package graft.ops
 
-import scala.collection.mutable
-
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.{DataFrame, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Connected components — the clustering step that turns pairwise
   * near-duplicate edges into whole duplicate GROUPS (one-round dedup
@@ -33,9 +31,9 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * changed-row / edge-set-checksum check rides the same action that
   * materializes the round (an accumulator bumped while the
   * checkpoint writes), so a distributed round is one job (two under
-  * reliable checkpointing, see [[Iter.truncate]]). Large-star's
-  * rounds over an edge set of at most [[Iter.LocalRows]] rows run
-  * together as ONE job in a single task ([[Iter.local]]).
+  * reliable checkpointing, see [[Iter.truncate]]). Large-star over an
+  * edge set of at most [[Iter.LocalRows]] rows runs whole as ONE job
+  * in a single task ([[Iter.local]]).
   *
   * Lineage is truncated per round via [[Iter.truncate]]:
   * `localCheckpoint` by default, RELIABLE checkpointing when
@@ -109,12 +107,12 @@ object Connect extends Logging {
 
   /** [[connectedComponentsLargeStar]] plus the number of rounds.
     *
-    * When the edge set — the input's, counted on its truncation pass,
-    * or any round's — has at most [[Iter.LocalRows]] rows with
-    * integral ids, the remaining rounds finish in ONE task
-    * ([[Iter.local]]): the same large-star/small-star rounds and the
-    * same (count, [[Iter.mix]] checksum) convergence test, so the same
-    * round count and the same `maxIter` warning. */
+    * When the edge set has at most [[Iter.LocalRows]] rows with
+    * integral ids, the whole operator runs in ONE task
+    * ([[Iter.local]]): the same large-star/small-star rounds, the same
+    * (count, [[Iter.mix]] checksum) convergence test — so the same
+    * round count and the same `maxIter` warning — and the same star
+    * extraction. */
   def largeStarRounds(edges: DataFrame, srcCol: String, dstCol: String,
       maxIter: Int = 30, checkpointDir: Option[String] = None)
       : (DataFrame, Int) =
@@ -126,142 +124,148 @@ object Connect extends Logging {
   private[graft] def largeStarRounds(edges: DataFrame, srcCol: String,
       dstCol: String, maxIter: Int, checkpointDir: Option[String],
       localRows: Long): (DataFrame, Int) = {
-    val spark = edges.sparkSession
-    val nodes = edges.select(col(srcCol).as("id"))
-      .union(edges.select(col(dstCol).as("id"))).distinct()
-    // canonical undirected edges u > v; self-loops carry no information
-    var (e, rows) = Iter.truncateCounted(
-      edges.select(greatest(col(srcCol), col(dstCol)).as("u"),
-        least(col(srcCol), col(dstCol)).as("v"))
-        .filter(col("u") =!= col("v")).distinct(), checkpointDir)
-    val single = Iter.integral(e, "u", "v")
-    var iter = 0
-    var prev = (-1L, -1L)
-    var done = false
-    while (!done && iter < maxIter) {
-      val rest =
-        if (single && rows <= localRows)
-          starLocal(e, iter, prev, maxIter, checkpointDir)
-        else None
-      rest match {
-        // the kernel ran every remaining round: converged or maxIter
-        case Some((fin, ran, conv)) => e = fin; iter += ran; done = conv
-        case None =>
-          // LARGE-STAR: for each node u (symmetric neighbourhood), link
-          // every strictly larger neighbour v to m = min(Γ(u) ∪ {u}).
-          // Emitted (v, m) has v > u >= m, so it is already canonical.
-          val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
-          val lsm = sym.groupBy(col("u"))
-            .agg(min(col("v")).as("mn"))
-            .select(col("u").as("cu"), least(col("u"), col("mn")).as("m"))
-          val ls = sym.join(lsm, col("u") === col("cu"))
-            .filter(col("v") > col("u"))
-            .select(col("v").as("u"), col("m").as("v"))
-            .filter(col("u") =!= col("v"))
-            .distinct()
-          // SMALL-STAR on the canonical (u > all its v) orientation:
-          // link every smaller neighbour and u itself to m = min of them.
-          val ssm = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
-          val ss = ls.join(ssm, Seq("u"))
-            .filter(col("v") =!= col("m"))
-            .select(col("v").as("u"), col("m").as("v")) // v > m: canonical
-            .union(ssm.select(col("u"), col("m").as("v")))
-            .filter(col("u") =!= col("v"))
-            .distinct()
-          // stability check (count + commutative checksum) rides the
-          // materializing job via accumulators — one compute pass per
-          // round (reliable-checkpoint mode adds a cache-backed write
-          // job that does not recompute the round; see Iter.truncate)
-          val cnt =
-            spark.sparkContext.longAccumulator(s"graft.ccstar.cnt.$iter")
-          val chk =
-            spark.sparkContext.longAccumulator(s"graft.ccstar.chk.$iter")
-          val schema = ss.schema
-          val counted = ss.mapPartitions { it =>
-            it.map { r =>
-              cnt.add(1L)
-              chk.add(Iter.mix(r.getAs[Number](0).longValue(),
-                r.getAs[Number](1).longValue()))
-              r
-            }
-          }(Encoders.row(schema))
-          e = Iter.truncate(counted, checkpointDir)
-          val cur = (cnt.value.longValue(), chk.value.longValue())
-          // a task retry inflates cnt/chk, making THIS round's pair
-          // differ from the previous one — the worst case is a spurious
-          // extra round; retry noise can never manufacture the stable
-          // round-to-round equality that declares convergence early
-          done = cur == prev
-          prev = cur
-          rows = cur._1
-          iter += 1
-      }
-    }
+    val in = edges.select(col(srcCol).as("s"), col(dstCol).as("t"))
+    val ids = in.select(col("s").as("id")).union(in.select(col("t").as("id")))
+    val t = ids.schema("id").dataType
+    val out = StructType(Seq(StructField("id", t), StructField("comp", t)))
+    val (labels, rounds, done) = Iter.local(in, out, localRows)(c =>
+      starLocal(c(0), c(1), maxIter)
+    ).fold(starRounds(_, maxIter, checkpointDir),
+      { case (df, o) => (df, o.rounds, o.done) })
     if (!done) {
       logWarning(s"large-star CC hit maxIter=$maxIter before the edge set " +
         "stabilized; the star extraction below assumes convergence, so " +
         "labels may be inconsistent — raise maxIter (rounds grow " +
         "O(log diameter), so a small bump goes far)")
     }
+    (labels, rounds)
+  }
+
+  /** The distributed rounds of [[largeStarRounds]] over (s, t) edges:
+    * the labels, the rounds run and whether they converged. */
+  private def starRounds(edges: DataFrame, maxIter: Int,
+      checkpointDir: Option[String]): (DataFrame, Int, Boolean) = {
+    val spark = edges.sparkSession
+    val nodes = edges.select(col("s").as("id"))
+      .union(edges.select(col("t").as("id"))).distinct()
+    // canonical undirected edges u > v; self-loops carry no information
+    var e = Iter.truncate(
+      edges.select(greatest(col("s"), col("t")).as("u"),
+        least(col("s"), col("t")).as("v"))
+        .filter(col("u") =!= col("v")).distinct(), checkpointDir)
+    var iter = 0
+    var prev = (-1L, -1L)
+    var done = false
+    while (!done && iter < maxIter) {
+      // LARGE-STAR: for each node u (symmetric neighbourhood), link
+      // every strictly larger neighbour v to m = min(Γ(u) ∪ {u}).
+      // Emitted (v, m) has v > u >= m, so it is already canonical.
+      val sym = e.union(e.select(col("v").as("u"), col("u").as("v")))
+      val lsm = sym.groupBy(col("u"))
+        .agg(min(col("v")).as("mn"))
+        .select(col("u").as("cu"), least(col("u"), col("mn")).as("m"))
+      val ls = sym.join(lsm, col("u") === col("cu"))
+        .filter(col("v") > col("u"))
+        .select(col("v").as("u"), col("m").as("v"))
+        .filter(col("u") =!= col("v"))
+        .distinct()
+      // SMALL-STAR on the canonical (u > all its v) orientation:
+      // link every smaller neighbour and u itself to m = min of them.
+      val ssm = ls.groupBy(col("u")).agg(min(col("v")).as("m"))
+      val ss = ls.join(ssm, Seq("u"))
+        .filter(col("v") =!= col("m"))
+        .select(col("v").as("u"), col("m").as("v")) // v > m: canonical
+        .union(ssm.select(col("u"), col("m").as("v")))
+        .filter(col("u") =!= col("v"))
+        .distinct()
+      // stability check (count + commutative checksum) rides the
+      // materializing job via accumulators — one compute pass per
+      // round (reliable-checkpoint mode adds a cache-backed write
+      // job that does not recompute the round; see Iter.truncate)
+      val cnt =
+        spark.sparkContext.longAccumulator(s"graft.ccstar.cnt.$iter")
+      val chk =
+        spark.sparkContext.longAccumulator(s"graft.ccstar.chk.$iter")
+      val schema = ss.schema
+      val counted = ss.mapPartitions { it =>
+        it.map { r =>
+          cnt.add(1L)
+          chk.add(Iter.mix(r.getAs[Number](0).longValue(),
+            r.getAs[Number](1).longValue()))
+          r
+        }
+      }(Encoders.row(schema))
+      e = Iter.truncate(counted, checkpointDir)
+      val cur = (cnt.value.longValue(), chk.value.longValue())
+      // a task retry inflates cnt/chk, making THIS round's pair
+      // differ from the previous one — the worst case is a spurious
+      // extra round; retry noise can never manufacture the stable
+      // round-to-round equality that declares convergence early
+      done = cur == prev
+      prev = cur
+      iter += 1
+    }
     // converged: stars — every non-root u has exactly one edge to its
     // component min; roots and self-loop-only nodes label themselves
     val comp = e.groupBy(col("u")).agg(min(col("v")).as("cmp"))
     val out = nodes.join(comp, nodes("id") === comp("u"), "left_outer")
       .select(col("id"), coalesce(col("cmp"), col("id")).as("comp"))
-    (out, iter)
+    (out, iter, done)
   }
 
-  /** The remaining rounds of [[largeStarRounds]] in one task
-    * ([[Iter.local]]), from round `iter0` whose predecessor left the
-    * (count, checksum) pair `prev0`: the same large-star then
-    * small-star rewiring of the same canonical edge set, stopping on
-    * the same stable pair or at `maxIter`. Returns the final edges
-    * (typed like `e`), the rounds run and whether they converged. */
-  private def starLocal(e: DataFrame, iter0: Int, prev0: (Long, Long),
-      maxIter: Int, checkpointDir: Option[String])
-      : Option[(DataFrame, Int, Boolean)] = {
-    val sc = e.sparkSession.sparkContext
-    val ran = sc.longAccumulator("graft.ccstar.local.rounds")
-    val converged = sc.longAccumulator("graft.ccstar.local.converged")
-    val schema = StructType(Seq(StructField("u", LongType),
-      StructField("v", LongType)))
-    Iter.local(e.select(col("u").cast(LongType), col("v").cast(LongType)),
-      schema, checkpointDir) { it =>
-      var es: Iterable[(Long, Long)] =
-        it.map(r => (r.getLong(0), r.getLong(1))).toVector
-      var iter = iter0
-      var prev = prev0
-      var done = false
-      while (!done && iter < maxIter) {
-        // LARGE-STAR: m(x) = min(Γ(x) ∪ {x}); each edge u > v links u
-        // to m(v)
-        val m = new mutable.LongMap[Long]()
-        def lower(x: Long, y: Long): Unit =
-          m(x) = math.min(m.getOrElse(x, x), y)
-        es.foreach { case (u, v) => lower(u, v); lower(v, u) }
-        val ls = es.iterator.map { case (u, v) => (u, m(v)) }.toSet
-        // SMALL-STAR: every smaller neighbour of u, and u itself, links
-        // to m2(u), the least of them
-        val m2 = new mutable.LongMap[Long]()
-        ls.foreach { case (u, v) => m2(u) = math.min(m2.getOrElse(u, v), v) }
-        val ss = mutable.HashSet.empty[(Long, Long)]
-        ls.foreach { case (u, v) => if (v != m2(u)) ss += ((v, m2(u))) }
-        m2.foreach { case (u, mu) => ss += ((u, mu)) }
-        val cur = (ss.size.toLong,
-          ss.iterator.map { case (u, v) => Iter.mix(u, v) }.sum)
-        done = cur == prev
-        prev = cur
-        es = ss
-        iter += 1
-      }
-      ran.add(iter - iter0)
-      if (done) converged.add(1L)
-      es.iterator.map { case (u, v) => Row(u, v) }.toSeq
-    }.map { df =>
-      (df.select(col("u").cast(e.schema("u").dataType),
-        col("v").cast(e.schema("v").dataType)),
-        ran.value.toInt, !converged.isZero)
+  /** [[starRounds]] in one task over the (s, t) columns: the same
+    * large-star then small-star rewiring of the same canonical edge
+    * set, stopping on the same stable (count, checksum) pair or at
+    * `maxIter`, then the same stars. Nodes are indexed in id order,
+    * so a min over indices is the min over ids, and an edge u > v is
+    * one long (u << 32 | v); each round's edge set is sorted and
+    * deduplicated. Returns the (id, comp) columns. */
+  private def starLocal(ss: Array[Long], ts: Array[Long], maxIter: Int)
+      : Iter.Out = {
+    def uniq(xs: Array[Long]): Array[Long] = {
+      java.util.Arrays.sort(xs)
+      var k = 0
+      xs.foreach(x => if (k == 0 || x != xs(k - 1)) { xs(k) = x; k += 1 })
+      java.util.Arrays.copyOf(xs, k)
     }
+    val ids = uniq(ss ++ ts)
+    def at(x: Long) = java.util.Arrays.binarySearch(ids, x)
+    def edge(u: Int, v: Int) = (u.toLong << 32) | v
+    def hi(e: Long) = (e >>> 32).toInt
+    def lo(e: Long) = e.toInt
+    var es = uniq(ss.indices.collect { case j if ss(j) != ts(j) =>
+      val (a, b) = (at(ss(j)), at(ts(j)))
+      edge(math.max(a, b), math.min(a, b))
+    }.toArray)
+    var iter = 0
+    var prev = (-1L, -1L)
+    var done = false
+    while (!done && iter < maxIter) {
+      // LARGE-STAR: m(x) = min(Γ(x) ∪ {x}); each edge u > v links u
+      // to m(v)
+      val m = Array.tabulate(ids.length)(identity)
+      es.foreach { e =>
+        m(hi(e)) = math.min(m(hi(e)), lo(e))
+        m(lo(e)) = math.min(m(lo(e)), hi(e))
+      }
+      val ls = uniq(es.map(e => edge(hi(e), m(lo(e)))))
+      // SMALL-STAR: every smaller neighbour of u, and u itself, links
+      // to m2(u), the least of them (ls is sorted: u's first edge)
+      val m2 = Array.fill(ids.length)(-1)
+      ls.foreach(e => if (m2(hi(e)) < 0) m2(hi(e)) = lo(e))
+      es = uniq(ls.collect { case e if lo(e) != m2(hi(e)) =>
+        edge(lo(e), m2(hi(e))) } ++
+        m2.indices.collect { case u if m2(u) >= 0 => edge(u, m2(u)) })
+      val cur = (es.length.toLong,
+        es.iterator.map(e => Iter.mix(ids(hi(e)), ids(lo(e)))).sum)
+      done = cur == prev
+      prev = cur
+      iter += 1
+    }
+    // stars: u's first (least) edge is its component min
+    val comp = Array.tabulate(ids.length)(identity)
+    es.reverseIterator.foreach(e => comp(hi(e)) = lo(e))
+    Iter.Out(Seq(ids, comp.map(ids(_))), iter, done)
   }
 
   /** Message-form k-core peel — the BEYOND-BROADCAST arm of

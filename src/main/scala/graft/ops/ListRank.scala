@@ -2,7 +2,7 @@ package graft.ops
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
 
@@ -47,9 +47,9 @@ object ListRank {
     *   short ranks.
     *
     * Inputs of at most [[Iter.LocalRows]] links with integral ids
-    * (the up-front `n`) finish in ONE task ([[Iter.local]]): the same
-    * doubling rounds and the same dangling and parked refusals, in
-    * memory — one job instead of one per round. */
+    * finish in ONE task ([[Iter.local]]): the same doubling rounds and
+    * the same dangling and parked refusals, in memory — one job
+    * instead of one per round. */
   def ranks(links: DataFrame, checkpointDir: Option[String] = None,
       maxRounds: Int = 64, reachBound: Option[Long] = None): DataFrame =
     ranks(links, checkpointDir, maxRounds, reachBound, Iter.LocalRows)
@@ -58,37 +58,53 @@ object ListRank {
     * the distributed rounds). */
   private[graft] def ranks(links: DataFrame, checkpointDir: Option[String],
       maxRounds: Int, reachBound: Option[Long], localRows: Long)
-      : DataFrame = {
-    // after k rounds every pointer has jumped 2^k links, and no chain
-    // is longer than the relation itself — so ceil(log2 n) rounds
-    // suffice UNCONDITIONALLY, and the loop needs no per-round
-    // convergence action (half the jobs): one n-count up front (on the
-    // input's truncation pass), one parked-check at the end (which
-    // doubles as the rootless-cycle refusal — a cycle never parks).
-    // truncate the input once: the dangling check, the n-count, and
-    // the loop's round 0 all reference it, and an expensive upstream
-    // plan (window-built fixtures) must not re-execute per reference;
-    // the count rides that truncation pass
-    val (lk, n0) = Iter.truncateCounted(
-      links.select(col("node"), col("succ")), checkpointDir)
-    val n = math.min(n0,
-      reachBound.map(math.max(_, 1L)).getOrElse(Long.MaxValue))
-    val bound =
-      if (n <= 1) 0
-      else 64 - java.lang.Long.numberOfLeadingZeros(n - 1) // ceil(log2 n)
-    val rounds = math.min(bound, maxRounds)
-    val single =
-      if (n0 > localRows || !Iter.integral(lk, "node", "succ")) None
-      else doublingLocal(lk, n0, rounds, checkpointDir, ranked = true)
-    single.map(_.select(
-      col("node").cast(lk.schema("node").dataType), col("x").as("rank")))
-      .getOrElse(doubling(lk, n0, rounds, checkpointDir, ranked = true)
-        .withColumnRenamed("x", "rank"))
+      : DataFrame =
+    pointers(links, checkpointDir, maxRounds, reachBound, localRows,
+      ranked = true)
+
+  /** [[ranks]] (`ranked`: x is the distance, summed) and [[cycleLabels]]
+    * (x is the min label, least), in one task or in rounds. After k
+    * rounds every pointer has jumped 2^k links, and no chain is longer
+    * than the relation itself — so ceil(log2 n) rounds suffice
+    * UNCONDITIONALLY, and the loop needs no per-round convergence
+    * action: one n-count up front, one parked-check at the end (which
+    * doubles as the rootless-cycle refusal — a cycle never parks). */
+  private def pointers(links: DataFrame, checkpointDir: Option[String],
+      maxRounds: Int, reachBound: Option[Long], localRows: Long,
+      ranked: Boolean): DataFrame = {
+    val in = links.select(col("node"), col("succ"))
+    val t = in.schema("node").dataType
+    val name = if (ranked) "rank" else "label"
+    val out = StructType(Seq(StructField("node", t),
+      StructField(name, if (ranked) LongType else t)))
+    // ceil(log2 horizon) rounds; `reachBound` (round-16): a caller that
+    // KNOWS the longest forward reach can bound the doubling below
+    // ceil(log2 n) — each saved round is a full self-join + truncate;
+    // n is always sound, so the caller's value is capped by it
+    def rounds(n: Long): Int = {
+      val horizon = math.min(n, reachBound.fold(n)(math.max(_, 1L)))
+      val need = Iter.ceilLog2(horizon)
+      // unlike ranks, a short labeling run is silently WRONG (no parked
+      // state to check), so refuse up front rather than underrun
+      if (!ranked) require(need <= maxRounds, s"cycle labeling needs " +
+        s"$need rounds for horizon $horizon ($n links) (> maxRounds)")
+      math.min(need, maxRounds)
+    }
+    Iter.local(in, out, localRows) { c =>
+      Iter.Out(doublingLocal(c(0), c(1), rounds(c(0).length), ranked))
+    }.fold({ lk0 =>
+      // truncate the input once: the dangling check and the loop's
+      // round 0 both reference it, and an expensive upstream plan
+      // (window-built fixtures) must not re-execute per reference;
+      // the count rides that truncation pass
+      val (lk, n0) = Iter.truncateCounted(lk0, checkpointDir)
+      doubling(lk, n0, rounds(n0), checkpointDir, ranked)
+        .withColumnRenamed("x", name)
+    }, _._1)
   }
 
-  /** The distributed rounds of [[ranks]] (`ranked`: x is the distance,
-    * summed) and [[cycleLabels]] (x is the min label, least): one
-    * self-join + truncation per round. Returns (node, x). */
+  /** The distributed rounds of [[pointers]]: one self-join +
+    * truncation per round. Returns (node, x). */
   private def doubling(lk: DataFrame, n0: Long, rounds: Int,
       checkpointDir: Option[String], ranked: Boolean): DataFrame = {
     // DANGLING pointers (succ values that are not nodes) must refuse:
@@ -142,81 +158,34 @@ object ListRank {
     s"list ranking did not converge in $rounds rounds " +
       "(rootless cycle in the input, or maxRounds too low)"
 
-  /** The rows of a (node, …) bag by node, for the in-memory self-join:
-    * `head(k)` is the last row with node k (-1 when none), `next(j)`
-    * the row before j with the same node, `count(k)` how many. */
-  private final class ByNode(ns: Array[Long]) {
-    private val last = new mutable.LongMap[Int](ns.length)
-    private val counts = new mutable.LongMap[Int](ns.length)
-    val next = new Array[Int](ns.length)
-    ns.indices.foreach { j =>
-      next(j) = last.getOrElse(ns(j), -1)
-      last(ns(j)) = j
-      counts(ns(j)) = counts.getOrElse(ns(j), 0) + 1
+  /** [[doubling]] in one task, on unique node ids: every row joins
+    * exactly one row, so the rows never change and a pointer is a row
+    * index — a round sets ptr(j) to ptr(ptr(j)). The round-1 dangling
+    * count and the parked check refuse with the distributed arm's
+    * messages. Returns the (node, x) columns; a duplicate id, whose
+    * rows the self-join multiplies, throws [[Iter.Decline]]. */
+  private def doublingLocal(ns: Array[Long], ps: Array[Long], rounds: Int,
+      ranked: Boolean): Seq[Array[Long]] = {
+    val at = new mutable.LongMap[Int](ns.length)
+    ns.indices.foreach(j => at(ns(j)) = j)
+    if (at.size < ns.length) throw Iter.Decline
+    var ptr = ps.map(at.getOrElse(_, -1))
+    // round 1 keeps exactly the rows with a target: its count check
+    val dangling = ptr.count(_ < 0)
+    require(dangling == 0, danglingMsg(dangling))
+    var xs =
+      if (!ranked) ns.clone()
+      else Array.tabulate(ns.length)(j => if (ps(j) == ns(j)) 0L else 1L)
+    (0 until rounds).foreach { _ =>
+      val (p, x) = (ptr, xs)
+      xs = Array.tabulate(ns.length)(j =>
+        if (ranked) x(j) + x(p(j)) else math.min(x(j), x(p(j))))
+      ptr = p.map(p(_))
     }
-    def head(k: Long): Int = last.getOrElse(k, -1)
-    def count(k: Long): Int = counts.getOrElse(k, 0)
-  }
-
-  /** [[doubling]] in one task ([[Iter.local]]): the same `rounds`
-    * self-joins over the same bag of (node, ptr, x) rows, so duplicate
-    * node ids multiply exactly as the relational join does, and the
-    * round-1 dangling count and the parked check refuse with the
-    * distributed arm's messages. Returns (node, x) longs; None (the
-    * distributed rounds run) on a null id or a join that would outgrow
-    * both the input and [[Iter.LocalRows]] rows (only duplicate node
-    * ids grow it). */
-  private def doublingLocal(lk: DataFrame, n0: Long, rounds: Int,
-      checkpointDir: Option[String], ranked: Boolean): Option[DataFrame] = {
-    val schema = StructType(Seq(StructField("node", LongType),
-      StructField("x", LongType)))
-    val in = lk.select(col("node").cast(LongType), col("succ").cast(LongType))
-    Iter.local(in, schema, checkpointDir) { it =>
-      val nb = mutable.ArrayBuilder.make[Long]
-      val pb = mutable.ArrayBuilder.make[Long]
-      it.foreach { r =>
-        if (r.isNullAt(0) || r.isNullAt(1)) throw Iter.Decline
-        nb += r.getLong(0)
-        pb += r.getLong(1)
-      }
-      var ns = nb.result()
-      var ps = pb.result()
-      var xs =
-        if (!ranked) ns.clone()
-        else Array.tabulate(ns.length)(j => if (ps(j) == ns(j)) 0L else 1L)
-      if (rounds == 0) {
-        val at = new ByNode(ns)
-        Iter.refuse(ps.forall(at.count(_) > 0),
-          danglingMsg(ps.count(at.count(_) == 0)))
-      }
-      (0 until rounds).foreach { i =>
-        val at = new ByNode(ns)
-        val c = ps.iterator.map(at.count(_).toLong).sum
-        if (i == 0) Iter.refuse(c == n0, danglingMsg(n0 - c))
-        if (c > math.max(n0, Iter.LocalRows)) throw Iter.Decline
-        val (ns2, ps2, xs2) = (new Array[Long](c.toInt),
-          new Array[Long](c.toInt), new Array[Long](c.toInt))
-        var o = 0
-        ns.indices.foreach { a =>
-          var b = at.head(ps(a))
-          while (b >= 0) {
-            ns2(o) = ns(a)
-            ps2(o) = ps(b)
-            xs2(o) = if (ranked) xs(a) + xs(b) else math.min(xs(a), xs(b))
-            o += 1
-            b = at.next(b)
-          }
-        }
-        ns = ns2; ps = ps2; xs = xs2
-      }
-      if (ranked) {
-        // parked: no pointer sits on a row of non-zero distance
-        val moving = new mutable.LongMap[Unit]()
-        ns.indices.foreach(j => if (xs(j) != 0L) moving(ns(j)) = ())
-        Iter.refuse(!ps.exists(moving.contains), unparkedMsg(rounds))
-      }
-      ns.indices.map(j => Row(ns(j), xs(j)))
-    }
+    // parked: no pointer sits on a row of non-zero distance
+    if (ranked)
+      require(!ptr.exists(j => j >= 0 && xs(j) != 0L), unparkedMsg(rounds))
+    Seq(ns, xs)
   }
 
   /** List ranking by INDEPENDENT-SET CONTRACTION (the O(n)-WORK form,
@@ -267,15 +236,13 @@ object ListRank {
     require(dangling == 0,
       s"$dangling dangling successor pointer(s): succ values that are " +
         "not nodes")
-    def ceilLog2(x: Long): Int =
-      if (x <= 1) 0 else 64 - java.lang.Long.numberOfLeadingZeros(x - 1)
     // contract only down to here, then switch to weighted doubling
     // (see the scaladoc); n/ceil(log2 n) keeps the doubling's total
     // work O(n). switchAt = 0 (switchFrac = 0) is pure contraction —
     // the pre-round-16 behavior, kept reachable for the spec's
     // equivalence pins.
     val switchAt =
-      (switchFrac * n / math.max(1, ceilLog2(n))).toLong
+      (switchFrac * n / math.max(1, Iter.ceilLog2(n))).toLong
     // state: (node, succ, w) — w = distance from node to its CURRENT
     // successor; roots are self-loops with w = 0
     var cur = Iter.truncate(lk.select(col("node"), col("succ"),
@@ -336,7 +303,7 @@ object ListRank {
         // ceil(log2(active + 1)) rounds park every pointer on a root.
         var st = cur.select(col("node"), col("succ").as("ptr"),
           col("w").as("dist"))
-        (0 until ceilLog2(active + 1)).foreach { _ =>
+        (0 until Iter.ceilLog2(active + 1)).foreach { _ =>
           val jumped = st.as("a")
             .join(st.as("b"), col("a.ptr") === col("b.node"))
             .select(col("a.node").as("node"), col("b.ptr").as("ptr"),
@@ -396,8 +363,8 @@ object ListRank {
     * (node, label).
     *
     * Inputs of at most [[Iter.LocalRows]] links with integral ids
-    * (the up-front `n`) finish in ONE task ([[Iter.local]]) — the same
-    * min-label doubling and dangling refusal, in memory. */
+    * finish in ONE task ([[Iter.local]]) — the same min-label doubling
+    * and dangling refusal, in memory. */
   def cycleLabels(links: DataFrame, checkpointDir: Option[String] = None,
       maxRounds: Int = 64, reachBound: Option[Long] = None): DataFrame =
     cycleLabels(links, checkpointDir, maxRounds, reachBound, Iter.LocalRows)
@@ -406,31 +373,7 @@ object ListRank {
     * always runs the distributed rounds). */
   private[graft] def cycleLabels(links: DataFrame,
       checkpointDir: Option[String], maxRounds: Int,
-      reachBound: Option[Long], localRows: Long): DataFrame = {
-    val (lk, n) = Iter.truncateCounted(
-      links.select(col("node"), col("succ")), checkpointDir)
-    // `reachBound` (round-16): a caller that KNOWS the longest forward
-    // reach (e.g. the max cycle length of a permutation it just built)
-    // can bound the doubling at ceil(log2 bound) instead of
-    // ceil(log2 n) — each saved round is a full self-join + truncate.
-    // Correctness needs 2^rounds >= the longest forward reach; n is
-    // always a sound bound, so the caller's value is capped by it.
-    val horizon = math.min(n, reachBound.map(math.max(_, 1L)).getOrElse(n))
-    val rounds =
-      if (horizon <= 1) 0
-      else 64 - java.lang.Long.numberOfLeadingZeros(horizon - 1)
-    // unlike ranks(), a short run is silently WRONG (no parked state
-    // to check), so refuse up front rather than underrun
-    require(rounds <= maxRounds,
-      s"cycle labeling needs $rounds rounds for horizon $horizon " +
-        s"($n links) (> maxRounds)")
-    val single =
-      if (n > localRows || !Iter.integral(lk, "node", "succ")) None
-      else doublingLocal(lk, n, rounds, checkpointDir, ranked = false)
-    single.map { df =>
-      val t = lk.schema("node").dataType
-      df.select(col("node").cast(t), col("x").cast(t).as("label"))
-    }.getOrElse(doubling(lk, n, rounds, checkpointDir, ranked = false)
-      .withColumnRenamed("x", "label"))
-  }
+      reachBound: Option[Long], localRows: Long): DataFrame =
+    pointers(links, checkpointDir, maxRounds, reachBound, localRows,
+      ranked = false)
 }

@@ -2,9 +2,9 @@ package graft.ops
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{LongType, StructField, StructType}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Strongly connected components of a GENERAL directed graph by
   * forward–backward min-label peeling (the FW-BW idea specialized to
@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.{LongType, StructField, StructType}
   * transitive-closure relations explode quadratically on dense
   * components, the fixpoint never exceeds the input size.
   *
-  * Once the remaining nodes plus edges fit in [[Iter.LocalRows]]
-  * rows, the rest of the peel runs in one task ([[Iter.local]]).
+  * When the nodes plus edges fit in [[Iter.LocalRows]] rows, the
+  * whole peel runs in one task ([[Iter.local]]).
   *
   * Functional graphs (out-degree 1) should use the cheaper
   * [[ListRank.cycleLabels]] doubling form instead.
@@ -90,11 +90,10 @@ object Scc {
   /** @param edges (u, w) directed pairs over `nodes` (v). Returns
     * (v, scc_id) with scc_id = the minimum label of v's SCC.
     *
-    * At the top of any peel round where the remaining nodes plus the
-    * (symmetrized) remaining edges are at most [[Iter.LocalRows]]
-    * rows, with integral ids, the rest of the peel finishes in ONE
-    * task ([[Iter.local]]): the same FW-BW peel rounds, counted
-    * against the same `maxOuter`. */
+    * When the nodes plus the edges are at most [[Iter.LocalRows]] rows
+    * with integral ids, the whole peel runs in ONE task
+    * ([[Iter.local]]) over one tagged relation of both: the same FW-BW
+    * peel rounds, counted against the same `maxOuter`. */
   def components(nodes: DataFrame, edges: DataFrame,
       checkpointDir: Option[String] = None,
       maxOuter: Int = 64): DataFrame =
@@ -105,52 +104,63 @@ object Scc {
   private[graft] def components(nodes: DataFrame, edges: DataFrame,
       checkpointDir: Option[String], maxOuter: Int, localRows: Long)
       : DataFrame = {
+    // node rows (1, v, v) and edge rows (0, u, w)
+    val tagged = nodes.select(lit(1L).as("node"), col("v").as("a"),
+        col("v").as("b"))
+      .unionByName(edges.select(lit(0L).as("node"), col("u").as("a"),
+        col("w").as("b")))
+    val t = nodes.schema("v").dataType
+    val out = StructType(Seq(StructField("v", t), StructField("scc_id", t)))
+    Iter.local(tagged, out, localRows)(c =>
+      peelLocal(c(0), c(1), c(2), maxOuter)
+    ).fold({ in =>
+      def typed(c: String, like: DataFrame, name: String) =
+        col(c).cast(like.schema(name).dataType).as(name)
+      peel(in.filter(col("node") === 1L).select(typed("a", nodes, "v")),
+        in.filter(col("node") === 0L)
+          .select(typed("a", edges, "u"), typed("b", edges, "w")),
+        checkpointDir, maxOuter)
+    }, _._1)
+  }
+
+  /** The distributed FW-BW peel: one [[reachMins]] fixpoint per
+    * round, then the assigned nodes and their edges leave. */
+  private def peel(nodes: DataFrame, edges: DataFrame,
+      checkpointDir: Option[String], maxOuter: Int): DataFrame = {
     // truncate the INPUTS once: the fixpoint re-reads these relations
     // every round, and an expensive upstream plan (window-built
     // fixtures, joins) must not re-execute per round. Edges are kept
     // SYMMETRIZED (src, dst, fwd) so each reach-min round is one join
-    // + one aggregate over a single relation (see reachMins). Both
-    // row counts ride the truncation passes.
+    // + one aggregate over a single relation (see reachMins). The
+    // node count rides the truncation pass.
     var (remaining, left) =
       Iter.truncateCounted(nodes.select(col("v")), checkpointDir)
-    var (es, edgeRows) = Iter.truncateCounted(
+    var es = Iter.truncate(
       edges.select(col("u").as("src"), col("w").as("dst"),
           lit(true).as("fwd"))
         .unionByName(edges.select(col("w").as("src"), col("u").as("dst"),
           lit(false).as("fwd"))),
       checkpointDir)
-    val single = Iter.integral(remaining, "v") &&
-      Iter.integral(es, "src", "dst")
     var acc: Option[DataFrame] = None
     var outer = 0
     while (left > 0) {
-      val rest =
-        if (single && left + edgeRows <= localRows)
-          peelLocal(remaining, es, outer, maxOuter, checkpointDir)
-        else None
-      rest match {
-        case Some(out) =>
-          acc = Some(acc.map(_.unionByName(out)).getOrElse(out))
-          left = 0
-        case None =>
-          require(outer < maxOuter, peelMsg(maxOuter))
-          val assigned = reachMins(remaining, es, checkpointDir)
-            .filter(col("f") === col("b"))
-            .select(col("v"), col("f").as("scc_id"))
-          acc = Some(acc.map(_.unionByName(assigned)).getOrElse(assigned))
-          val (r, l) = Iter.truncateCounted(
-            remaining.join(assigned.select(col("v")), Seq("v"), "left_anti"),
-            checkpointDir)
-          // keep only edges with BOTH endpoints still unassigned (each
-          // original edge's two symmetric rows are filtered consistently)
-          val (e, m) = Iter.truncateCounted(
-            es.join(r.select(col("v").as("src")), Seq("src"), "left_semi")
-              .join(r.select(col("v").as("dst")), Seq("dst"), "left_semi")
-              .select(col("src"), col("dst"), col("fwd")),
-            checkpointDir)
-          remaining = r; left = l; es = e; edgeRows = m
-          outer += 1
-      }
+      require(outer < maxOuter, peelMsg(maxOuter))
+      val assigned = reachMins(remaining, es, checkpointDir)
+        .filter(col("f") === col("b"))
+        .select(col("v"), col("f").as("scc_id"))
+      acc = Some(acc.map(_.unionByName(assigned)).getOrElse(assigned))
+      val (r, l) = Iter.truncateCounted(
+        remaining.join(assigned.select(col("v")), Seq("v"), "left_anti"),
+        checkpointDir)
+      // keep only edges with BOTH endpoints still unassigned (each
+      // original edge's two symmetric rows are filtered consistently)
+      es = Iter.truncate(
+        es.join(r.select(col("v").as("src")), Seq("src"), "left_semi")
+          .join(r.select(col("v").as("dst")), Seq("dst"), "left_semi")
+          .select(col("src"), col("dst"), col("fwd")),
+        checkpointDir)
+      remaining = r; left = l
+      outer += 1
     }
     acc.getOrElse(nodes.select(col("v"), col("v").as("scc_id")).limit(0))
   }
@@ -158,104 +168,80 @@ object Scc {
   private def peelMsg(maxOuter: Int): String =
     s"SCC peeling exceeded $maxOuter rounds"
 
-  /** The rest of the FW-BW peel in one task ([[Iter.local]]), from
-    * peel round `outer`: per round, F and B are the same min-label
-    * fixpoints (here one ascending-label sweep of backward / forward
-    * searches, each vertex labelled by the first — smallest — label
-    * that reaches it), every v with F(v) == B(v) is assigned, and
-    * the round is counted against `maxOuter`. Edges count only
-    * between remaining nodes, as in the relational form; a duplicate
-    * node id yields one output row per copy; a null node id is never
-    * assigned there, so it refuses as the distributed peel does when
-    * its rounds run out. (v, scc_id) typed like `remaining.v`. */
-  private def peelLocal(remaining: DataFrame, es: DataFrame, outer0: Int,
-      maxOuter: Int, checkpointDir: Option[String]): Option[DataFrame] = {
-    val in = remaining.select(lit(true).as("node"),
-        col("v").cast(LongType).as("a"), lit(null).cast(LongType).as("b"))
-      .unionByName(es.filter(col("fwd")).select(lit(false).as("node"),
-        col("src").cast(LongType).as("a"), col("dst").cast(LongType).as("b")))
-    val schema = StructType(Seq(StructField("v", LongType),
-      StructField("scc_id", LongType)))
-    Iter.local(in, schema, checkpointDir) { it =>
-      val copies = new mutable.LongMap[Int]()
-      val eu = mutable.ArrayBuilder.make[Long]
-      val ew = mutable.ArrayBuilder.make[Long]
-      var nullNodes = false
-      it.foreach { r =>
-        if (r.getBoolean(0)) {
-          if (r.isNullAt(1)) nullNodes = true
-          else copies(r.getLong(1)) = copies.getOrElse(r.getLong(1), 0) + 1
-        } else if (!r.isNullAt(1) && !r.isNullAt(2)) {
-          eu += r.getLong(1); ew += r.getLong(2)
-        }
-      }
-      // vertex i is the i-th smallest id, so label order = index order
-      val ids = copies.keys.toArray.sorted
-      val at = new mutable.LongMap[Int](ids.length)
-      ids.indices.foreach(i => at(ids(i)) = i)
-      val (us, ws) = (eu.result(), ew.result())
-      val kept =
-        us.indices.filter(j => at.contains(us(j)) && at.contains(ws(j)))
-      // adjacency in CSR form: out(i) / in(i) neighbour index lists
-      def csr(from: Int => Int, to: Int => Int): (Array[Int], Array[Int]) = {
-        val start = new Array[Int](ids.length + 1)
-        kept.foreach(j => start(from(j) + 1) += 1)
-        (0 until ids.length).foreach(i => start(i + 1) += start(i))
-        val fill = start.clone()
-        val adj = new Array[Int](kept.length)
-        kept.foreach { j => adj(fill(from(j))) = to(j); fill(from(j)) += 1 }
-        (start, adj)
-      }
-      val fwd = csr(j => at(us(j)), j => at(ws(j)))
-      val bwd = csr(j => at(ws(j)), j => at(us(j)))
-      val alive = Array.fill(ids.length)(true)
-      // label(i) = index of the smallest alive vertex reaching i along
-      // `adj` (a vertex reaches itself)
-      def minReach(adj: (Array[Int], Array[Int])): Array[Int] = {
-        val (start, nb) = adj
-        val label = Array.fill(ids.length)(-1)
-        val stack = new Array[Int](ids.length) // each vertex pushed once
-        ids.indices.foreach { m =>
-          if (alive(m) && label(m) < 0) {
-            label(m) = m
-            stack(0) = m
-            var top = 1
-            while (top > 0) {
-              top -= 1
-              val x = stack(top)
-              (start(x) until start(x + 1)).foreach { k =>
-                val y = nb(k)
-                if (alive(y) && label(y) < 0) {
-                  label(y) = m; stack(top) = y; top += 1
-                }
+  /** The FW-BW peel in one task over the tagged (node, a, b) columns:
+    * per round, F and B are the same min-label fixpoints (here one
+    * ascending-label sweep of backward / forward searches, each vertex
+    * labelled by the first — smallest — label that reaches it), every
+    * v with F(v) == B(v) is assigned, and the round is counted against
+    * `maxOuter`. Edges count only between nodes, as in the relational
+    * form; a duplicate node id yields one output row per copy. Returns
+    * the (v, scc_id) columns. */
+  private def peelLocal(tag: Array[Long], as: Array[Long], bs: Array[Long],
+      maxOuter: Int): Iter.Out = {
+    val copies = new mutable.LongMap[Int]()
+    tag.indices.foreach(j =>
+      if (tag(j) == 1L) copies(as(j)) = copies.getOrElse(as(j), 0) + 1)
+    // vertex i is the i-th smallest id, so label order = index order
+    val ids = copies.keys.toArray.sorted
+    val at = new mutable.LongMap[Int](ids.length)
+    ids.indices.foreach(i => at(ids(i)) = i)
+    val kept = tag.indices.filter(j =>
+      tag(j) == 0L && at.contains(as(j)) && at.contains(bs(j)))
+    // adjacency in CSR form: out(i) / in(i) neighbour index lists
+    def csr(from: Int => Int, to: Int => Int): (Array[Int], Array[Int]) = {
+      val start = new Array[Int](ids.length + 1)
+      kept.foreach(j => start(from(j) + 1) += 1)
+      (0 until ids.length).foreach(i => start(i + 1) += start(i))
+      val fill = start.clone()
+      val adj = new Array[Int](kept.length)
+      kept.foreach { j => adj(fill(from(j))) = to(j); fill(from(j)) += 1 }
+      (start, adj)
+    }
+    val fwd = csr(j => at(as(j)), j => at(bs(j)))
+    val bwd = csr(j => at(bs(j)), j => at(as(j)))
+    val alive = Array.fill(ids.length)(true)
+    // label(i) = index of the smallest alive vertex reaching i along
+    // `adj` (a vertex reaches itself)
+    def minReach(adj: (Array[Int], Array[Int])): Array[Int] = {
+      val (start, nb) = adj
+      val label = Array.fill(ids.length)(-1)
+      val stack = new Array[Int](ids.length) // each vertex pushed once
+      ids.indices.foreach { m =>
+        if (alive(m) && label(m) < 0) {
+          label(m) = m
+          stack(0) = m
+          var top = 1
+          while (top > 0) {
+            top -= 1
+            val x = stack(top)
+            (start(x) until start(x + 1)).foreach { k =>
+              val y = nb(k)
+              if (alive(y) && label(y) < 0) {
+                label(y) = m; stack(top) = y; top += 1
               }
             }
           }
         }
-        label
       }
-      val out = mutable.ArrayBuffer.empty[Row]
-      var left = ids.length
-      var outer = outer0
-      Iter.refuse(!nullNodes, peelMsg(maxOuter))
-      while (left > 0) {
-        Iter.refuse(outer < maxOuter, peelMsg(maxOuter))
-        // F(v): min label v reaches = searches from m over in-edges
-        val f = minReach(bwd)
-        val b = minReach(fwd)
-        ids.indices.foreach { i =>
-          if (alive(i) && f(i) == b(i)) {
-            alive(i) = false
-            left -= 1
-            (0 until copies(ids(i))).foreach(_ => out += Row(ids(i), ids(f(i))))
-          }
-        }
-        outer += 1
-      }
-      out.toSeq
-    }.map { df =>
-      val t = remaining.schema("v").dataType
-      df.select(col("v").cast(t), col("scc_id").cast(t))
+      label
     }
+    val (vs, cs) = (mutable.ArrayBuilder.make[Long], mutable.ArrayBuilder.make[Long])
+    var left = ids.length
+    var outer = 0
+    while (left > 0) {
+      require(outer < maxOuter, peelMsg(maxOuter))
+      // F(v): min label v reaches = searches from m over in-edges
+      val f = minReach(bwd)
+      val b = minReach(fwd)
+      ids.indices.foreach { i =>
+        if (alive(i) && f(i) == b(i)) {
+          alive(i) = false
+          left -= 1
+          (0 until copies(ids(i))).foreach { _ => vs += ids(i); cs += ids(f(i)) }
+        }
+      }
+      outer += 1
+    }
+    Iter.Out(Seq(vs.result(), cs.result()))
   }
 }

@@ -862,6 +862,7 @@ object VersionedTable {
     val fresh =
       if (snap.files.isEmpty) batch
       else batch.filter(file.isNull || !file.isin(snap.files.toSeq: _*))
+    requireChecks(snap, fresh)
     val plan = new StatsPlan(fresh.schema.fields.toSeq, None)
     val (name, observed) = writeObserved(spark, path, fresh,
       plan.aggs :+ collect_set(file).as("__files"))

@@ -15,8 +15,9 @@ import graft.sources.VersionedTable
 
 /** The Ledger verbs as commits on the versioned log. COPY INTO
   * (`Ledger.copyInto`): the Spark jobs a game day's load, replay and
-  * read cost; a crash while the load is recorded; and load history
-  * across checkpoints, compaction and version expiry. delete+insert
+  * read cost; a crash while the load is recorded; load history
+  * across checkpoints, compaction and version expiry; and the
+  * target's CHECK constraints. delete+insert
   * and append-if-absent (`deleteInsert`, `incrementalByKey`): a string
   * key, one log entry and few jobs per call, and a crash at the
   * publish. */
@@ -138,6 +139,24 @@ class LedgerSpec extends AnyFunSuite {
     val want = Map("f0.csv" -> 1L) ++ (1 to 9).map(i => s"f$i.csv" -> 2L)
     assert(perFile(t) == want)
     assert(VersionedTable.currentVersion(spark, t) == 10L)
+  }
+
+  test("COPY INTO holds the target's CHECK constraints: a violating " +
+      "file is refused and loads nothing, a clean one loads") {
+    import spark.implicits._
+    def pay(file: String, v: Long): DataFrame =
+      Seq(file -> v).toDF("source_file", "pay")
+    val t = target()
+    assert(Ledger.copyInto(spark, pay("f1.csv", 10L), t) == 1L)
+    VersionedTable.addCheck(spark, t, "pos", "pay >= 0")
+    val before = VersionedTable.currentVersion(spark, t)
+    val e = intercept[IllegalArgumentException](
+      Ledger.copyInto(spark, pay("f2.csv", -5L), t))
+    assert(e.getMessage.contains("check constraint 'pos'"), e.getMessage)
+    assert(VersionedTable.currentVersion(spark, t) == before)
+    assert(perFile(t) == Map("f1.csv" -> 1L))
+    assert(Ledger.copyInto(spark, pay("f3.csv", 7L), t) == 1L)
+    assert(perFile(t) == Map("f1.csv" -> 1L, "f3.csv" -> 1L))
   }
 
   private def keyed(rows: (String, Long)*): DataFrame = {

@@ -12,8 +12,11 @@ import graft.ops.{Connect, Iter, ListRank, Scc}
   * column types and the same refusal message — and large-star the
   * same round count. Inputs cover chains and in-trees, rho shapes,
   * permutations, rootless cycles, dangling pointers, duplicate node
-  * ids and too-small round budgets, over Int and Long id columns.
-  * Random caps make SCC and large-star switch mid-run. */
+  * ids and too-small round budgets, over Int and Long id columns, with
+  * random caps. The single task's own paths: large-star labels for
+  * nodes seen only in self-loops and for repeated edges, null ids
+  * (the attempt declines to the distributed rounds) and refusals
+  * raised inside the task. */
 object LocalArmProps extends Properties("graft.local") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
@@ -22,16 +25,18 @@ object LocalArmProps extends Properties("graft.local") {
   private lazy val spark = TestSpark.spark
   import spark.implicits._
 
-  /** Rows (as long pairs, sorted — the relations are bags) and column
-    * types, or the refusal message. */
-  private type Outcome = Either[String, (Seq[String], Seq[(Long, Long)])]
+  /** Rows (as pairs of longs or nulls, sorted — the relations are
+    * bags) and column types, or the refusal message. */
+  private type Outcome =
+    Either[String, (Seq[String], Seq[(Option[Long], Option[Long])])]
 
   private def outcome(f: => DataFrame): Outcome =
     try {
       val df = f
+      def at(r: org.apache.spark.sql.Row, i: Int) =
+        Option(r.getAs[Number](i)).map(_.longValue())
       Right((df.schema.map(_.dataType.simpleString),
-        df.collect().map(r => (r.getAs[Number](0).longValue(),
-          r.getAs[Number](1).longValue())).toSeq.sorted))
+        df.collect().map(r => (at(r, 0), at(r, 1))).toSeq.sorted))
     } catch { case e: IllegalArgumentException => Left(e.getMessage) }
 
   private def ids(n: Int): Gen[Seq[Long]] =
@@ -149,5 +154,76 @@ object LocalArmProps extends Properties("graft.local") {
         (o, rounds)
       }
       arms.head == arms(1)
+    }
+
+  /** Components of random sizes, each a random tree with repeated
+    * edges in both orientations, plus nodes seen only in self-loops:
+    * both arms give the same labels, every node once, a self-loop-only
+    * node labelled by itself, every other node by its component's
+    * minimum. */
+  property("largeStarRounds: self-loop-only nodes and repeated edges") =
+    forAllNoShrink(Gen.choose(1, 4).flatMap(k =>
+      Gen.listOfN(k, Gen.choose(1, 6))).flatMap(sizes =>
+        ids(sizes.sum + 3).map(v => (sizes, v)))) { case (sizes, v) =>
+      val comps = sizes.scanLeft(0)(_ + _).sliding(2)
+        .map(w => v.slice(w(0), w(1))).toSeq
+      val loners = v.takeRight(3)
+      val tree = comps.flatMap(c => c.indices.drop(1).flatMap(j =>
+        Seq(c(j) -> c(j / 2), c(j / 2) -> c(j), c(j) -> c(j / 2))))
+      val edges = (tree ++ loners.map(x => x -> x) ++ comps.map(c =>
+        c.head -> c.head)).toDF("s", "t")
+      val want = (comps.flatMap(c => c.map(x => Option(x) -> Option(c.min))) ++
+        loners.map(x => Option(x) -> Option(x))).sorted
+      val arms = Seq(Iter.LocalRows, -1L).map(c =>
+        outcome(Connect.largeStarRounds(edges, "s", "t", 30, None, c)._1))
+      arms.head == arms(1) && arms.head.map(_._2) == Right(want)
+    }
+
+  /** (node, succ) pairs with a null in some row's node or succ. */
+  private val nullLinks = for {
+    ls <- linkShapes
+    j <- Gen.choose(0, ls.size - 1)
+    first <- Gen.oneOf(true, false)
+  } yield ls.indices.map { i =>
+    val (a, b) = ls(i)
+    if (i != j) (Option(a), Option(b))
+    else if (first) (None, Option(b)) else (Option(a), None)
+  }
+
+  property("null ids decline to the distributed rounds: same outcome") =
+    forAllNoShrink(nullLinks) { ls =>
+      val df = ls.toDF("node", "succ")
+      val sym = ls.toDF("s", "t")
+      val nodes = ls.flatMap(_._1).distinct.toDF("v")
+      val edges = ls.toDF("u", "w")
+      def same(f: Long => DataFrame) =
+        outcome(f(Iter.LocalRows)) == outcome(f(-1L))
+      same(ListRank.ranks(df, None, 64, None, _)) &&
+        same(ListRank.cycleLabels(df, None, 64, None, _)) &&
+        same(Connect.largeStarRounds(sym, "s", "t", 30, None, _)._1) &&
+        same(Scc.components(nodes, edges, None, 8, _))
+    }
+
+  /** Inputs every arm refuses: a rootless cycle (ranks), a dangling
+    * pointer (ranks and labels), a too-small labeling budget, a DAG
+    * of singleton components deeper than the SCC peel budget. */
+  property("refusals raised in the task carry the rounds' messages") =
+    forAllNoShrink(Gen.choose(3, 12).flatMap(ids)) { v =>
+      val n = v.size
+      val cycle = v.indices.map(i => v(i) -> v((i + 1) % n)).toDF("node", "succ")
+      val dangling = (v.indices.map(i => v(i) -> v(math.max(0, i - 1)))
+        .updated(n - 1, v(n - 1) -> 99999L)).toDF("node", "succ")
+      // descending ids: each peel round assigns only the path's end
+      val d = v.sorted.reverse
+      val path = d.indices.drop(1).map(i => d(i - 1) -> d(i)).toDF("u", "w")
+      def refused(f: Long => DataFrame) = {
+        val (a, b) = (outcome(f(Iter.LocalRows)), outcome(f(-1L)))
+        a == b && a.isLeft
+      }
+      refused(ListRank.ranks(cycle, None, 64, None, _)) &&
+        refused(ListRank.ranks(dangling, None, 64, None, _)) &&
+        refused(ListRank.cycleLabels(dangling, None, 64, None, _)) &&
+        refused(ListRank.cycleLabels(cycle, None, 1, None, _)) &&
+        refused(Scc.components(v.toDF("v"), path, None, 2, _))
     }
 }
