@@ -19,15 +19,19 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * }}}
   *
   * Protocol (the Delta idea, minimum viable form):
-  *  - a commit = write the data files to a fresh uuid dir (invisible
-  *    until referenced), then publish `_log/v{n+1}.json` with an
-  *    ATOMIC create-if-absent. Two writers racing on the same
-  *    expected version both stage data, but exactly ONE publish
-  *    succeeds — the loser gets [[CommitConflictException]] and must
-  *    re-read + retry (optimistic concurrency, spec-pinned).
-  *    Atomicity of the arbiter is filesystem-specific and lives
-  *    behind the [[CommitArbiter]] seam: local paths publish via a
-  *    hard link (O_EXCL at the syscall level — Hadoop's local
+  *  - every write verb is one [[Txn]]: it loads the table state ONCE
+  *    (one `_log/` listing folded into an immutable snapshot: version,
+  *    live groups with their stats, column mapping and checks), gates
+  *    its external batch there, stages data files under fresh uuid
+  *    dirs (invisible until referenced), and publishes
+  *    `_log/v{n+1}.json` with an ATOMIC create-if-absent. Two writers
+  *    racing on one version both stage, but exactly ONE publish
+  *    succeeds; the loser deletes what it staged and gets
+  *    [[CommitConflictException]] (optimistic concurrency,
+  *    spec-pinned), and so does a writer failing before its publish.
+  *    Atomicity of the arbiter is filesystem-specific and lives behind
+  *    the [[CommitArbiter]] seam: local paths publish via a hard link
+  *    (O_EXCL at the syscall level — Hadoop's local
   *    `create(overwrite=false)` is a non-atomic exists-then-create),
   *    HDFS via namenode-atomic create, object stores bind a
   *    conditional-put implementation (see CommitArbiter's doc).
@@ -43,11 +47,6 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    since checkpoint) log entries, not O(commits). Checkpoints are
   *    written to a temp file and renamed into place, so no reader
   *    ever folds a torn one.
-  *  - every verb loads the table state ONCE: one `_log/` listing,
-  *    folded into an immutable snapshot (version, live groups with
-  *    their stats, column mapping and checks). The verb gates, plans
-  *    and commits against that one version, so a commit landing in
-  *    between makes its publish conflict instead of mixing states.
   *  - MERGE (upsert) comes in three arms. [[merge]] rewrites the full
   *    snapshot (anti-join + replace) — always correct, cost grows
   *    with the TABLE (the measured vtable_merge slope in SCALE.md);
@@ -64,10 +63,10 @@ import org.apache.spark.sql.types.{StructField, StructType}
   *    merge-on-read arm: touched groups gain a deletion vector and
   *    the batch lands as one new group. In both arms an EMPTY batch
   *    is a no-op: no version, no zero-row group.
-  *  - [[vacuum]] deletes data groups referenced by NO log entry (the
-  *    orphans left by writers that crashed between staging and
-  *    publish). Groups referenced by ANY version — including replaced
-  *    ones — are never touched, so time travel stays intact; a
+  *  - [[vacuum]] deletes data groups referenced by NO log entry: the
+  *    orphans of a writer that died before its publish, or whose
+  *    publish call threw. Groups referenced by ANY version — including
+  *    replaced ones — are never touched, so time travel stays intact; a
   *    `minAgeMs` fence keeps a concurrent writer's freshly staged
   *    (not yet published) group safe.
   *  - [[optimize]] is OPTIMIZE/compaction THROUGH the protocol: read
@@ -393,61 +392,204 @@ object VersionedTable {
   def currentVersion(spark: SparkSession, path: String): Long =
     listLog(fs(spark, logDir(path)), path).head
 
-  /** Atomic create-if-absent publish of `payload` at `entry` through
-    * the given [[CommitArbiter]] binding. False on a lost race. */
-  private def publishExclusive(f: org.apache.hadoop.fs.FileSystem,
-      entry: Path, payload: Array[Byte],
-      arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter)
-      : Boolean =
-    arbiterFor(f).publish(f, entry, payload)
+  /** One write transaction, the shape of Delta's OptimisticTransaction:
+    * it opens on ONE [[Snapshot]], which its verb gates, plans and
+    * stages against, and publishes at most one log entry on top of it.
+    * Every write verb runs in one ([[transact]]). The rules:
+    *  - gate: [[gate]] checks the verb's EXTERNAL batch at the
+    *    snapshot — schema and CHECK constraints for commit, the merges,
+    *    append-if-absent and the streaming append; the constraints alone
+    *    for COPY INTO (`allowEvolution = true`). Internal rewrites
+    *    (optimize*, deleteRange, deleteKeys, mergeDv's density
+    *    fallback) gate nothing: their rows are the table's own and hold
+    *    by induction, and a gate would scan the snapshot.
+    *  - stage: every data group and deletion-vector sidecar goes to a
+    *    fresh uuid dir whose name is recorded BEFORE the write, so a
+    *    half-done write is recorded too; [[nonEmpty]] drops an empty one.
+    *  - clean up: when the transaction ends without its entry landing —
+    *    a throw before the publish, a lost race, or a verb that found
+    *    nothing to publish — every name it staged is deleted. An
+    *    exception escaping the arbiter's publish call itself keeps them:
+    *    the entry may have landed (a hard link can throw deleting its
+    *    temp file after the link), and [[vacuum]] reclaims them only if
+    *    no entry references them.
+    *  - publish: one atomic create-if-absent of `_log/v{n+1}.json`
+    *    through the [[CommitArbiter]] binding. On a lost race the
+    *    verb's `onConflict` either moves `snap` to a newer version and
+    *    gives the groups to republish there (the append retry, the
+    *    rebase fold), or gives None: [[CommitConflictException]]. */
+  private final class Txn(spark: SparkSession, path: String,
+      var snap: Snapshot) {
+    private var staged = List.empty[String]
+    // the entry landed, or the publish call threw and it may have
+    private var keep = false
 
-  /** Publish a log entry for `groups` as version `base.version + 1`;
-    * cleans up `staged` (the groups THIS writer wrote, not the
-    * carried ones) and throws on a lost race. `base` is the state the
-    * entry applies to. `batchId` (optional) tags the entry with a
-    * streaming micro-batch id — the idempotence token
-    * [[graft.streaming.VersionedSink]] deduplicates retried batches
-    * on. `files` are the source files this entry loads, published in
-    * the same atomic create as its groups ([[copyFiles]]). */
-  private def commitEntry(spark: SparkSession, path: String,
-      base: Snapshot, groups: Seq[Group], replace: Boolean,
-      staged: Seq[String], batchId: Option[Long] = None,
-      arbiterFor: FileSystem => CommitArbiter = CommitArbiter.forFs,
-      schema: Option[SchemaState] = None,
-      op: Option[String] = None, files: Seq[String] = Seq.empty): Long = {
-    val next = base.version + 1
-    val f = fs(spark, path)
-    f.mkdirs(new Path(logDir(path)))
-    val entry = new Path(logDir(path), f"v$next%08d.json")
-    val batchJs = batchId.map(b => s""""batch":$b,""").getOrElse("")
-    // operation tag for DESCRIBE HISTORY — internal fixed vocabulary,
-    // never user input (log-grammar safe by construction)
-    val opJs = op.map(o => s""""op":"$o",""").getOrElse("")
-    val schemaJs = schema.map(st => s"${schemaJson(st)},").getOrElse("")
-    val payload =
-      s"""{"version":$next,$opJs$batchJs$schemaJs"replace":$replace,${groupsJson(groups)}${filesJson(files)}}"""
-    if (!publishExclusive(f, entry, payload.getBytes("UTF-8"), arbiterFor)) {
-      staged.foreach(dropStaged(spark, path, _))
-      throw new CommitConflictException(next)
+    def gate(df: DataFrame, allowEvolution: Boolean): Unit = {
+      requireKnownColumns(spark, path, snap, df, allowEvolution)
+      requireChecks(snap, df)
     }
-    // the winner of a checkpoint-boundary version consolidates the
-    // live set; the state at `next` is `base` plus this entry, so no
-    // log re-walk. A checkpoint that did not land only makes reads
-    // fold more entries, so its failure must not report the landed
-    // version as failed (a caller retrying the verb would apply it
-    // twice).
-    if (next % CheckpointInterval == 0)
-      try writeCheckpoint(f, path, next,
-        if (replace) groups else base.groups ++ groups,
-        schema.getOrElse(base.schema), base.files ++ files)
-      catch { case _: java.io.IOException => }
-    next
+
+    /** A fresh uuid dir name under `data/`, recorded as staged. */
+    private def fresh(): String = {
+      val name = java.util.UUID.randomUUID().toString
+      staged ::= name
+      name
+    }
+
+    /** Delete one staged dir: an empty or superseded stage. */
+    def drop(name: String): Unit = {
+      fs(spark, path).delete(new Path(s"$path/data/$name"), true)
+      staged = staged.filterNot(_ == name)
+    }
+
+    /** `g`, or None (its dir dropped) when it holds no row. Rows are
+      * recorded at stage time, so this costs no job. */
+    def nonEmpty(g: Group): Option[Group] =
+      if (g.rows.contains(0L)) { drop(g.name); None } else Some(g)
+
+    /** Write `df` as a fresh staged dir, with `aggs` observed on the
+      * write pass itself (one pass, not write-then-rescan: min/max are
+      * retry-insensitive and a retried zero-row task adds 0 to a count,
+      * so the figures stay exact under re-run tasks). Seeds the schema
+      * cache: read-back inference would report exactly this schema
+      * with nullability relaxed, so later opens of the dir skip the
+      * footer-inference job. Returns (dir name, observed values). */
+    def write(df: DataFrame, aggs: Seq[Column])
+        : (String, Map[String, Any]) = {
+      val name = fresh()
+      val obs = new Observation()
+      df.observe(obs, aggs.head, aggs.tail: _*)
+        .write.mode("overwrite").parquet(s"$path/data/$name")
+      cacheGroupSchema(s"$path/data/$name",
+        relaxNullability(df.schema).asInstanceOf[StructType])
+      (name, obs.get)
+    }
+
+    /** Stage `df` as one group, its stats (key stats when `statsCol`
+      * is set) observed on the write pass. */
+    def stage(df: DataFrame, statsCol: Option[String]): Group = {
+      val plan = new StatsPlan(df.schema.fields.toSeq, statsCol)
+      val (name, observed) = write(df, plan.aggs)
+      plan.group(name, observed)
+    }
+
+    /** One-pass span staging shared by [[optimizeClustered]] and
+      * [[optimizeZOrder]]: `withSpan` carries the data columns plus an
+      * integer `__graft_span`; ONE partitionBy write stages every span
+      * directory under one fresh staged dir and ONE grouped agg lifts
+      * per-span stats (+ row counts), independent of span count. Empty
+      * spans simply produce no partition directory. Span groups are
+      * referenced as `uuid/__graft_span=i`; vacuum pins first-level
+      * dirs by the reference's first path segment. Returns the groups
+      * in span order. */
+    def spans(withSpan: DataFrame, statsCol: String): Seq[Group] = {
+      val name = fresh()
+      withSpan.write.partitionBy("__graft_span").mode("overwrite")
+        .parquet(s"$path/data/$name")
+      // read back WITH partition discovery: __graft_span returns as
+      // the partition column, grouping the stats agg per span; the
+      // span files themselves hold only the data columns, so each
+      // leaf dir reads exactly like any other staged group
+      val written = spark.read.parquet(s"$path/data/$name")
+      val plan = new StatsPlan(
+        written.schema.fields.toSeq.filter(_.name != "__graft_span"),
+        Some(statsCol))
+      written.groupBy(col("__graft_span"))
+        .agg(plan.aggs.head, plan.aggs.tail: _*).collect()
+        .sortBy(_.getInt(0)).toSeq
+        .map(r => plan.group(s"$name/__graft_span=${r.getInt(0)}",
+          r.getAs[Any](_)))
+    }
+
+    /** The deletion-vector step of [[deleteKeys]] and [[mergeDv]]: the
+      * keys of `k` (non-null, distinct) that group `g`'s VISIBLE
+      * (mapped, already masked) rows hold — so re-deleting a masked key
+      * adds no entry — are written as a sidecar whose row count rides
+      * the write, then merged with g's prior vector, mapped by the
+      * [[applyDv]] rule. Returns the new vector and its row count, or
+      * None (sidecar dropped) when `g` holds none of the keys. */
+    def stageDv(g: Group, k: DataFrame, keyCol: String)
+        : Option[(String, Long)] = {
+      def sidecar(df: DataFrame): (String, Long) = {
+        val (name, m) = write(df, Seq(count(lit(1)).as("__n")))
+        (name, m("__n").asInstanceOf[Number].longValue())
+      }
+      val st = snap.schema
+      val (hit, n) = sidecar(readGroups(spark, path, Seq(g), st).get
+        .select(col(keyCol)).join(k, Seq(keyCol), "left_semi"))
+      if (n == 0L) { drop(hit); None }
+      else Some(g.dv.fold((hit, n)) { d =>
+        val merged = sidecar(readGroupDir(spark, s"$path/data/$hit")
+          .unionByName(st.applyRenames(readGroupDir(spark, groupPath(path, d)))
+            .select(col(keyCol))).distinct())
+        drop(hit)
+        merged
+      })
+    }
+
+    /** Publish `groups` as version `snap.version + 1`: a replace entry
+      * is the new live set, an append entry extends it. `op` tags it
+      * for [[history]] (an internal fixed vocabulary, never user input);
+      * `batchId` with a streaming micro-batch id, the idempotence token
+      * [[graft.streaming.VersionedSink]] deduplicates retried batches
+      * on; `files` are the source files it loads ([[copyFiles]]). The
+      * winner of a checkpoint-boundary version consolidates the live
+      * set from `snap` plus this entry, with no log re-walk; a
+      * checkpoint that did not land only makes reads fold more entries,
+      * so its failure must not report the landed version as failed (a
+      * caller retrying the verb would apply it twice). */
+    def publish(groups: Seq[Group], replace: Boolean, op: String,
+        batchId: Option[Long] = None, schema: Option[SchemaState] = None,
+        files: Seq[String] = Seq.empty,
+        arbiterFor: FileSystem => CommitArbiter = CommitArbiter.forFs,
+        onConflict: () => Option[Seq[Group]] = () => None): Long = {
+      val f = fs(spark, path)
+      val next = snap.version + 1
+      f.mkdirs(new Path(logDir(path)))
+      val entry = new Path(logDir(path), f"v$next%08d.json")
+      val batchJs = batchId.map(b => s""""batch":$b,""").getOrElse("")
+      val schemaJs = schema.map(st => s"${schemaJson(st)},").getOrElse("")
+      val payload =
+        s"""{"version":$next,"op":"$op",$batchJs$schemaJs"replace":$replace,${groupsJson(groups)}${filesJson(files)}}"""
+      keep = true
+      if (arbiterFor(f).publish(f, entry, payload.getBytes("UTF-8"))) {
+        if (next % CheckpointInterval == 0)
+          try writeCheckpoint(f, path, next,
+            if (replace) groups else snap.groups ++ groups,
+            schema.getOrElse(snap.schema), snap.files ++ files)
+          catch { case _: java.io.IOException => }
+        next
+      } else {
+        keep = false
+        onConflict() match {
+          case Some(gs) => publish(gs, replace, op, batchId, schema, files,
+            arbiterFor, onConflict)
+          case None => throw new CommitConflictException(next)
+        }
+      }
+    }
+
+    /** Delete every staged name, unless the entry landed or may have. */
+    def close(): Unit = if (!keep) staged.foreach(drop)
+  }
+
+  /** Run `body` in one [[Txn]] opened on `snap`, cleaning up after it
+    * by the Txn's rule however it ends. A failing cleanup never hides
+    * the failure that caused it. */
+  private def transact[A](spark: SparkSession, path: String,
+      snap: Snapshot)(body: Txn => A): A = {
+    val t = new Txn(spark, path, snap)
+    var failure: Throwable = null
+    try body(t) catch { case e: Throwable => failure = e; throw e }
+    finally try t.close() catch {
+      case c: Throwable if failure != null => failure.addSuppressed(c)
+    }
   }
 
   /** Publish the live set `live` with schema state `st` and the
     * loaded-file set `files` as the checkpoint of version `v`:
     * derived, idempotent metadata, written
-    * by [[commitEntry]] at checkpoint boundaries and by
+    * by [[Txn.publish]] at checkpoint boundaries and by
     * [[expireVersions]] at its horizon. The body goes to a dot-prefixed
     * temp file that is then RENAMED into place, never created in
     * place: other writers read the log concurrently, and a reader (or
@@ -527,13 +669,6 @@ object VersionedTable {
           s"e.g. ${bad.get.head}")
     }
 
-  /** Both write gates of an external batch, at `snap`. */
-  private def requireWritable(spark: SparkSession, path: String,
-      snap: Snapshot, df: DataFrame, allowEvolution: Boolean): Unit = {
-    requireKnownColumns(spark, path, snap, df, allowEvolution)
-    requireChecks(snap, df)
-  }
-
   /** Add a named CHECK constraint (the Delta `ALTER TABLE ADD
     * CONSTRAINT` verb): a metadata-only commit riding the schema
     * state; every subsequent write batch must satisfy the expression
@@ -562,9 +697,9 @@ object VersionedTable {
           "table first (a constraint the table already breaks would " +
           "lie to every reader)")
     }
-    commitEntry(spark, path, snap, snap.groups,
-      replace = true, staged = Seq.empty, op = Some("add_check"),
-      schema = Some(st.copy(checks = st.checks :+ (name -> exprSql))))
+    transact(spark, path, snap)(_.publish(snap.groups, replace = true,
+      "add_check",
+      schema = Some(st.copy(checks = st.checks :+ (name -> exprSql)))))
   }
 
   /** Drop a CHECK constraint by name — metadata-only. */
@@ -573,36 +708,10 @@ object VersionedTable {
     val st = snap.schema
     require(st.checks.exists(_._1 == name),
       s"no such constraint: $name")
-    commitEntry(spark, path, snap, snap.groups,
-      replace = true, staged = Seq.empty, op = Some("drop_check"),
-      schema = Some(st.copy(checks = st.checks.filterNot(_._1 == name))))
+    transact(spark, path, snap)(_.publish(snap.groups, replace = true,
+      "drop_check",
+      schema = Some(st.copy(checks = st.checks.filterNot(_._1 == name)))))
   }
-
-  /** Drop a just-staged group that turned out EMPTY (stats==None is
-    * zero rows OR all-null keys; the one-row probe disambiguates) —
-    * shared by the rewrite paths so the subtle distinction lives in
-    * one place. Returns the group to keep, if any. */
-  private def dropIfEmpty(spark: SparkSession, path: String,
-      g: Group): Option[Group] = {
-    // rows recorded at stage time settle emptiness with ZERO jobs;
-    // the one-row probe remains only for groups staged without a
-    // count (external adoptions)
-    val empty = g.rows match {
-      case Some(n) => n == 0L
-      case None => g.lo.isEmpty &&
-        readGroupDir(spark, s"$path/data/${g.name}").limit(1).isEmpty
-    }
-    if (empty) {
-      dropStaged(spark, path, g.name)
-      None
-    } else Some(g)
-  }
-
-  /** Delete one staged data dir: a lost race's, a refused batch's, or
-    * one that turned out empty. */
-  private def dropStaged(spark: SparkSession, path: String,
-      name: String): Unit =
-    fs(spark, path).delete(new Path(s"$path/data/$name"), true)
 
   /** Columns eligible for extra [min,max] stats: integral (exact
     * bounds) or decimal with an integral part that FITS a long
@@ -621,6 +730,10 @@ object VersionedTable {
         case _ => false
       })
   }
+
+  /** Whether `df`'s `keyCol` records key stats ([[StatsPlan]]). */
+  private def keyStats(df: DataFrame, keyCol: String): Boolean =
+    df.schema.exists(f => f.name == keyCol && statsEligible(f))
 
   /** Driver-side stats conversion: integral exact; decimal rounded
     * OUTWARD to the enclosing integer range (floor the min, ceil the
@@ -641,30 +754,25 @@ object VersionedTable {
   }
 
   /** The stats a group records, decided once for every path that
-    * stages or adopts one ([[stageGroup]]'s observed write,
-    * [[stageSpans]]' grouped read-back, [[convertFrom]]'s sweep): the
+    * stages or adopts one ([[Txn.stage]]'s observed write,
+    * [[Txn.spans]]' grouped read-back, [[convertFrom]]'s sweep): the
     * row count, the `key` column's [min,max], and the [min,max] of
     * the first [[MaxStatsColumns]] [[statsEligible]] non-key columns
     * of `fields`. Every aggregate is a BARE named min/max over a raw
     * column (the shape parquet footer aggregate pushdown accepts);
-    * rounding happens driver-side on the one result row. A key column
-    * that is neither integral nor a fitting decimal keeps the legacy
-    * cast("long") aggregates. No key: the row count alone. */
+    * rounding happens driver-side on the one result row. A key that is
+    * not [[statsEligible]] (a string, say) records no key stats, so
+    * every stats-pruned verb counts the group as overlapping. No key:
+    * the row count alone. */
   private final class StatsPlan(fields: Seq[StructField],
       key: Option[String]) {
     private val eligible = fields.filter(statsEligible).map(_.name)
-    private val keyFast = key.exists(eligible.contains)
-    private val cols: Seq[String] = key.toSeq.flatMap { c =>
-      (if (keyFast) Seq(c) else Seq.empty) ++
-        eligible.filter(_ != c).take(MaxStatsColumns)
-    }
+    private val cols: Seq[String] = key.toSeq.flatMap(c =>
+      eligible.filter(_ == c) ++ eligible.filter(_ != c).take(MaxStatsColumns))
     val aggs: Seq[Column] = count(lit(1)).as("__n") +:
-      ((if (keyFast) Seq.empty else key.toSeq.flatMap(c =>
-        Seq(min(col(c).cast("long")).as("__klo"),
-          max(col(c).cast("long")).as("__khi")))) ++
-        cols.zipWithIndex.flatMap { case (n, i) =>
-          Seq(min(col(n)).as(s"__lo$i"), max(col(n)).as(s"__hi$i"))
-        })
+      cols.zipWithIndex.flatMap { case (n, i) =>
+        Seq(min(col(n)).as(s"__lo$i"), max(col(n)).as(s"__hi$i"))
+      }
 
     /** Group `name` with the stats of one result row of [[aggs]],
       * looked up by aggregate name. */
@@ -676,42 +784,11 @@ object VersionedTable {
             statsLong(hi, ceil = true)))
         }
       }
-      val k: Option[(Long, Long)] = key.flatMap { c =>
-        if (keyFast) perCol.find(_._1 == c).map(t => (t._2, t._3))
-        else Option(get("__klo")).map(lo => (statsLong(lo, ceil = false),
-          statsLong(get("__khi"), ceil = true)))
-      }
-      Group(name, k.map(_._1), k.map(_._2),
+      val k = perCol.find(t => key.contains(t._1))
+      Group(name, k.map(_._2), k.map(_._3),
         xs = perCol.filterNot(t => key.contains(t._1)),
         rows = Some(get("__n").asInstanceOf[Number].longValue()))
     }
-  }
-
-  /** Write `df` as a fresh uuid dir under `data/`, with `aggs` observed
-    * on the write pass itself (one pass, not write-then-rescan: min/max
-    * are retry-insensitive and a retried zero-row task adds 0 to a
-    * count, so the figures stay exact under re-run tasks). Seeds the
-    * schema cache: read-back inference would report exactly this
-    * schema with nullability relaxed, so later opens of the dir skip
-    * the footer-inference job. Returns (dir name, observed values). */
-  private def writeObserved(spark: SparkSession, path: String,
-      df: DataFrame, aggs: Seq[Column]): (String, Map[String, Any]) = {
-    val name = java.util.UUID.randomUUID().toString
-    val obs = new Observation()
-    df.observe(obs, aggs.head, aggs.tail: _*)
-      .write.mode("overwrite").parquet(s"$path/data/$name")
-    cacheGroupSchema(s"$path/data/$name",
-      relaxNullability(df.schema).asInstanceOf[StructType])
-    (name, obs.get)
-  }
-
-  /** Stage `df` as a fresh uuid group, its stats (key stats when
-    * `statsCol` is set) observed on the write pass. */
-  private def stageGroup(spark: SparkSession, path: String,
-      df: DataFrame, statsCol: Option[String]): Group = {
-    val plan = new StatsPlan(df.schema.fields.toSeq, statsCol)
-    val (name, observed) = writeObserved(spark, path, df, plan.aggs)
-    plan.group(name, observed)
   }
 
   /** Atomically publish `df` as version `expectedVersion + 1`.
@@ -720,40 +797,24 @@ object VersionedTable {
     * the group's [min,max] of that column in the log — the file-stats
     * input [[mergePruned]] prunes on. Throws
     * [[CommitConflictException]] when another writer committed the
-    * same version first (the staged data group is cleaned up); any
-    * OTHER IO failure propagates unchanged and leaves the staged
-    * group as an orphan for [[vacuum]]. Returns the committed
-    * version. */
+    * same version first. The staged group is cleaned up by the [[Txn]]
+    * rule. `arbiterFor` is an injection seam (default
+    * [[CommitArbiter.forFs]]): tests pin protocol behavior under a
+    * deterministic lost race without process-global mutable state.
+    * Returns the committed version. */
   def commit(spark: SparkSession, path: String, df: DataFrame,
       expectedVersion: Long, replace: Boolean = false,
       statsCol: Option[String] = None,
       batchId: Option[Long] = None,
       allowEvolution: Boolean = false,
       arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
-        CommitArbiter.forFs): Long = {
-    val snap = snapshot(spark, path, Some(expectedVersion))
-    requireWritable(spark, path, snap, df, allowEvolution)
-    stageAndCommit(spark, path, snap, df, replace, statsCol, batchId,
-      arbiterFor, if (replace) "overwrite" else "append")
-  }
-
-  /** Stage `df` as one group and publish it on top of `snap` — the
-    * body of [[commit]] after its gates, shared with the internal
-    * rewrites that need none. Append entries carry only the new
-    * group; a replace entry with one group IS the whole new live set.
-    * `arbiterFor` is an injection seam (default
-    * [[CommitArbiter.forFs]]): tests pin protocol behavior under a
-    * deterministic lost race without process-global mutable state. */
-  private def stageAndCommit(spark: SparkSession, path: String,
-      snap: Snapshot, df: DataFrame, replace: Boolean,
-      statsCol: Option[String], batchId: Option[Long] = None,
-      arbiterFor: FileSystem => CommitArbiter = CommitArbiter.forFs,
-      op: String): Long = {
-    val g = stageGroup(spark, path, df, statsCol)
-    commitEntry(spark, path, snap, Seq(g), replace,
-      staged = Seq(g.name), batchId = batchId, arbiterFor = arbiterFor,
-      op = Some(op))
-  }
+        CommitArbiter.forFs): Long =
+    transact(spark, path, snapshot(spark, path, Some(expectedVersion))) { t =>
+      t.gate(df, allowEvolution)
+      t.publish(Seq(t.stage(df, statsCol)), replace,
+        if (replace) "overwrite" else "append", batchId,
+        arbiterFor = arbiterFor)
+    }
 
   /** APPEND commit with stage-once optimistic retry — the production
     * form of a contended ingest. An append entry carries no
@@ -769,8 +830,8 @@ object VersionedTable {
     * O(W²·commits) data writes fleet-wide — while this form stays at
     * one staging per commit (SCALE.md `commit_contention` measures
     * the gap). Returns (committedVersion, lostRaces); on exhausting
-    * `maxAttempts` the staged group is deleted and the last conflict
-    * rethrown. */
+    * `maxAttempts` the last conflict is rethrown, and the [[Txn]] rule
+    * cleans the staged group. */
   def commitAppendWithRetry(spark: SparkSession, path: String,
       df: DataFrame, statsCol: Option[String] = None,
       batchId: Option[Long] = None,
@@ -778,56 +839,30 @@ object VersionedTable {
       arbiterFor: org.apache.hadoop.fs.FileSystem => CommitArbiter =
         CommitArbiter.forFs): (Long, Int) = {
     require(maxAttempts >= 1, "maxAttempts must be >= 1")
-    // gates are evaluated against the state at `gated`; a lost race
-    // re-validates below iff a schema-carrying commit (addCheck /
-    // rename / drop / restore) landed since — republishing verbatim
-    // would bypass a constraint the winning writer just added, or a
-    // column a restore just took away
-    var gated = snapshot(spark, path)
-    requireWritable(spark, path, gated, df, allowEvolution = false)
-    val g = stageGroup(spark, path, df, statsCol)
-    var conflicts = 0
-    while (true) {
-      // re-read after staging: commits that landed meanwhile are not
-      // lost races
-      val snap = snapshot(spark, path)
-      try {
-        if (snap.schemaAt != gated.schemaAt) {
-          // re-run both gates at the new head; a now-failing batch
-          // must clean its staged group and refuse, same as exhaustion
-          try requireWritable(spark, path, snap, df, allowEvolution = false)
-          catch {
-            case t: Throwable =>
-              dropStaged(spark, path, g.name)
-              throw t
-          }
-          gated = snap
-        }
-        // staged = empty: a lost race must NOT clean the group — it
-        // is re-published on the next attempt
-        return (commitEntry(spark, path, snap, Seq(g), replace = false,
-          staged = Seq.empty, batchId = batchId,
-          arbiterFor = arbiterFor, op = Some("append")), conflicts)
-      } catch {
-        case e: CommitConflictException =>
-          conflicts += 1
-          if (conflicts >= maxAttempts) {
-            dropStaged(spark, path, g.name)
-            throw e
-          }
+    transact(spark, path, snapshot(spark, path)) { t =>
+      t.gate(df, allowEvolution = false)
+      val g = t.stage(df, statsCol)
+      // publish at the head read after staging (commits that landed
+      // meanwhile are not lost races) and after each lost race; a
+      // schema-carrying commit (addCheck / rename / drop / restore)
+      // since the last gate gates the batch again there, or the
+      // republish would bypass a constraint or column it changed
+      def toHead(): Unit = {
+        val head = snapshot(spark, path)
+        val moved = head.schemaAt != t.snap.schemaAt
+        t.snap = head
+        if (moved) t.gate(df, allowEvolution = false)
       }
+      var conflicts = 0
+      toHead()
+      val v = t.publish(Seq(g), replace = false, "append", batchId,
+        arbiterFor = arbiterFor, onConflict = () => {
+          conflicts += 1
+          if (conflicts >= maxAttempts) None
+          else { toHead(); Some(Seq(g)) }
+        })
+      (v, conflicts)
     }
-    throw new IllegalStateException("unreachable")
-  }
-
-  /** The `batch` tag of the HEAD log entry, if any — the token a
-    * streaming sink checks to make a retried micro-batch a no-op
-    * (Structured Streaming retries the LAST batch after a failure,
-    * so head-entry inspection is the sufficient check). */
-  def headBatchId(spark: SparkSession, path: String): Option[Long] = {
-    val f = fs(spark, logDir(path))
-    listLog(f, path).entries.lastOption
-      .flatMap { case (_, st) => batchTag(readJson(f, st.getPath)) }
   }
 
   /** Append `df` as the commit of streaming micro-batch `batchId`,
@@ -837,43 +872,43 @@ object VersionedTable {
     * log) serves the tag check, both write gates and the publish.
     * The body of [[graft.streaming.VersionedSink.appendBatch]]. */
   private[graft] def commitBatch(spark: SparkSession, path: String,
-      df: DataFrame, batchId: Long, statsCol: Option[String]): Long = {
-    val snap = snapshot(spark, path, headBatch = true)
-    if (snap.batch.contains(batchId) || df.isEmpty) snap.version
-    else {
-      requireWritable(spark, path, snap, df, allowEvolution = false)
-      stageAndCommit(spark, path, snap, df, replace = false, statsCol,
-        Some(batchId), op = "append")
+      df: DataFrame, batchId: Long, statsCol: Option[String]): Long =
+    transact(spark, path, snapshot(spark, path, headBatch = true)) { t =>
+      if (t.snap.batch.contains(batchId) || df.isEmpty) t.snap.version
+      else {
+        t.gate(df, allowEvolution = false)
+        t.publish(Seq(t.stage(df, statsCol)), replace = false, "append",
+          Some(batchId))
+      }
     }
-  }
 
   /** COPY INTO as one commit, the body of [[graft.nhl.Ledger.copyInto]]:
     * rows of `batch` whose `fileCol` names a file the snapshot already
     * loaded are skipped (rows with a null name always load); the rest
-    * are staged as ONE group whose write also observes their file
+    * must hold the table's CHECK constraints (new columns are allowed),
+    * and are staged as ONE group whose write also observes their file
     * names, and one append entry tagged `copy_into` publishes group
     * and names together, so a crash leaves both or neither. An empty
     * remainder publishes nothing. One optimistic attempt, as in
     * [[merge]]. Returns the rows appended. */
   private[graft] def copyFiles(spark: SparkSession, path: String,
-      batch: DataFrame, fileCol: String): Long = {
-    val snap = snapshot(spark, path)
-    val file = col(fileCol)
-    val fresh =
-      if (snap.files.isEmpty) batch
-      else batch.filter(file.isNull || !file.isin(snap.files.toSeq: _*))
-    requireChecks(snap, fresh)
-    val plan = new StatsPlan(fresh.schema.fields.toSeq, None)
-    val (name, observed) = writeObserved(spark, path, fresh,
-      plan.aggs :+ collect_set(file).as("__files"))
-    dropIfEmpty(spark, path, plan.group(name, observed)).fold(0L) { g =>
-      commitEntry(spark, path, snap, Seq(g), replace = false,
-        staged = Seq(g.name), op = Some("copy_into"),
-        files = observed("__files").asInstanceOf[scala.collection.Seq[String]]
-          .toSeq)
-      g.rows.get
+      batch: DataFrame, fileCol: String): Long =
+    transact(spark, path, snapshot(spark, path)) { t =>
+      val file = col(fileCol)
+      val fresh =
+        if (t.snap.files.isEmpty) batch
+        else batch.filter(file.isNull || !file.isin(t.snap.files.toSeq: _*))
+      t.gate(fresh, allowEvolution = true)
+      val plan = new StatsPlan(fresh.schema.fields.toSeq, None)
+      val (name, observed) =
+        t.write(fresh, plan.aggs :+ collect_set(file).as("__files"))
+      t.nonEmpty(plan.group(name, observed)).fold(0L) { g =>
+        t.publish(Seq(g), replace = false, "copy_into",
+          files = observed("__files").asInstanceOf[scala.collection.Seq[String]]
+            .toSeq)
+        g.rows.get
+      }
     }
-  }
 
   /** Append-if-absent by key as one commit, the body of
     * [[graft.nhl.Ledger.incrementalByKey]]: rows of `batch` whose
@@ -885,20 +920,18 @@ object VersionedTable {
     * [[CommitConflictException]] instead of inserting a key twice. An
     * empty remainder publishes nothing. Returns the rows appended. */
   private[graft] def appendAbsent(spark: SparkSession, path: String,
-      batch: DataFrame, keyCol: String): Long = {
-    val snap = snapshot(spark, path)
-    requireWritable(spark, path, snap, batch, allowEvolution = false)
-    val fresh = readGroups(spark, path, snap.groups, snap.schema)
-      .fold(batch)(t =>
-        batch.join(t.select(col(keyCol)), Seq(keyCol), "left_anti"))
-      .dropDuplicates(keyCol)
-    dropIfEmpty(spark, path, stageGroup(spark, path, fresh, None)).fold(0L) {
-      g =>
-        commitEntry(spark, path, snap, Seq(g), replace = false,
-          staged = Seq(g.name), op = Some("append_absent"))
+      batch: DataFrame, keyCol: String): Long =
+    transact(spark, path, snapshot(spark, path)) { t =>
+      t.gate(batch, allowEvolution = false)
+      val fresh = readGroups(spark, path, t.snap.groups, t.snap.schema)
+        .fold(batch)(cur =>
+          batch.join(cur.select(col(keyCol)), Seq(keyCol), "left_anti"))
+        .dropDuplicates(keyCol)
+      t.nonEmpty(t.stage(fresh, None)).fold(0L) { g =>
+        t.publish(Seq(g), replace = false, "append_absent")
         g.rows.get
+      }
     }
-  }
 
   /** Per-JVM (group dir → read-back schema) cache for the protocol's
     * OWN immutable parquet: data groups and DV sidecars are written
@@ -980,35 +1013,6 @@ object VersionedTable {
       val c = dvf.columns.head
       rows.join(broadcast(dvf.select(col(c)).distinct()), Seq(c), "left_anti")
     }
-
-  /** The deletion-vector step of [[deleteKeys]] and [[mergeDv]]: the
-    * keys of `k` (non-null, distinct) that group `g`'s VISIBLE
-    * (mapped, already masked) rows hold — so re-deleting a masked key
-    * adds no entry — are written as a sidecar whose row count rides
-    * the write, then merged with g's prior vector, mapped by the
-    * [[applyDv]] rule. Returns the new vector and its row count, or
-    * None (sidecar dropped) when `g` holds none of the keys. */
-  private def stageDv(spark: SparkSession, path: String, g: Group,
-      st: SchemaState, k: DataFrame, keyCol: String)
-      : Option[(String, Long)] = {
-    def write(df: DataFrame): (String, Long) = {
-      val (name, m) =
-        writeObserved(spark, path, df, Seq(count(lit(1)).as("__n")))
-      (name, m("__n").asInstanceOf[Number].longValue())
-    }
-    val (hit, n) = write(readGroups(spark, path, Seq(g), st).get
-      .select(col(keyCol)).join(k, Seq(keyCol), "left_semi"))
-    if (n == 0L) {
-      dropStaged(spark, path, hit)
-      None
-    } else Some(g.dv.fold((hit, n)) { d =>
-      val merged = write(readGroupDir(spark, s"$path/data/$hit")
-        .unionByName(st.applyRenames(readGroupDir(spark, groupPath(path, d)))
-          .select(col(keyCol))).distinct())
-      dropStaged(spark, path, hit)
-      merged
-    })
-  }
 
   /** Read the table as of `asOfVersion` (None = latest), with the
     * column mapping in effect AT that version applied (time travel
@@ -1135,30 +1139,27 @@ object VersionedTable {
     // another version than the publish targets left a window where an
     // old-schema batch could land cleanly one version after a rename
     // (race-spec pinned)
-    val snap = snapshot(spark, path)
-    requireWritable(spark, path, snap, updates, allowEvolution)
-    val merged = readGroups(spark, path, snap.groups, snap.schema) match {
-      case Some(cur) =>
-        cur.join(updates.select(col(keyCol)).distinct(), Seq(keyCol),
-          "left_anti").unionByName(updates, allowMissingColumns = true)
-      case None => updates
+    transact(spark, path, snapshot(spark, path)) { t =>
+      t.gate(updates, allowEvolution)
+      val merged = readGroups(spark, path, t.snap.groups, t.snap.schema) match {
+        case Some(cur) =>
+          cur.join(updates.select(col(keyCol)).distinct(), Seq(keyCol),
+            "left_anti").unionByName(updates, allowMissingColumns = true)
+        case None => updates
+      }
+      val g = t.stage(merged, Some(keyCol).filter(keyStats(merged, _)))
+      (t.publish(Seq(g), replace = true, "merge"), g.rows.get)
     }
-    // no second gate: the updates were just gated above, carried rows
-    // hold by induction — re-probing would scan the snapshot
-    val g = stageGroup(spark, path, merged,
-      Some(keyCol).filter(k => merged.schema.exists(f =>
-        f.name == k && statsEligible(f))))
-    (commitEntry(spark, path, snap, Seq(g), replace = true,
-      staged = Seq(g.name), op = Some("merge")), g.rows.get)
   }
 
   /** MERGE (upsert by key), stats-pruned copy-on-write form: only
     * live groups whose [min,max] key stats OVERLAP the update batch's
     * key range are rewritten (anti-join + union); disjoint groups are
     * carried into the new version BY REFERENCE — zero data movement.
-    * Groups without stats are conservatively rewritten. Equivalent to
-    * [[merge]] row-for-row (spec-pinned); on a key-clustered table
-    * the rewrite cost is O(touched groups), not O(table) — the
+    * Groups without stats, and every group under a key that records
+    * none (a string), are rewritten. Equivalent to [[merge]]
+    * row-for-row (spec-pinned); on a key-clustered table the rewrite
+    * cost is O(touched groups), not O(table) — the
     * difference SCALE.md's vtable_prune block measures. An empty
     * batch publishes nothing and returns the current version. Returns
     * (committedVersion, rewrittenGroupCount). */
@@ -1192,9 +1193,10 @@ object VersionedTable {
     * probed. Null-key update rows mask nothing and ride the appended
     * group (the [[mergePruned]] rule); an EMPTY batch that masks and
     * rewrites nothing is a complete no-op — no new version, no
-    * zero-row group (the common empty streaming micro-batch). One
-    * optimistic attempt at the current version; a lost race cleans
-    * every staged sidecar/group and rethrows. `batchId` tags the entry
+    * zero-row group (the common empty streaming micro-batch). A key
+    * that records no stats (a string) probes every group. One
+    * optimistic attempt at the current version ([[Txn]] rules).
+    * `batchId` tags the entry
     * with a streaming micro-batch id; when the head entry already
     * carries it (a retried batch) the call is a no-op. Returns
     * (versionAfterCall, groupsMasked, groupsRewritten). */
@@ -1206,16 +1208,11 @@ object VersionedTable {
       batchId: Option[Long] = None): (Long, Int, Int) = {
     require(maxDvFraction >= 0.0 && maxDvFraction <= 1.0,
       s"maxDvFraction must be in [0,1]: $maxDvFraction")
-    // one snapshot: batch-tag check, gates, plan and publish all at
-    // its version (the merge() rule)
     val snap = snapshot(spark, path, headBatch = batchId.isDefined)
     val Snapshot(v, live, st, _, _, _) = snap
     if (batchId.isDefined && snap.batch == batchId) return (v, 0, 0)
-    requireWritable(spark, path, snap, updates, allowEvolution)
-    var staged = List.empty[String]
-    var masked = 0
-    var rewrote = 0
-    try {
+    transact(spark, path, snap) { t =>
+      t.gate(updates, allowEvolution)
       // stage the batch FIRST (round-16, guide §1: one pass over the
       // updates lineage instead of three): the staged write's observed
       // stats give the key bounds the old min/max agg re-derived, the
@@ -1224,17 +1221,21 @@ object VersionedTable {
       // parquet instead of re-executing the updates plan per group —
       // at 100 TB the updates lineage is an arbitrary upstream query,
       // so materialize-once is the scale posture too.
-      val gNew0 = stageGroup(spark, path, updates, Some(keyCol))
-      staged ::= gNew0.name
-      val stagedData = readGroupDir(spark, s"$path/data/${gNew0.name}")
-      val k = stagedData.select(col(keyCol))
-        .filter(col(keyCol).isNotNull).distinct()
-      // None for an empty batch or all-null keys: matches nothing
-      val batchBounds = gNew0.lo.zip(gNew0.hi)
+      val gNew0 = t.stage(updates, Some(keyCol))
+      val k = readGroupDir(spark, s"$path/data/${gNew0.name}")
+        .select(col(keyCol)).filter(col(keyCol).isNotNull).distinct()
+      // None for an empty batch or all-null keys: matches nothing; a
+      // key that records no stats may be in every group
+      val batchBounds =
+        if (gNew0.rows.contains(0L)) None
+        else if (keyStats(updates, keyCol)) gNew0.lo.zip(gNew0.hi)
+        else Some((Long.MinValue, Long.MaxValue))
+      var masked = 0
+      var rewrote = 0
       val updated = live.flatMap { g =>
         if (!batchBounds.exists { case (lo, hi) => overlaps(g, lo, hi) })
           Some(g)
-        else stageDv(spark, path, g, st, k, keyCol) match {
+        else t.stageDv(g, k, keyCol) match {
           case None => Some(g)
           case Some((vec, dvRows)) =>
             // physical rows recorded at the group's own stage time;
@@ -1242,7 +1243,6 @@ object VersionedTable {
             val physRows = g.rows.getOrElse(
               readGroupDir(spark, groupPath(path, g.name)).count())
             if (dvRows <= maxDvFraction * physRows) {
-              staged ::= vec
               masked += 1
               Some(g.copy(dv = Some(vec)))
             } else {
@@ -1250,35 +1250,23 @@ object VersionedTable {
               // keys, vector dropped — the copy-on-write arm, chosen
               // only where the vector stopped being "small"; a group
               // emptied entirely leaves the live set
-              dropStaged(spark, path, vec)
+              t.drop(vec)
               rewrote += 1
-              val remaining = readGroups(spark, path, Seq(g), st).get
-                .join(k, Seq(keyCol), "left_anti")
-              val kept = dropIfEmpty(spark, path,
-                stageGroup(spark, path, remaining, Some(keyCol)))
-              kept.foreach(ng => staged ::= ng.name)
-              kept
+              t.nonEmpty(t.stage(readGroups(spark, path, Seq(g), st).get
+                .join(k, Seq(keyCol), "left_anti"), Some(keyCol)))
             }
         }
       }
-      // dropIfEmpty on the appended group (the deleteRange
-      // discipline): an EMPTY updates batch — the common empty
-      // streaming micro-batch through VersionedSink.upsertBatch —
-      // must not commit a zero-row, stats-less group that every later
+      // an EMPTY updates batch — the common empty streaming
+      // micro-batch through VersionedSink.upsertBatch — must not
+      // commit a zero-row, stats-less group that every later
       // mergePruned/mergeDv/deleteRange conservatively probes or
       // rewrites forever. When nothing was masked or rewritten either,
-      // skip the commit entirely (no new version for a no-op batch).
-      val gNew = dropIfEmpty(spark, path, gNew0)
-      if (gNew.isEmpty) staged = staged.filterNot(_ == gNew0.name)
-      if (gNew.isEmpty && masked == 0 && rewrote == 0) return (v, 0, 0)
-      (commitEntry(spark, path, snap, updated ++ gNew.toSeq,
-        replace = true, staged = staged, batchId = batchId,
-        arbiterFor = arbiterFor, op = Some("merge_dv")), masked, rewrote)
-    } catch {
-      // commitEntry already cleans `staged` on a lost race; the
-      // re-delete here is a no-op then, and the real cleanup for any
-      // failure BEFORE the publish (IO mid-staging)
-      case e: Throwable => staged.foreach(dropStaged(spark, path, _)); throw e
+      // publish nothing (no new version for a no-op batch).
+      val gNew = t.nonEmpty(gNew0)
+      if (gNew.isEmpty && masked == 0 && rewrote == 0) (v, 0, 0)
+      else (t.publish(updated ++ gNew.toSeq, replace = true, "merge_dv",
+        batchId, arbiterFor = arbiterFor), masked, rewrote)
     }
   }
 
@@ -1330,81 +1318,82 @@ object VersionedTable {
       updates: DataFrame, keyCol: String, allowEvolution: Boolean,
       fromVersion: Option[Long], maxRebases: Int,
       op: String): (Long, Int, Int) = {
-    // one snapshot for gates and plan — the merge() rule (an explicit
-    // fromVersion pins it earlier, same safety)
-    val snap = snapshot(spark, path, fromVersion)
-    requireWritable(spark, path, snap, updates, allowEvolution)
-    // the batch's key range: None for an empty or all-null batch, and
-    // not computed on an empty table, where there is nothing to touch
-    val bounds =
-      if (snap.groups.isEmpty) None
-      else {
-        val r = updates.agg(min(col(keyCol).cast("long")),
-          max(col(keyCol).cast("long"))).head()
-        if (r.isNullAt(0)) None else Some((r.getLong(0), r.getLong(1)))
-      }
-    val (touched, carried0) = snap.groups.partition(g =>
-      bounds.exists { case (lo, hi) => overlaps(g, lo, hi) })
-    val rewritten =
-      readGroups(spark, path, touched, snap.schema) match {
-        case Some(t) =>
-          // reconciling union: on a mixed-schema table (or a widening
-          // batch under allowEvolution) the touched generation and the
-          // batch may differ in columns — absent ones read as NULL,
-          // the same posture readGroups applies
-          t.join(updates.select(col(keyCol)).distinct(), Seq(keyCol),
-            "left_anti").unionByName(updates, allowMissingColumns = true)
-        case None => updates
-      }
-    val g = dropIfEmpty(spark, path,
-        stageGroup(spark, path, rewritten, Some(keyCol)))
-      .getOrElse(return (snap.version, 0, 0))
-    // the key span this merge READ (touched groups) or WROTE (the
-    // staged group, which holds every batch key): an interloper inside
-    // it is a real conflict. A stats-less touched group has an UNKNOWN
-    // row range, so no disjointness can be proven and every race is a
-    // real conflict. No span at all (null keys, nothing touched) is
-    // disjoint from every append.
-    val unbounded = touched.exists(t => t.lo.isEmpty || t.hi.isEmpty)
-    val spans = (g +: touched).flatMap(t => t.lo.zip(t.hi))
-    val span =
-      if (spans.isEmpty) None
-      else Some((spans.map(_._1).min, spans.map(_._2).max))
-    val tag = if (bounds.isEmpty) "merge_pruned" else op
-    val f = fs(spark, logDir(path))
-    var carried = carried0
-    var expected = snap.version
-    var rebases = 0
-    while (true) {
-      try {
-        // staged = empty: a lost race must NOT clean the group — the
-        // fold path re-publishes it (the commitAppendWithRetry rule);
-        // real conflicts below delete it explicitly
-        return (commitEntry(spark, path, snap.copy(version = expected),
-          carried :+ g, replace = true, staged = Seq.empty,
-          op = Some(tag)), touched.size, rebases)
-      } catch {
-        case e: CommitConflictException =>
+    // an explicit fromVersion pins the snapshot earlier, same safety
+    transact(spark, path, snapshot(spark, path, fromVersion)) { t =>
+      val snap = t.snap
+      t.gate(updates, allowEvolution)
+      // the batch's key range, not computed on an empty table, where
+      // there is nothing to touch
+      val bounds = if (snap.groups.isEmpty) None else keyRange(updates, keyCol)
+      val (touched, carried0) = snap.groups.partition(g =>
+        bounds.exists { case (lo, hi) => overlaps(g, lo, hi) })
+      val rewritten =
+        readGroups(spark, path, touched, snap.schema) match {
+          case Some(cur) =>
+            // reconciling union: on a mixed-schema table (or a widening
+            // batch under allowEvolution) the touched generation and the
+            // batch may differ in columns — absent ones read as NULL,
+            // the same posture readGroups applies
+            cur.join(updates.select(col(keyCol)).distinct(), Seq(keyCol),
+              "left_anti").unionByName(updates, allowMissingColumns = true)
+          case None => updates
+        }
+      t.nonEmpty(t.stage(rewritten, Some(keyCol)))
+        .fold((snap.version, 0, 0)) { g =>
+        // the key span this merge READ (touched groups) or WROTE (the
+        // staged group, which holds every batch key): an interloper
+        // inside it is a real conflict. A stats-less touched group, or
+        // a key that records no stats, has an UNKNOWN row range, so no
+        // disjointness can be proven and every race is a real conflict.
+        // No span at all (null keys, nothing touched) is disjoint from
+        // every append.
+        val unbounded = !keyStats(updates, keyCol) ||
+          touched.exists(x => x.lo.isEmpty || x.hi.isEmpty)
+        val spans = (g +: touched).flatMap(x => x.lo.zip(x.hi))
+        val span =
+          if (spans.isEmpty) None
+          else Some((spans.map(_._1).min, spans.map(_._2).max))
+        val f = fs(spark, logDir(path))
+        var carried = carried0
+        var rebases = 0
+        // a lost race folds the interlopers when every one is a
+        // stats-disjoint append, and republishes at the new head
+        def onRace(): Option[Seq[Group]] = {
           val log = if (rebases < maxRebases) Some(listLog(f, path)) else None
-          val folded = log.exists(_.entries.filter(_._1 > expected).forall {
-            case (_, st) =>
+          val folded = log.exists(_.entries.filter(_._1 > t.snap.version)
+            .forall { case (_, st) =>
               val raw = readJson(f, st.getPath)
               val gs = parseGroups(raw)
               val foldable = !jsonField(raw, "replace").toBoolean &&
                 !unbounded && gs.forall(ig =>
                   span.forall { case (lo, hi) => !overlaps(ig, lo, hi) })
-              if (foldable) carried = carried ++ gs
+              if (foldable) carried ++= gs
               foldable
-          })
-          if (!folded) {
-            dropStaged(spark, path, g.name)
-            throw e
+            })
+          if (!folded) None
+          else {
+            rebases += 1
+            t.snap = t.snap.copy(version = log.get.head)
+            Some(carried :+ g)
           }
-          rebases += 1
-          expected = log.get.head
+        }
+        val v = t.publish(carried :+ g, replace = true,
+          if (bounds.isEmpty) "merge_pruned" else op, onConflict = onRace)
+        (v, touched.size, rebases)
       }
     }
-    throw new IllegalStateException("unreachable")
+  }
+
+  /** The key range of `df` in the stats' long space, by the
+    * [[StatsPlan]] rule: None for an empty or all-null batch, which
+    * touches no group, and every long for a key that records no stats,
+    * which any group may hold. One aggregate job. */
+  private def keyRange(df: DataFrame, keyCol: String): Option[(Long, Long)] = {
+    val r = df.agg(min(col(keyCol)), max(col(keyCol))).head()
+    if (r.isNullAt(0)) None
+    else if (!keyStats(df, keyCol)) Some((Long.MinValue, Long.MaxValue))
+    else Some((statsLong(r.get(0), ceil = false),
+      statsLong(r.get(1), ceil = true)))
   }
 
   /** Stats-pruned READ: the read-side counterpart of [[mergePruned]]
@@ -1448,12 +1437,12 @@ object VersionedTable {
     val (touched, carried) = snap.groups.partition(overlaps(_, lo, hi))
     if (touched.isEmpty) return (snap.version, 0)
     val k = col(keyCol).cast("long")
-    val remaining = readGroups(spark, path, touched, snap.schema).get
-      .filter(k.isNull || k < lo || k > hi)
-    val g = stageGroup(spark, path, remaining, Some(keyCol))
-    val keep = dropIfEmpty(spark, path, g).toSeq
-    (commitEntry(spark, path, snap, carried ++ keep, replace = true,
-      staged = keep.map(_.name), op = Some("delete_range")), touched.size)
+    transact(spark, path, snap) { t =>
+      val keep = t.nonEmpty(t.stage(readGroups(spark, path, touched,
+        snap.schema).get.filter(k.isNull || k < lo || k > hi), Some(keyCol)))
+      (t.publish(carried ++ keep, replace = true, "delete_range"),
+        touched.size)
+    }
   }
 
   /** Point DELETE via per-group DELETION VECTORS (the Delta DV
@@ -1470,33 +1459,29 @@ object VersionedTable {
     * whose stats overlap) scans + k-row sidecars, not a rewrite of
     * every touched multi-GB group. Stats stay on the group
     * (conservative — a DV only removes rows). Null keys are never
-    * deleted (the [[deleteRange]] rule). One optimistic attempt at
-    * the current version; lost races surface as
-    * [[CommitConflictException]] with the staged vectors cleaned.
-    * Returns (version after the call, groups that gained a vector).
-    * When the stats prove no group overlaps, metadata-only no-op. */
+    * deleted (the [[deleteRange]] rule); a key that records no stats
+    * (a string) probes every group. An internal rewrite: the keys are
+    * not gated. One optimistic attempt at the current version
+    * ([[Txn]] rules). Returns (version after the call, groups that
+    * gained a vector). When the stats prove no group overlaps, or no
+    * group holds a key, metadata-only no-op. */
   def deleteKeys(spark: SparkSession, path: String, keys: DataFrame,
       keyCol: String): (Long, Int) = {
     val snap = snapshot(spark, path)
-    val Snapshot(v, live, st, _, _, _) = snap
-    require(live.nonEmpty, "deleteKeys on an empty table")
+    require(snap.groups.nonEmpty, "deleteKeys on an empty table")
     val k = keys.select(col(keyCol)).filter(col(keyCol).isNotNull)
       .distinct()
-    val r = k.agg(min(col(keyCol).cast("long")),
-      max(col(keyCol).cast("long"))).head()
-    if (r.isNullAt(0)) return (v, 0)
-    val (kLo, kHi) = (r.getLong(0), r.getLong(1))
-    var staged = List.empty[String]
-    val updated = live.map { g =>
-      if (!overlaps(g, kLo, kHi)) g
-      else stageDv(spark, path, g, st, k, keyCol).fold(g) { case (vec, _) =>
-        staged ::= vec
-        g.copy(dv = Some(vec))
+    keyRange(k, keyCol).fold((snap.version, 0)) { case (lo, hi) =>
+      transact(spark, path, snap) { t =>
+        val updated = snap.groups.map { g =>
+          if (!overlaps(g, lo, hi)) g
+          else t.stageDv(g, k, keyCol).fold(g)(d => g.copy(dv = Some(d._1)))
+        }
+        val vectors = updated.zip(snap.groups).count(p => p._1.dv != p._2.dv)
+        if (vectors == 0) (snap.version, 0)
+        else (t.publish(updated, replace = true, "delete_keys"), vectors)
       }
     }
-    if (staged.isEmpty) return (v, 0)
-    (commitEntry(spark, path, snap, updated, replace = true,
-      staged = staged, op = Some("delete_keys")), staged.size)
   }
 
   /** CHANGE DATA FEED between two versions: the row-level
@@ -1613,7 +1598,8 @@ object VersionedTable {
   }
 
   /** Delete data groups referenced by NO log entry — the orphans a
-    * crashed or IO-failed writer leaves between staging and publish.
+    * writer leaves when it dies before its publish, or when its publish
+    * call throws (the [[Txn]] rule keeps those).
     * Groups referenced by ANY version (including replaced ones) are
     * never deleted, so every historical read keeps working. Groups
     * younger than `minAgeMs` are kept: a concurrent writer stages its
@@ -1713,12 +1699,11 @@ object VersionedTable {
     // the compacted group is written under LOGICAL names, so the
     // mapping becomes vacuous for it (rename/drop history stays in
     // the log for time travel)
-    // no gates: the rows are the table's own, already validated
     val rows = readGroups(spark, path, live, snap.schema).get
-    val committed = stageAndCommit(spark, path, snap,
-      rows.repartition(nFiles), replace = true, statsCol = statsCol,
-      op = "optimize")
-    (committed, nFiles.toLong)
+    transact(spark, path, snap) { t =>
+      (t.publish(Seq(t.stage(rows.repartition(nFiles), statsCol)),
+        replace = true, "optimize"), nFiles.toLong)
+    }
   }
 
   /** OPTIMIZE with RE-CLUSTERING: rewrite the snapshot as one group
@@ -1750,7 +1735,7 @@ object VersionedTable {
     try {
       val k = col(keyCol).cast("long")
       // span id by when-chain (nulls ride span 0), then the one-pass
-      // staging [[stageSpans]] shares with optimizeZOrder: ONE
+      // staging [[Txn.spans]] shares with optimizeZOrder: ONE
       // partitionBy write stages every span directory in a single job
       // and ONE grouped agg lifts per-span stats — the former form
       // staged each span with its own filter scan + stats agg + empty
@@ -1760,42 +1745,11 @@ object VersionedTable {
         .foldLeft(when(k.isNull || k <= boundaries.head, 0)) {
           case (acc, (b, i)) => acc.when(k <= b, i)
         }.otherwise(boundaries.size)
-      val (name, groups) = stageSpans(spark, path,
-        snap.withColumn("__graft_span", spanId), keyCol)
-      (commitEntry(spark, path, base, groups, replace = true,
-        staged = Seq(name),
-        op = Some("optimize_clustered")), groups.size)
+      transact(spark, path, base) { t =>
+        val groups = t.spans(snap.withColumn("__graft_span", spanId), keyCol)
+        (t.publish(groups, replace = true, "optimize_clustered"), groups.size)
+      }
     } finally snap.unpersist()
-  }
-
-  /** One-pass span staging shared by [[optimizeClustered]] and
-    * [[optimizeZOrder]]: `withSpan` carries the data columns plus an
-    * integer `__graft_span`; ONE partitionBy write stages every span
-    * directory under a fresh uuid and ONE grouped agg lifts per-span
-    * stats (+ row counts), independent of span count. Empty spans
-    * simply produce no partition directory. Span groups are
-    * referenced as `uuid/__graft_span=i`; vacuum pins first-level
-    * dirs by the reference's first path segment. Returns
-    * (uuid staging dir name, groups in span order). */
-  private def stageSpans(spark: SparkSession, path: String,
-      withSpan: DataFrame, statsCol: String): (String, Seq[Group]) = {
-    val name = java.util.UUID.randomUUID().toString
-    withSpan.write.partitionBy("__graft_span").mode("overwrite")
-      .parquet(s"$path/data/$name")
-    // read back WITH partition discovery: __graft_span returns as
-    // the partition column, grouping the stats agg per span; the
-    // span files themselves hold only the data columns, so each
-    // leaf dir reads exactly like any other staged group
-    val written = spark.read.parquet(s"$path/data/$name")
-    val plan = new StatsPlan(
-      written.schema.fields.toSeq.filter(_.name != "__graft_span"),
-      Some(statsCol))
-    val groups = written.groupBy(col("__graft_span"))
-      .agg(plan.aggs.head, plan.aggs.tail: _*).collect()
-      .sortBy(_.getInt(0)).toSeq
-      .map(r => plan.group(s"$name/__graft_span=${r.getInt(0)}",
-        r.getAs[Any](_)))
-    (name, groups)
   }
 
   /** OPTIMIZE ZORDER BY (a, b) — the Delta verb composed with the
@@ -1849,7 +1803,7 @@ object VersionedTable {
         .approxQuantile("__graft_z", probs, 0.001)
         .map(_.toLong).distinct.sorted.toSeq
       val zc = col("__graft_z")
-      // span id by when-chain (nulls ride span 0); [[stageSpans]]
+      // span id by when-chain (nulls ride span 0); [[Txn.spans]]
       // does the one-pass partitionBy write + grouped stats agg —
       // 1 write + 1 agg regardless of span count (the first form
       // staged each span with its own filter scan + stats agg +
@@ -1861,14 +1815,12 @@ object VersionedTable {
           .foldLeft(when(zc.isNull || zc <= bounds.head, 0)) {
             case (acc, (b, i)) => acc.when(zc <= b, i)
           }.otherwise(bounds.size)
-      val (name, groups) = stageSpans(spark, path,
-        snap.withColumn("__graft_span", spanId).drop("__graft_z"),
-        statsCol)
-      require(groups.nonEmpty, "z-order write produced no spans")
-      // staged = the whole uuid dir: a lost race cleans every span
-      (commitEntry(spark, path, base, groups, replace = true,
-        staged = Seq(name),
-        op = Some("optimize_zorder")), groups.size)
+      transact(spark, path, base) { t =>
+        val groups = t.spans(
+          snap.withColumn("__graft_span", spanId).drop("__graft_z"), statsCol)
+        require(groups.nonEmpty, "z-order write produced no spans")
+        (t.publish(groups, replace = true, "optimize_zorder"), groups.size)
+      }
     } finally snap.unpersist()
   }
 
@@ -1913,9 +1865,9 @@ object VersionedTable {
     // restore the schema state of the target era too (Delta RESTORE
     // semantics): published even when empty — an empty state must
     // still OVERRIDE later renames/drops in the latest-wins walk
-    commitEntry(spark, path, target.copy(version = v), target.groups,
-      replace = true, staged = Seq.empty, arbiterFor = arbiterFor,
-      op = Some("restore"), schema = Some(target.schema))
+    transact(spark, path, target.copy(version = v))(_.publish(target.groups,
+      replace = true, "restore", schema = Some(target.schema),
+      arbiterFor = arbiterFor))
   }
 
   /** SHALLOW CLONE (the Delta `CREATE TABLE ... SHALLOW CLONE` verb):
@@ -1946,8 +1898,8 @@ object VersionedTable {
         asOfVersion.fold("")(v => s" at v$v"))
     val refs = live.map(g => g.copy(name = groupPath(src, g.name),
       dv = g.dv.map(groupPath(src, _))))
-    commitEntry(spark, dst, empty, refs, replace = true,
-      staged = Seq.empty, op = Some("clone"), schema = Some(st))
+    transact(spark, dst, empty)(
+      _.publish(refs, replace = true, "clone", schema = Some(st)))
   }
 
   /** RENAME COLUMN, metadata-only (the Delta columnMapping idea,
@@ -1983,9 +1935,8 @@ object VersionedTable {
     val ren = (st.renames.map { case (p, l) =>
       if (l == oldName) (p, newName) else (p, l)
     } :+ (oldName -> newName)).filter(pl => pl._1 != pl._2).distinct
-    commitEntry(spark, path, snap, snap.groups,
-      replace = true, staged = Seq.empty, op = Some("rename_column"),
-      schema = Some(SchemaState(ren, st.drops)))
+    transact(spark, path, snap)(_.publish(snap.groups, replace = true,
+      "rename_column", schema = Some(SchemaState(ren, st.drops))))
   }
 
   /** DROP COLUMN, metadata-only: the column is masked at read time
@@ -2020,9 +1971,9 @@ object VersionedTable {
             "before dropping it")
       }
     }
-    commitEntry(spark, path, snap, live,
-      replace = true, staged = Seq.empty, op = Some("drop_column"),
-      schema = Some(SchemaState(st.renames, st.drops :+ colName)))
+    transact(spark, path, snap)(_.publish(live, replace = true,
+      "drop_column",
+      schema = Some(SchemaState(st.renames, st.drops :+ colName))))
   }
 
   /** CONVERT TO (the Delta `CONVERT TO DELTA` idea): adopt an
@@ -2056,8 +2007,8 @@ object VersionedTable {
       // contract, so the count could go stale
       plan.group(srcDir, r.getAs[Any](_)).copy(rows = None)
     }
-    commitEntry(spark, path, empty, Seq(adopted),
-      replace = true, staged = Seq.empty, op = Some("convert"))
+    transact(spark, path, empty)(
+      _.publish(Seq(adopted), replace = true, "convert"))
   }
 
   /** The newest version whose log entry was published at or before

@@ -21,7 +21,7 @@ import graft.sources.VersionedTable
   * hands the batch to the consumer; the consumer applies it, then
   * calls [[commit]] to advance the offset. The offset is published
   * write-temp-then-RENAME (atomic on local/HDFS — the checkpoint
-  * discipline `commitEntry` uses), so a crash at ANY point leaves a
+  * discipline log checkpoints use), so a crash at ANY point leaves a
   * consistent offset:
   *
   *  - crash before apply: nothing moved; next() re-emits the batch.

@@ -36,7 +36,7 @@ object VersionedSink {
   /** Idempotently append one micro-batch as a table version. An
     * EMPTY micro-batch (streaming triggers fire them routinely)
     * commits nothing — no zero-row, stats-less group for every later
-    * pruned write to conservatively probe (the mergeDv dropIfEmpty
+    * pruned write to conservatively probe (the mergeDv empty-stage
     * discipline; skipping the batchId tag is safe because Structured
     * Streaming only ever retries the LAST batch, and a retried empty
     * batch is empty again). Returns the version holding this batch

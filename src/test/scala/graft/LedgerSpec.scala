@@ -189,6 +189,46 @@ class LedgerSpec extends AnyFunSuite {
     assert(content(d) == want)
   }
 
+  test("the stats-pruned verbs take a string key: mergePruned, " +
+      "mergePrunedRebase and mergeDv equal merge, deleteKeys equals the " +
+      "anti-join of the table against the keys, and an empty batch " +
+      "publishes nothing") {
+    val cur = Seq(keyed("a" -> 1L, "b" -> 2L), keyed("c" -> 3L, "d" -> 4L))
+    val batch = keyed("b" -> 20L, "e" -> 5L)
+    def table(): String = {
+      val t = target()
+      cur.zipWithIndex.foreach { case (b, v) =>
+        VersionedTable.commit(spark, t, b, v.toLong) }
+      t
+    }
+    val ref = table()
+    VersionedTable.merge(spark, ref, batch, "unique_key")
+    val want = content(ref)
+    val upserts = Seq[(String, String => Any)](
+      "mergePruned" -> (VersionedTable.mergePruned(spark, _, batch,
+        "unique_key")),
+      "mergePrunedRebase" -> (VersionedTable.mergePrunedRebase(spark, _,
+        batch, "unique_key")),
+      "mergeDv rewriting" -> (VersionedTable.mergeDv(spark, _, batch,
+        "unique_key")),
+      "mergeDv masking" -> (VersionedTable.mergeDv(spark, _, batch,
+        "unique_key", maxDvFraction = 1.0)))
+    upserts.foreach { case (name, verb) =>
+      val t = table()
+      verb(t)
+      assert(content(t) == want, name)
+      val v = VersionedTable.currentVersion(spark, t)
+      VersionedTable.mergePruned(spark, t, keyed(), "unique_key")
+      VersionedTable.mergeDv(spark, t, keyed(), "unique_key")
+      assert(VersionedTable.currentVersion(spark, t) == v,
+        s"$name: an empty batch published a version")
+    }
+    val d = table()
+    assert(VersionedTable.deleteKeys(spark, d, batch, "unique_key") ==
+      (3L, 1))
+    assert(content(d) == Set("a" -> 1L, "c" -> 3L, "d" -> 4L))
+  }
+
   test("deleteInsert and incrementalByKey each publish exactly one log " +
       "entry, in at most three Spark jobs") {
     verbs.foreach { case (name, verb) =>

@@ -80,7 +80,8 @@ object ListCountingFs {
   * gates, plans and commits against (a commit landing on a
   * checkpoint boundary included — the checkpoint follows from that
   * snapshot plus the new entry). The streaming sink's batches take
-  * the head's batch tag from that same snapshot. */
+  * the head's batch tag from that same snapshot. A verb that fails
+  * while staging, or loses its race, leaves no staged dir behind. */
 class LogListingSpec extends AnyFunSuite {
   lazy val spark = {
     val s = TestSpark.spark
@@ -250,6 +251,43 @@ class LogListingSpec extends AnyFunSuite {
     assert(added.size == 1, s"only the winner's group remains: $added")
     assert(VersionedTable.currentVersion(spark, p) == 10L)
     assert(rows(p) == baseRows + (900L -> "winner"))
+  }
+
+  /** Fails the first file created in the `n`-th staged dir under
+    * table `p`'s `data/` from now on. */
+  private def failStagedDir(p: String, n: Int): Unit = {
+    val data = new URI(p).getPath + "/data/"
+    val dirs = scala.collection.mutable.Set.empty[String]
+    ListCountingFs.failOnClose.set(c => c.startsWith(data) &&
+      dirs.synchronized {
+        dirs += c.stripPrefix(data).takeWhile(_ != '/')
+        dirs.size == n
+      })
+  }
+
+  test("a deleteKeys or mergeDv that fails staging a deletion vector " +
+      "leaves the head and rows of before the call, and no orphan") {
+    val p = table()
+    def unchanged(v: Long, want: Set[(Long, String)]): Unit = {
+      assert(ListCountingFs.failOnClose.get == null, "the fault never ran")
+      assert(VersionedTable.currentVersion(spark, p) == v)
+      assert(rows(p) == want)
+      assert(VersionedTable.vacuum(spark, p, minAgeMs = 0) == Seq())
+    }
+    // two overlapping groups: the second one's vector fails
+    failStagedDir(p, 2)
+    try intercept[Exception](VersionedTable.deleteKeys(spark, p,
+        df(3L -> "", 13L -> ""), "k"))
+    finally ListCountingFs.failOnClose.set(null)
+    unchanged(9L, baseRows)
+    // a group with a vector: the batch, the hit and then the vector
+    // merged with the prior one are staged, and the merge fails
+    assert(VersionedTable.deleteKeys(spark, p, df(3L -> ""), "k") == (10L, 1))
+    failStagedDir(p, 3)
+    try intercept[Exception](VersionedTable.mergeDv(spark, p,
+        df(1L -> "u"), "k"))
+    finally ListCountingFs.failOnClose.set(null)
+    unchanged(10L, baseRows - (3L -> "r0"))
   }
 
   private def logFiles(p: String): Set[String] =

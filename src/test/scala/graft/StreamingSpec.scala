@@ -662,7 +662,8 @@ class StreamingSpec extends AnyFunSuite {
       docs.exceptAll(got).count() == 0,
       "streamed table content == batch source exactly")
     // exactly-once: replaying the LAST batch id must not commit
-    val lastBatch = VersionedTable.headBatchId(spark, tbl).get
+    val lastBatch = VersionedTable.history(spark, tbl).select("batch")
+      .head().getLong(0)
     val vRetry = VersionedSink.appendBatch(spark, tbl,
       docs.limit(5), lastBatch, None)
     assert(vRetry == v && VersionedTable.currentVersion(spark, tbl) == v,

@@ -13,9 +13,11 @@ import graft.sources.VersionedTable
   * `mergePrunedRebase`, `deleteRange` and `optimize` over a key domain
   * of 40, with empty batches and null keys. After every step `read`
   * equals a map upsert/delete model (null-key rows match nothing, so
-  * they accumulate and are never deleted), and every live group's
+  * they accumulate and are never deleted), every live group's
   * recorded key range contains its keys — the fact every stats-pruned
-  * verb skips groups on. */
+  * verb skips groups on — and no step leaves a staged dir that no log
+  * entry references (`vacuum` with no age fence deletes nothing), the
+  * empty-batch and nothing-touched no-ops included. */
 object VersionedTableProps extends Properties("graft.vtable") {
 
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
@@ -149,7 +151,11 @@ object VersionedTableProps extends Properties("graft.vtable") {
           else if (!rangesHold(p))
             Left(s"after $s: keys outside their group's range " +
               liveRanges(p))
-          else Right(next)
+          else {
+            val orphans = VersionedTable.vacuum(spark, p, minAgeMs = 0)
+            if (orphans.nonEmpty) Left(s"after $s: orphans $orphans")
+            else Right(next)
+          }
         case (failed, _) => failed
       }
       end.isRight :| s"$ss ${end.left.getOrElse("")}"
